@@ -25,8 +25,7 @@ object Bench {
     // streaming engine (micro-batch planner, state store, memory sink)
     graft.streaming.EventStream.runToMemory(spark,
       graft.streaming.EventStream.hourlyCounts(
-        graft.streaming.EventStream.readEvents(spark, sfDir)),
-      "graft_warmup_stream")
+        graft.streaming.EventStream.readEvents(spark, sfDir)))
     // curation + custom-expression codegen on tiny slices: the composed
     // scoring/minhash/CC and SRP trees cost seconds at first touch
     // (measured: c01 cold 10.2 s vs 2.5 s warm at sf0.1) — warming them
@@ -101,6 +100,14 @@ object Bench {
     graft.queries.StreamMediaQueries.ensureIntervalStreamJittered(spark, sfDir): Unit
     graft.queries.StreamMediaQueries.ensureNewDocStream(spark, sfDir): Unit
     graft.queries.StreamMediaQueries.ensureDecodeMixFiles(spark, sfDir): Unit
+    // the write-once stagers of d13/st26 (band index), q165 (persisted
+    // dictionaries), q171 (variant landing table), q173 (keyed SPJ
+    // layout) and q175 (analyzed catalog tables): setup, not timed work
+    graft.queries.NorthStarQueries.ensureBandIndex(spark, sfDir): Unit
+    graft.queries.AdvancedQueries.ensureDensifyDicts(spark, sfDir): Unit
+    graft.queries.AdvancedQueries.ensureVariantLanding(spark, sfDir): Unit
+    graft.queries.ScaleJoinQueries.ensureKeyedLayout(spark, sfDir): Unit
+    graft.queries.ScaleJoinQueries.ensureStatsTables(spark, sfDir): Unit
     // cold engine paths the first block misses (measured: the first
     // RocksDB/transformWithState query of a run paid 2-4 s of provider
     // + codegen first-touch that its family never pays again): drive a
@@ -122,9 +129,10 @@ object Bench {
       graft.streaming.EventStream.runToFiles(spark,
         graft.streaming.EventStream.timerSessionStream(tiny,
           graft.streaming.EventStream.SessionGapMicros).toDF(),
-        s"$wdir/data", s"$wdir/ckpt").count()
+        wdir).count()
       spark.read.format("statestore")
-        .option("path", s"$wdir/ckpt").option("stateVarName", "sess")
+        .option("path", graft.streaming.EventStream.checkpointDir(wdir))
+        .option("stateVarName", "sess")
         .load().count()
     }
     val wj = graft.TempDirs.create("graft_warm_join")
@@ -139,7 +147,7 @@ object Bench {
         col("v_user") === col("p_user") &&
           col("p_time") >= col("v_time") &&
           col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"), "full_outer"),
-      s"$wj/data", s"$wj/ckpt").count()
+      wj).count()
     val wd = graft.TempDirs.create("graft_warm_dedup")
     graft.streaming.EventStream.runToFiles(spark,
       spark.readStream.schema(evSchema).parquet(s"$tsDir/*.parquet")
@@ -150,24 +158,13 @@ object Bench {
         .groupBy(col("user_id"),
           session_window(col("event_time"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n")).drop("w"),
-      s"$wd/data", s"$wd/ckpt").count()
+      wd).count()
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pin: events.ts normalization (Tables.tsMicros) reads the
-      // fixtures' naive timestamp[us] under the session clock — the same
-      // clock Verify and the DuckDB oracle use
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Verify: extensions installed like a cluster deployment
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(cpus)
     // fixture drift check OUTSIDE the warmup swallow: one loud diagnostic
     // up front (the round-8 events.ts re-encode turned into 13 scattered
     // failures precisely because nothing said this first). Non-fatal —

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time named queries k times in ONE JVM with Bench's exact
   * session configuration — the clean-box re-measure step the bench-drift
@@ -14,14 +13,7 @@ object BenchOne {
     val names = args(1).split(",").toSeq
     val k = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(cpus)
     try Bench.warmup(spark, sfDir) catch {
       case e: Throwable => System.err.println(s"[benchone] warmup failed: $e")
     }

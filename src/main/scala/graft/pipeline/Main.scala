@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 /** The sequential 3-stage driver replacing the reference's Airflow DAG
   * chain fetch → silver → gold (`TriggerDagRunOperator`, ALL_SUCCESS —
   * `/root/reference/dags/fetch_data_with_meta_from_api.py:102-108`,
@@ -25,12 +23,7 @@ object Main {
     val dataDir = positional.headOption.getOrElse("/tmp/graft_medallion")
     val nRows = positional.lift(1).map(_.toInt).getOrElse(450)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-medallion")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.builder(cpus).appName("graft-medallion")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

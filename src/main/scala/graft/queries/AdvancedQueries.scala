@@ -37,7 +37,7 @@ object AdvancedQueries {
   private val densifyWaveDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private def ensureDensifyDicts(s: SparkSession, d: String): String =
+  private[graft] def ensureDensifyDicts(s: SparkSession, d: String): String =
     densifyWaveDirs.getOrElseUpdate(d, {
       val tmp = graft.TempDirs.create("graft_q165")
       val (w1, w2) = densifyWaves(s, d)
@@ -59,7 +59,7 @@ object AdvancedQueries {
   private val variantLandingDirs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private def ensureVariantLanding(s: SparkSession, d: String): String =
+  private[graft] def ensureVariantLanding(s: SparkSession, d: String): String =
     variantLandingDirs.getOrElseUpdate(d, {
       val tmp = graft.TempDirs.create("graft_q171")
       val base = concat(lit("{\"id\":"), col("doc_id"),

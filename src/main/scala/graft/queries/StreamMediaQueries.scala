@@ -424,7 +424,7 @@ object StreamMediaQueries {
 
   /** st29's arrival fixture: two dimension-update batches against the
     * customer dim — (key, new segment) files whose mtimes pin delivery
-    * order under maxFilesPerTrigger = 1 (batch 0: keys ≡0 mod 7 →
+    * order at one file per trigger (batch 0: keys ≡0 mod 7 →
     * MACHINERY; batch 1: keys ≡0 mod 5 → HOUSEHOLD). SCD2 history
     * DEPENDS on batch boundaries by design (which batch closed a row
     * is the recorded fact), so the fixture pins them exactly like
@@ -525,8 +525,8 @@ object StreamMediaQueries {
   /** st24's arrival fixture: the events corpus as three deterministic
     * equal-width TIME-RANGE thirds arriving MIDDLE → NEWEST → OLDEST
     * (a backfill landing behind live traffic) plus a +24 h flush
-    * sentinel, mtimes pinning the batch order under
-    * maxFilesPerTrigger = 1. The tile is one map-side integer
+    * sentinel, mtimes pinning the batch order at one file per trigger.
+    * The tile is one map-side integer
     * expression per row — `((ts − min) · 3) div span` — engine-portable
     * (the oracle replays the identical arithmetic) and free of the
     * single-partition sort an ntile-over-total-order split funnels the
@@ -669,6 +669,14 @@ object StreamMediaQueries {
       s"$tmp/in"
     })
 
+  /** [[ensureDedupStreamInput]]'s file schema: `(doc_id, text)`. */
+  val dedupStreamSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text",
+        org.apache.spark.sql.types.StringType)))
+
   /** st15/st16's store fixture: the documents corpus delivered as TWO
     * DSv2 batch writes (even doc_ids, then odd) into a per-(JVM, sf)
     * store, returning `(storeDir, cursor)` where the cursor names the
@@ -778,7 +786,7 @@ object StreamMediaQueries {
     ("st01_stream_hourly",
       (s: SparkSession, d: String) => {
         val agg = EventStream.hourlyCounts(EventStream.readEvents(s, d))
-        EventStream.runToMemory(s, agg, s"st01_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -793,7 +801,7 @@ object StreamMediaQueries {
     ("st10_stream_sliding",
       (s: SparkSession, d: String) => {
         val agg = EventStream.slidingCounts(EventStream.readEvents(s, d))
-        EventStream.runToMemory(s, agg, s"st10_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .orderBy(col("win_start"), col("event_type"))
       },
       Some("""WITH t AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS h,
@@ -819,7 +827,7 @@ object StreamMediaQueries {
         val kept = EventStream.blocklistFiltered(
           EventStream.readEvents(s, d), blocklist, "user_id")
         val agg = EventStream.hourlyCounts(kept)
-        EventStream.runToMemory(s, agg, s"st11_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -843,7 +851,7 @@ object StreamMediaQueries {
           .groupBy(window(col("event_time"), "1 hour").as("w"))
           .agg(graft.functions.SpaceSavingTopK.topK(col("event_type"), 3, 16).as("tk"))
           .select(col("w.start").as("hour"), col("tk"))
-        EventStream.runToMemory(s, agg, s"st08_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .select(col("hour"), posexplode(col("tk")))
           .select(col("hour"), (col("pos") + 1).cast("int").as("rank"),
             col("col.term").as("event_type"), col("col.count").as("n_events"))
@@ -872,7 +880,7 @@ object StreamMediaQueries {
           .agg(graft.functions.KllQuantiles.quantilesBp(
             col("value"), Seq(5000, 9000, 9900), 65536).as("qs"))
           .select(col("w.start").as("hour"), col("qs"))
-        EventStream.runToMemory(s, agg, s"st09_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .select(col("hour"),
             element_at(col("qs"), 1).as("p50"),
             element_at(col("qs"), 2).as("p90"),
@@ -912,7 +920,7 @@ object StreamMediaQueries {
             hll_sketch_agg(col("user_id"), lit(18))).as("n_users"),
             count(lit(1)).as("n_events"))
           .select(col("w.start").as("hour"), col("n_users"), col("n_events"))
-        EventStream.runToMemory(s, agg, s"st32_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .orderBy(col("hour"))
       },
       Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -931,7 +939,7 @@ object StreamMediaQueries {
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
               .cast("double").as("total_value"))
-        EventStream.runToMemory(s, joined, s"st03_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, joined)
           .orderBy(col("segment"))
       },
       Some("""SELECT c_mktsegment AS segment, COUNT(*) AS n_events,
@@ -985,9 +993,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
         val out = graft.TempDirs.create("graft_st12o")
         // per-user GroupState is the highest-cardinality merging state
@@ -997,8 +1003,7 @@ object StreamMediaQueries {
         // ceiling. Provider parity is spec-gated in StreamingSpec.
         EventStream.withRocksDBState(s) {
           EventStream.runToFiles(s,
-              EventStream.sessionizeStream(stream, timeout = false).toDF(),
-              s"$out/data", s"$out/ckpt")
+              EventStream.sessionizeStream(stream, timeout = false).toDF(), out)
         }.orderBy(col("user_id"), col("session_id"))
       },
       Some("""WITH e AS (
@@ -1041,12 +1046,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureLateAuditStream(s, d)
         val out = graft.TempDirs.create("graft_st24o")
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema,
+            s"$inDir/part-*", perTrigger = 1)
           .withColumn("event_time", Tables.eventTime(col("ts")))
         val drained = EventStream.runToFiles(s,
-          EventStream.hourlyCounts(stream), s"$out/data", s"$out/ckpt")
+          EventStream.hourlyCounts(stream), out)
         val totalReal = Tables.load(s, d, "events").count()
         val emitted = drained
           .agg(coalesce(sum(col("n_events")), lit(0L))).head().getLong(0)
@@ -1111,14 +1115,9 @@ object StreamMediaQueries {
             col("purchase_time") >= col("view_time") &&
             col("purchase_time") <= col("view_time") + expr("INTERVAL 1 HOUR"))
           .select(col("user_id"), col("view_id"), col("purchase_id"))
-        // state partitions sized to the state (the st67 rationale):
-        // join state is bounded by interval × delay, and each partition
-        // costs four store commits per batch
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToMemory(s, joined, s"st05_mem_${System.nanoTime()}",
+        EventStream.runToMemory(s, joined,
             org.apache.spark.sql.streaming.OutputMode.Append)
-        }.orderBy(col("user_id"), col("view_id"), col("purchase_id"))
+          .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
       },
       Some("""WITH e AS (
              |  SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
@@ -1156,7 +1155,7 @@ object StreamMediaQueries {
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), col("event_type"), col("user_id"))
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, deduped, s"$out/data", s"$out/ckpt")
+          EventStream.runToFiles(s, deduped, out)
         }.orderBy(col("event_id"))
       },
       Some("""SELECT event_id, event_type, user_id
@@ -1185,14 +1184,9 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val tmp = graft.TempDirs.create("graft_st07")
         val inDir = ensureDedupStreamInput(s, d)
-        val docsStream = s.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/part-*")
+        // one file per trigger: the store merges 4 genuine deliveries
+        val docsStream = EventStream.readStaged(s, dedupStreamSchema,
+            s"$inDir/part-*", perTrigger = 1)
         graft.streaming.DedupStore.run(s, docsStream, s"$tmp/store", s"$tmp/ckpt")
           .select(col("keep_id"), col("n_copies"))
           .orderBy(col("keep_id"))
@@ -1287,21 +1281,12 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val tmp = graft.TempDirs.create("graft_st14")
         val inDir = ensureDedupStreamInput(s, d)
-        val docsStream = s.readStream
-          .schema(org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType))))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/part-*")
-        val q = docsStream.writeStream
+        // one file per trigger, like st07: the sink commits 4 epochs
+        val docsStream = EventStream.readStaged(s, dedupStreamSchema,
+            s"$inDir/part-*", perTrigger = 1)
+        EventStream.drain(s, docsStream.writeStream
           .format("graft.sources.DedupStoreSink")
-          .option("path", s"$tmp/store")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("path", s"$tmp/store"), Some(tmp))
         graft.streaming.DedupStore.read(s, s"$tmp/store")
           .select(col("keep_id"), col("n_copies"))
           .orderBy(col("keep_id"))
@@ -1381,23 +1366,18 @@ object StreamMediaQueries {
         val corpus = Tables.load(s, d, "embeddings").select("vec_id", "embedding")
         val out = graft.TempDirs.create("graft_st17o")
         import org.apache.spark.sql.types._
-        val qstream = s.readStream
-          .schema(StructType(Seq(StructField("vec_id", LongType),
-            StructField("embedding", ArrayType(FloatType)))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
-        val q = qstream.writeStream
+        val qstream = EventStream.readStaged(s,
+            StructType(Seq(StructField("vec_id", LongType),
+              StructField("embedding", ArrayType(FloatType)))),
+            s"$inDir/part-*")
+        EventStream.drain(s, qstream.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             Similarity.ivfIndexTopK(idx, corpus,
                 batch.select(col("vec_id").as("query_id"),
                   col("embedding").as("q_embedding")),
                 k = 5, nProbe = 4, rescore = 32)
               .write.mode("append").parquet(s"$out/res")
-          }
-          .option("checkpointLocation", s"$out/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, Some(out))
         s.read.parquet(s"$out/res")
           .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
           .orderBy(col("query_id"), col("rank"))
@@ -1518,7 +1498,7 @@ object StreamMediaQueries {
         val odd = Tables.load(s, d, "documents")
           .filter(pmod(col("doc_id"), lit(2)) === 1)
           .select(col("text")).distinct()
-        EventStream.runToMemory(s, changes, s"st19_mem_${System.nanoTime()}",
+        EventStream.runToMemory(s, changes,
             org.apache.spark.sql.streaming.OutputMode.Append)
           .filter(col("op") === "upsert")
           .join(odd, Seq("text"), "left_semi")
@@ -1602,14 +1582,8 @@ object StreamMediaQueries {
             "left_outer")
           .select(col("user_id"), col("view_id"), col("purchase_id"),
             col("view_time"))
-        // state partitions sized to the state (the st67 rationale): a
-        // stream-stream join keeps FOUR stores per partition per
-        // side-pair, and its state is bounded by the 1 h interval ×
-        // watermark delay, not by key cardinality
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, joined, s"$out/data", s"$out/ckpt")
-        }.select(col("user_id"), col("view_id"), col("purchase_id"))
+        EventStream.runToFiles(s, joined, out)
+          .select(col("user_id"), col("view_id"), col("purchase_id"))
           .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
       },
       Some("""WITH e AS (
@@ -1657,18 +1631,13 @@ object StreamMediaQueries {
         org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(base),
           fs, new org.apache.hadoop.fs.Path(idx), false, conf)
         val inDir = ensureOddVectorStream(s, d)
-        val q = s.readStream
-          .schema(StructType(Seq(StructField("vec_id", LongType),
-            StructField("embedding", ArrayType(FloatType)))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        EventStream.drain(s, EventStream.readStaged(s,
+            StructType(Seq(StructField("vec_id", LongType),
+              StructField("embedding", ArrayType(FloatType)))),
+            s"$inDir/part-*")
           .writeStream
           .foreachBatch((batch: DataFrame, _: Long) =>
-            Similarity.appendToIvfIndex(idx, batch))
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            Similarity.appendToIvfIndex(idx, batch)), Some(tmp))
         val queries = emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
         Similarity.ivfIndexTopK(idx, emb, queries, k = 5, nProbe = 4, rescore = 32)
@@ -1763,11 +1732,10 @@ object StreamMediaQueries {
           fs, new org.apache.hadoop.fs.Path(idx), false, conf)
         val docsAll = Tables.load(s, d, "documents")
         val out = s"$tmp/pairs"
-        val q = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"${ensureNewDocStream(s, d)}/part-*")
+        EventStream.drain(s, EventStream.readStaged(s,
+            StructType(Seq(StructField("doc_id", LongType),
+              StructField("text", StringType))),
+            s"${ensureNewDocStream(s, d)}/part-*")
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             graft.ops.Dedup.incrementalMinhashNearDups(s, idx, docsAll, batch,
@@ -1775,11 +1743,7 @@ object StreamMediaQueries {
               .write.mode("append").parquet(out)
             graft.ops.Dedup.appendMinhashBandIndex(batch, "doc_id", "text",
               n = 3, k = 16, bands = 4, idx)
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, Some(tmp))
         s.read.parquet(out).orderBy(col("id_a"), col("id_b"))
       },
       Some("""WITH w AS (SELECT doc_id,
@@ -1833,7 +1797,7 @@ object StreamMediaQueries {
         // per-user cardinality, the RocksDB provider's case at 100 TB
         // (see st12); parity spec-gated in StreamingSpec
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, sess, s"$out/data", s"$out/ckpt")
+          EventStream.runToFiles(s, sess, out)
         }.orderBy(col("user_id"), col("session_start"))
       },
       Some("""WITH e AS (
@@ -2120,9 +2084,8 @@ object StreamMediaQueries {
             lit(0L).as("vf"), lit(null).cast("long").as("vt"))
         val updSchema = StructType(Seq(
           StructField("k", LongType), StructField("new_seg", StringType)))
-        val stream = s.readStream.schema(updSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$in/*.parquet")
+        val stream = EventStream.readStaged(s, updSchema,
+            s"$in/*.parquet", perTrigger = 1)
         graft.streaming.Scd2Dim.run(s, stream, base, s"$tmp/dim", s"$tmp/ckpt")
           .select(col("k").as("c_custkey"), col("seg").as("c_mktsegment"),
             col("vf").as("valid_from"), col("vt").as("valid_to"))
@@ -2172,9 +2135,8 @@ object StreamMediaQueries {
             lit(0L).as("vf"), lit(null).cast("long").as("vt"))
         val updSchema = StructType(Seq(
           StructField("k", LongType), StructField("new_seg", StringType)))
-        val stream = s.readStream.schema(updSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$in/*.parquet")
+        val stream = EventStream.readStaged(s, updSchema,
+            s"$in/*.parquet", perTrigger = 1)
         val dim = graft.streaming.Scd2Dim.run(s, stream, base,
           s"$tmp/dim", s"$tmp/ckpt")
         val facts = Tables.load(s, d, "orders")
@@ -2234,7 +2196,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val tmp = graft.TempDirs.create("graft_st28")
         val mainDir = s"$tmp/main"; val dlqDir = s"$tmp/dlq"
-        val q = EventStream.readEvents(s, d)
+        EventStream.drain(s, EventStream.readEvents(s, d)
           .select(col("event_id"), col("event_type"), col("value"))
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -2244,11 +2206,7 @@ object StreamMediaQueries {
               batch, col("event_type") === "error" || col("value") < 1.0)
             bad.write.mode("overwrite").parquet(s"$dlqDir/batch_$batchId")
             good.write.mode("overwrite").parquet(s"$mainDir/batch_$batchId")
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, Some(tmp))
         val main = s.read.parquet(s"$mainDir/batch_*")
           .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_checksum"))
           .select(lit("main").as("sink"), col("n_rows"), col("id_checksum"))
@@ -2296,13 +2254,8 @@ object StreamMediaQueries {
             Dedup.words(col("text")), 5)).as("gram"))
           .distinct().localCheckpoint()
         val inDir = ensureDedupStreamInput(s, d)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$inDir/part-*")
+        EventStream.drain(s, EventStream.readStaged(s, dedupStreamSchema,
+            s"$inDir/part-*")
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val flagged = batch.select(col("doc_id"),
@@ -2314,11 +2267,7 @@ object StreamMediaQueries {
               .write.mode("overwrite").parquet(s"$qDir/batch_$batchId")
             batch.join(flagged, Seq("doc_id"), "left_anti")
               .write.mode("overwrite").parquet(s"$mainDir/batch_$batchId")
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, Some(tmp))
         val main = s.read.parquet(s"$mainDir/batch_*")
           .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_checksum"))
           .select(lit("main").as("sink"), col("n_docs"), col("id_checksum"))
@@ -2365,21 +2314,17 @@ object StreamMediaQueries {
         import graft.ops.{TextAnalysis, TrainingPrep}
         val tmp = graft.TempDirs.create("graft_st31")
         val inDir = ensureDedupStreamInput(s, d)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
         def scoredOf(df: DataFrame): DataFrame = {
           val w = TextAnalysis.tokenCount(col("text")).cast("long")
           val u = TrainingPrep.hashBucket(col("doc_id"), 1000000) + 1L
           df.select(col("doc_id"), w.as("n_tokens"),
             (w.cast("double") * 1000000.0 / u.cast("double")).as("priority"))
         }
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, dedupStreamSchema,
+            s"$inDir/part-*")
         val emptyState = scoredOf(s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+          new java.util.ArrayList[org.apache.spark.sql.Row](),
+          dedupStreamSchema))
         val finalState = graft.streaming.VersionedView.run(
             s, stream, s"$tmp/state", s"$tmp/ckpt", emptyState) {
           (state, batch, _) =>
@@ -2432,9 +2377,7 @@ object StreamMediaQueries {
         val docSchema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
           StructField("source", StringType)))
-        val stream = s.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, docSchema, s"$inDir/part-*")
         val rollup = stream.select(col("source"),
             TextAnalysis.langId(col("text")).as("pred_lang"),
             TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"),
@@ -2444,7 +2387,7 @@ object StreamMediaQueries {
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_toks")).as("total_tokens"),
             sum(col("q")).as("q_sum"))
-        EventStream.runToMemory(s, rollup, s"st27_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, rollup)
           .select(col("source"), col("pred_lang"), col("n_docs"),
             col("total_tokens"),
             round(col("q_sum").cast("double") / col("n_docs"), 4)
@@ -2497,15 +2440,12 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st35o")
         EventStream.runToFiles(s,
-            EventStream.debounceStream(stream, 300L * 1000 * 1000).toDF(),
-            s"$out/data", s"$out/ckpt")
+            EventStream.debounceStream(stream, 300L * 1000 * 1000).toDF(), out)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("kept")).cast("long").as("n_kept"),
@@ -2539,14 +2479,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st36o")
-        EventStream.runToFiles(s, EventStream.userSeqStream(stream).toDF(),
-            s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(s, EventStream.userSeqStream(stream).toDF(), out)
           .filter(col("user_seq") % 7 === 0)
           .select(col("user_id"), col("user_seq"), col("event_id"))
           .orderBy(col("user_id"), col("user_seq"))
@@ -2584,10 +2521,9 @@ object StreamMediaQueries {
         def rollup(joined: DataFrame): DataFrame = joined
           .groupBy(col("month"))
           .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-        val stream = s.readStream.schema(StructType(Seq(
-            StructField("k", LongType), StructField("month", StringType))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$in/part-*")
+        val stream = EventStream.readStaged(s, StructType(Seq(
+            StructField("k", LongType), StructField("month", StringType))),
+            s"$in/part-*")
         val emptyView = rollup(li.limit(0)
           .withColumn("month", lit("")))
         graft.streaming.VersionedView.run(
@@ -2620,14 +2556,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st37o")
-        EventStream.runToFiles(s, EventStream.zscoreStream(stream).toDF(),
-            s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(s, EventStream.zscoreStream(stream).toDF(), out)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("scored")).cast("long").as("n_scored"),
@@ -2675,13 +2608,10 @@ object StreamMediaQueries {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("sum_v",
             org.apache.spark.sql.types.DoubleType)))
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, schema, s"$inDir/part-*")
           .as[EventStream.Hourly]
         val out = graft.TempDirs.create("graft_st34o")
-        EventStream.runToFiles(s, EventStream.locfStream(stream).toDF(),
-            s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(s, EventStream.locfStream(stream).toDF(), out)
           .orderBy(col("user_id"), col("hour_us"))
       },
       Some("""WITH hourly AS (
@@ -2722,11 +2652,10 @@ object StreamMediaQueries {
         def fold(df: DataFrame): DataFrame = df
           .groupBy(col("pk"), col("sk"))
           .agg(min(col("cost_c")).as("cost_c"), sum(col("avail")).as("avail"))
-        val stream = s.readStream.schema(StructType(Seq(
+        val stream = EventStream.readStaged(s, StructType(Seq(
             StructField("pk", LongType), StructField("sk", LongType),
-            StructField("qty", LongType), StructField("price_c", LongType))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$in/part-*")
+            StructField("qty", LongType), StructField("price_c", LongType))),
+            s"$in/part-*")
         val emptyState = fold(s.range(0).select(
           col("id").as("pk"), col("id").as("sk"),
           col("id").as("cost_c"), col("id").as("avail")))
@@ -2784,14 +2713,12 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st40o")
         val snaps = EventStream.runToFiles(s,
-          EventStream.streakStream(stream).toDF(), s"$out/data", s"$out/ckpt")
+          EventStream.streakStream(stream).toDF(), out)
         snaps.groupBy(col("user_id"))
           .agg(max_by(struct(
               col("best_len").as("longest_streak"),
@@ -2845,11 +2772,10 @@ object StreamMediaQueries {
           .groupBy(col("o_orderpriority"))
           .agg(sum(col("n_pairs")).as("n_pairs"),
             sum(col("sum_price_c")).as("sum_price_c"))
-        val stream = s.readStream.schema(StructType(Seq(
+        val stream = EventStream.readStaged(s, StructType(Seq(
             StructField("pk", LongType), StructField("sk", LongType),
-            StructField("qty", LongType), StructField("price_c", LongType))))
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$in/part-*")
+            StructField("qty", LongType), StructField("price_c", LongType))),
+            s"$in/part-*")
         val emptyState = s.range(0).select(
           col("id").cast("string").as("o_orderpriority"),
           col("id").as("n_pairs"), col("id").as("sum_price_c"))
@@ -2898,14 +2824,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st42o")
-        EventStream.runToFiles(s, EventStream.funnelStream(stream).toDF(),
-            s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(s, EventStream.funnelStream(stream).toDF(), out)
           .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
           .orderBy(col("stage"))
       },
@@ -2939,9 +2862,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureGateStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
         val okeys = Tables.load(s, d, "orders").select(col("o_orderkey"))
         val flagged = stream.join(broadcast(okeys),
           col("l_orderkey") === col("o_orderkey"), "left_outer")
@@ -2953,7 +2874,7 @@ object StreamMediaQueries {
           sum(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1L)
             .otherwise(0L)).as("disc_oob"),
           sum(when(col("o_orderkey").isNull, 1L).otherwise(0L)).as("orphans"))
-        EventStream.runToMemory(s, agg, s"st43_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .select(explode(array(
             struct(lit("disc_in_range").as("rule"),
               col("disc_oob").as("metric"), (col("disc_oob") === 0).as("passed")),
@@ -3005,7 +2926,7 @@ object StreamMediaQueries {
         val agg = EventStream.readEvents(s, d)
           .groupBy(col("event_type"))
           .agg(IdBitmap.idBitmap(col("user_id"), 1L << 20).as("bm"))
-        EventStream.runToMemory(s, agg, s"st44_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .select(col("event_type"),
             IdBitmap.bitmapCount(col("bm")).as("n_users"))
           .orderBy(col("event_type"))
@@ -3029,16 +2950,13 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st45o")
         EventStream.runToFiles(s,
             EventStream.cepStream(stream,
-              6L * 3600 * 1000000L, 12L * 3600 * 1000000L).toDF(),
-            s"$out/data", s"$out/ckpt")
+              6L * 3600 * 1000000L, 12L * 3600 * 1000000L).toDF(), out)
           .select(col("user_id"), col("view_id"), col("click_id"),
             col("purchase_id"))
           .orderBy(col("user_id"), col("view_id"), col("click_id"),
@@ -3071,9 +2989,7 @@ object StreamMediaQueries {
         val D = DecimalType(38, 0)
         val inDir = ensureGateStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
         val x = round(col("l_quantity")).cast("long")
         val y = round(col("l_extendedprice") * 100).cast("long")
         // sums accumulate in DECIMAL(38,0) like batch q149: a LONG Σxy
@@ -3090,7 +3006,7 @@ object StreamMediaQueries {
           col("sx") * col("sy")
         val den = col("n").cast(D) * col("sx2") -
           col("sx") * col("sx")
-        EventStream.runToMemory(s, agg, s"st46_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, agg)
           .select(col("l_returnflag"), col("n"),
             col("sx").cast("long").as("sx"), col("sy").cast("long").as("sy"),
             col("sxy").cast("long").as("sxy"),
@@ -3132,15 +3048,13 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureIntervalStream(s, d)
-        val stream = s.readStream
-          .schema("sk LONG, lo LONG, hi LONG")
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/*.parquet")
+        val stream = EventStream.readStaged(s,
+            org.apache.spark.sql.types.StructType.fromDDL("sk LONG, lo LONG, hi LONG"),
+            s"$inDir/*.parquet")
           .as[graft.streaming.IntervalCoverage.Iv]
         val out = graft.TempDirs.create("graft_st47o")
         EventStream.runToFiles(s,
-            graft.streaming.IntervalCoverage.coverageStream(stream).toDF(),
-            s"$out/data", s"$out/ckpt")
+            graft.streaming.IntervalCoverage.coverageStream(stream).toDF(), out)
           .orderBy(col("s_suppkey"))
       },
       Some("""WITH iv AS (
@@ -3188,9 +3102,7 @@ object StreamMediaQueries {
             (max(cents) - min(cents) + 1L).as("span")).head()
         val (mn, span) = (mm.getLong(0), mm.getLong(1))
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
           .toDF()
@@ -3200,8 +3112,7 @@ object StreamMediaQueries {
             when(col("event_type") === "purchase", 1L).otherwise(0L).as("pos"))
           .groupBy(col("band"))
           .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"))
-        val snap = EventStream.runToMemory(s, agg,
-          s"st48_mem_${System.nanoTime()}")
+        val snap = EventStream.runToMemory(s, agg)
         val totalPos = snap.agg(coalesce(sum(col("n_pos")), lit(0L)))
           .head().getLong(0)
         val wDesc = Window.orderBy(col("band").desc)
@@ -3285,9 +3196,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val pattern = Seq(
@@ -3297,8 +3206,7 @@ object StreamMediaQueries {
           ("purchase", 12L * 3600 * 1000000L))
         val out = graft.TempDirs.create("graft_st49o")
         EventStream.runToFiles(s,
-            EventStream.cepPatternStream(stream, pattern).toDF(),
-            s"$out/data", s"$out/ckpt")
+            EventStream.cepPatternStream(stream, pattern).toDF(), out)
           .select(col("user_id"),
             element_at(col("event_ids"), 1).as("signup_id"),
             element_at(col("event_ids"), 2).as("view_id"),
@@ -3336,16 +3244,14 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureIntervalStreamJittered(s, d)
-        val stream = s.readStream
-          .schema("sk LONG, lo LONG, hi LONG")
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/*.parquet")
+        val stream = EventStream.readStaged(s,
+            org.apache.spark.sql.types.StructType.fromDDL("sk LONG, lo LONG, hi LONG"),
+            s"$inDir/*.parquet")
           .as[graft.streaming.IntervalCoverage.Iv]
         val out = graft.TempDirs.create("graft_st50o")
         EventStream.runToFiles(s,
             graft.streaming.IntervalCoverage
-              .coverageStreamWatermarked(stream, st50SlackDays).toDF(),
-            s"$out/data", s"$out/ckpt")
+              .coverageStreamWatermarked(stream, st50SlackDays).toDF(), out)
           .orderBy(col("s_suppkey"))
       },
       Some("""WITH iv AS (
@@ -3391,22 +3297,15 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        // state partitions sized to the state (the st54/st65 knob):
-        // per-user counters, RocksDB per-partition commit tax per batch
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/part-*")
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*")
             .as[EventStream.Event]
             .filter(_.event_type != "flush")
           val out = graft.TempDirs.create("graft_st51o")
           EventStream.runToFiles(s,
-              EventStream.typeSeqStream(stream).toDF(),
-              s"$out/data", s"$out/ckpt")
+              EventStream.typeSeqStream(stream).toDF(), out)
             .orderBy(col("user_id"), col("event_id"))
-          }
         }
       },
       Some("""SELECT user_id, event_id, event_type,
@@ -3429,13 +3328,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureCustomerStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val classes = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val classes = EventStream.readStaged(s, sch, s"$inDir/part-*")
           .groupBy(col("c_nationkey"), col("c_mktsegment"),
             floor(col("c_acctbal") / 1000).cast("long").as("bal_band"))
           .agg(count(lit(1)).as("n"))
-        EventStream.runToMemory(s, classes, s"st52_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, classes)
           .select(explode(array(lit(2L), lit(5L), lit(10L))).as("k"), col("n"))
           .groupBy(col("k"))
           .agg(count(lit(1)).as("n_classes"),
@@ -3479,9 +3376,7 @@ object StreamMediaQueries {
           .select(col("c_custkey"), col("dense_id"))
         val inDir = ensureOrderFactStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val weekly = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val weekly = EventStream.readStaged(s, sch, s"$inDir/part-*")
           .select(call_function("div",
               datediff(to_date(col("o_orderdate")), lit("1990-01-01"))
                 .cast("long"), lit(7L)).as("week_ix"),
@@ -3489,7 +3384,7 @@ object StreamMediaQueries {
           .join(keyToDense, col("o_custkey") === col("c_custkey"))
           .groupBy(col("week_ix"))
           .agg(IdBitmap.idBitmap(col("dense_id"), 1L << 20).as("bm"))
-        EventStream.runToMemory(s, weekly, s"st53_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, weekly)
           .select(col("week_ix"), IdBitmap.bitmapCount(col("bm")).as("n_custs"))
           .orderBy(col("week_ix"))
       },
@@ -3520,26 +3415,16 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureTimerSessionStream(s, d)
-        // state partitions sized to the state (the st65-st67 knob every
-        // streaming deployment pins at its first checkpoint): per-user
-        // open-session scalars, where RocksDB pays a per-partition
-        // instance open/commit PER BATCH — partition count multiplies
-        // that tax without adding parallelism the tiny state can use
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/*.parquet")
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/*.parquet")
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st54o")
           EventStream.runToFiles(s,
               EventStream.timerSessionStream(stream,
-                EventStream.SessionGapMicros).toDF(),
-              s"$out/data", s"$out/ckpt")
+                EventStream.SessionGapMicros).toDF(), out)
             .filter(col("user_id") >= 0) // sentinel watermark pushers
             .orderBy(col("user_id"), col("anchor_ts"))
-          }
         }
       },
       Some("""WITH e AS (
@@ -3582,25 +3467,18 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        // state partitions sized to the state (the st54/st65 knob):
-        // per-user day maps, RocksDB per-partition commit tax per batch
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/part-*")
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*")
             .as[EventStream.Event]
             .filter(_.event_type != "flush")
           val out = graft.TempDirs.create("graft_st55o")
           EventStream.runToFiles(s,
               EventStream.recentActivityStream(stream, nDays = 7,
                 org.apache.spark.sql.streaming.TTLConfig(
-                  java.time.Duration.ofHours(24))).toDF(),
-              s"$out/data", s"$out/ckpt",
+                  java.time.Duration.ofHours(24))).toDF(), out,
               noData = false) // ProcessingTime TTL: see runToFiles
             .orderBy(col("event_id"))
-          }
         }
       },
       Some("""WITH e AS (
@@ -3631,14 +3509,12 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureCustomerStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val cells = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val cells = EventStream.readStaged(s, sch, s"$inDir/part-*")
           .groupBy(col("c_nationkey"),
             floor(col("c_acctbal") / 1000).cast("long").as("bal_band"),
             col("c_mktsegment"))
           .agg(count(lit(1)).as("n"))
-        EventStream.runToMemory(s, cells, s"st56_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, cells)
           .groupBy(col("c_nationkey"), col("bal_band"))
           .agg(count(lit(1)).as("l_div"), sum(col("n")).as("n"))
           .select(explode(array(lit(2L), lit(3L), lit(5L))).as("l"),
@@ -3689,9 +3565,7 @@ object StreamMediaQueries {
           .select(col("c_custkey").as("o_custkey"), col("dense_id"))
         val inDir = ensureOrderFactStream(s, d)
         val sch = s.read.parquet(inDir).schema
-        val stream = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
         val weekly = graft.ops.ScaleJoins
           .saltedJoin(stream, keyToDense, "o_custkey", 8, col("o_orderdate"))
           .select(call_function("div",
@@ -3700,7 +3574,7 @@ object StreamMediaQueries {
             col("dense_id"))
           .groupBy(col("week_ix"))
           .agg(IdBitmap.idBitmap(col("dense_id"), 1L << 20).as("bm"))
-        EventStream.runToMemory(s, weekly, s"st57_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, weekly)
           .select(col("week_ix"), IdBitmap.bitmapCount(col("bm")).as("n_custs"))
           .orderBy(col("week_ix"))
       },
@@ -3732,9 +3606,7 @@ object StreamMediaQueries {
             concat(lit(",\"score\":"), col("doc_id") % 97)).otherwise(lit("")),
           lit("},\"tags\":["), col("doc_id") % 5, lit(","),
           col("doc_id") % 7, lit("]}"))
-        val shredded = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/part-*")
+        val shredded = EventStream.readStaged(s, sch, s"$inDir/part-*")
           .select(when(col("doc_id") % 13 === 0, substring(base, 1, 10))
             .otherwise(base).as("js"))
           .select(try_parse_json(col("js")).as("v"))
@@ -3751,7 +3623,7 @@ object StreamMediaQueries {
             count(col("score")).as("n_scored"),
             sum(col("score")).as("score_sum"),
             sum(col("tag1")).as("tag1_sum"))
-        EventStream.runToMemory(s, shredded, s"st58_mem_${System.nanoTime()}")
+        EventStream.runToMemory(s, shredded)
           .orderBy(col("src"))
       },
       Some("""WITH raw AS (
@@ -3808,23 +3680,16 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureTimerSessionStream(s, d)
-        // state partitions sized to the state (the st54/st65 knob); the
-        // statestore read side is one source per partition, so fewer
-        // partitions also mean fewer read-back reconstructions
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/part-*") // tiles only: pushers are z*_push
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*") // tiles only: pushers are z*_push
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st59o")
           val drained = EventStream.runToFiles(s,
             EventStream.timerSessionStream(stream,
-              EventStream.SessionGapMicros).toDF(),
-            s"$out/data", s"$out/ckpt")
+              EventStream.SessionGapMicros).toDF(), out)
           val open = s.read.format("statestore")
-            .option("path", s"$out/ckpt")
+            .option("path", EventStream.checkpointDir(out))
             .option("stateVarName", "sess")
             .load()
             .select(col("key.value").as("user_id"),
@@ -3834,7 +3699,6 @@ object StreamMediaQueries {
           drained.select("user_id", "anchor_ts", "n_events", "last_ts")
             .unionByName(open)
             .orderBy(col("user_id"), col("anchor_ts"))
-          }
         }
       },
       Some("""WITH e AS (
@@ -3878,48 +3742,41 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureTimerSessionStream(s, d)
+        // the changelog exists because withRocksDBState turns RocksDB
+        // changelog checkpointing on
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-              -> "true",
-            // state partitions sized to the state (the st54/st65 knob)
-            "spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-            val stream = s.readStream.schema(EventStream.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(s"$inDir/part-*")
-              .as[EventStream.Event]
-            val out = graft.TempDirs.create("graft_st60o")
-            val drained = EventStream.runToFiles(s,
-              EventStream.timerSessionStream(stream,
-                EventStream.SessionGapMicros).toDF(),
-              s"$out/data", s"$out/ckpt")
-            val changes = s.read.format("statestore")
-              .option("path", s"$out/ckpt")
-              .option("stateVarName", "sess")
-              .option("readChangeFeed", "true")
-              .option("changeStartBatchId", "0")
-              .load()
-              .select(col("batch_id"), col("change_type"),
-                col("key.value").as("user_id"),
-                col("value._1").as("anchor_ts"),
-                col("value._2").as("n_events"),
-                col("value._3").as("last_ts"))
-            // fold the changelog: the LAST write per user wins (the
-            // processor writes sess at most once per batch — update at
-            // the end of handleInputRows or delete in the timer path,
-            // never both, so (user, batch) is unique); an open session
-            // is a final 'update', a closed one ends in 'delete'
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
-            val open = changes
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") === 1 && col("change_type") === "update")
-              .select("user_id", "anchor_ts", "n_events", "last_ts")
-            drained.select("user_id", "anchor_ts", "n_events", "last_ts")
-              .unionByName(open)
-              .orderBy(col("user_id"), col("anchor_ts"))
-          }
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*", perTrigger = 1)
+            .as[EventStream.Event]
+          val out = graft.TempDirs.create("graft_st60o")
+          val drained = EventStream.runToFiles(s,
+            EventStream.timerSessionStream(stream,
+              EventStream.SessionGapMicros).toDF(), out)
+          val changes = s.read.format("statestore")
+            .option("path", EventStream.checkpointDir(out))
+            .option("stateVarName", "sess")
+            .option("readChangeFeed", "true")
+            .option("changeStartBatchId", "0")
+            .load()
+            .select(col("batch_id"), col("change_type"),
+              col("key.value").as("user_id"),
+              col("value._1").as("anchor_ts"),
+              col("value._2").as("n_events"),
+              col("value._3").as("last_ts"))
+          // fold the changelog: the LAST write per user wins (the
+          // processor writes sess at most once per batch — update at
+          // the end of handleInputRows or delete in the timer path,
+          // never both, so (user, batch) is unique); an open session
+          // is a final 'update', a closed one ends in 'delete'
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("user_id")).orderBy(col("batch_id").desc)
+          val open = changes
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") === 1 && col("change_type") === "update")
+            .select("user_id", "anchor_ts", "n_events", "last_ts")
+          drained.select("user_id", "anchor_ts", "n_events", "last_ts")
+            .unionByName(open)
+            .orderBy(col("user_id"), col("anchor_ts"))
         }
       },
       Some("""WITH e AS (
@@ -3960,21 +3817,14 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureTimerSessionStream(s, d)
-        // state partitions sized to the state (the st54/st65 knob):
-        // per-user k-1 strings, RocksDB per-partition commit tax per batch
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/part-*") // tiles only: pushers are z*_push
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*") // tiles only: pushers are z*_push
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st61o")
           EventStream.runToFiles(s,
-              EventStream.recentPatternStream(stream, k = 3).toDF(),
-              s"$out/data", s"$out/ckpt")
+              EventStream.recentPatternStream(stream, k = 3).toDF(), out)
             .orderBy(col("event_id"))
-          }
         }
       },
       Some("""WITH e AS (
@@ -4015,7 +3865,7 @@ object StreamMediaQueries {
             col("w.start").as("session_start"),
             col("w.end").as("session_end"), col("n_events"))
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, sess, s"$out/data", s"$out/ckpt")
+          EventStream.runToFiles(s, sess, out)
         }.orderBy(col("user_id"), col("session_start"))
       },
       Some("""WITH e AS (
@@ -4091,27 +3941,22 @@ object StreamMediaQueries {
             col("n_events").as("_3"), col("last_ts").as("_4"))
           .as[(Long, Long, Long, Long)]
         // the stream takes over from the cut, state seeded.
-        // maxFilesPerTrigger stays 1 HERE: the two watermark pushers
+        // One file per trigger HERE: the two watermark pushers
         // must land in separate batches (a timer armed before batch k
         // fires in the first batch whose START watermark passes it),
         // and with only 2 data tiles a 2-files trigger would lump them.
-        // State partitions sized to the state (the st54/st65 knob).
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          val stream = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(s"$root/in/*.parquet")
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$root/in/*.parquet", perTrigger = 1)
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st63o")
           val drained = EventStream.runToFiles(s,
             EventStream.bootstrapSessionStream(stream, gapUs, openAtCut).toDF(),
-            s"$out/data", s"$out/ckpt")
+            out)
           drained.select("user_id", "anchor_ts", "n_events", "last_ts")
             .filter(col("user_id") >= 0) // sentinel watermark pushers
             .unionByName(closedBatch)
             .orderBy(col("user_id"), col("anchor_ts"))
-          }
         }
       },
       Some("""WITH e AS (
@@ -4146,7 +3991,7 @@ object StreamMediaQueries {
     // max of maxes — each metric algebraic, so the fold is
     // tiling-invariant), certified against the corpus aggregate
     // computed batch-side. n_batches pins the per-batch granularity:
-    // the fixture is 3 tiles at maxFilesPerTrigger=1, so telemetry must
+    // the fixture is 3 tiles at one file per trigger, so telemetry must
     // have arrived as 3 per-batch rows, not one lump. recentProgress is
     // populated synchronously at each batch commit (no listener race);
     // the fold is a driver loop over ≤ n_batches tiny rows.
@@ -4155,9 +4000,8 @@ object StreamMediaQueries {
         val inDir = ensureGateStream(s, d) // lineitem as 3 tiles
         val sch = s.read.parquet(inDir).schema
         val out = graft.TempDirs.create("graft_st64")
-        val streamed = s.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"$inDir/part-*")
+        val streamed = EventStream.readStaged(s, sch,
+            s"$inDir/part-*", perTrigger = 1)
           .observe("ingest",
             count(lit(1)).as("rows_in"),
             sum(col("l_quantity").cast("long")).as("qty_sum"),
@@ -4166,19 +4010,10 @@ object StreamMediaQueries {
             max(col("l_orderkey")).as("okey_max"))
           .filter(col("l_quantity") > 0) // the payload pipeline observe rides
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        val q = graft.Confs.withConfs(s, Seq(
-          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-          "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) {
-          val q = streamed.writeStream
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-            .format("parquet")
-            .option("path", s"$out/data")
-            .option("checkpointLocation", s"$out/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          q
-        }
+        val q = EventStream.drain(s, streamed.writeStream
+          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+          .format("parquet")
+          .option("path", EventStream.dataDir(out)), Some(out), noData = false)
         val perBatch = q.recentProgress.toSeq
           .flatMap(p => Option(p.observedMetrics.get("ingest"))
             .map(r => p.batchId -> r))
@@ -4230,49 +4065,39 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureTimerSessionStream(s, d)
+        // snapshot-anchored reads replay changelog files forward from an
+        // uploaded snapshot — they exist only under the changelog
+        // checkpointing withRocksDBState turns on
         EventStream.withRocksDBState(s) {
-          graft.Confs.withConfs(s, Seq(
-            // snapshot-anchored reads replay changelog files forward
-            // from an uploaded snapshot — they exist only under
-            // changelog checkpointing
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-              -> "true",
-            // state partitions sized per job (the first-checkpoint
-            // knob): fewer RocksDB instances per batch AND fewer
-            // per-partition snapshot reconstructions afterwards —
-            // the read side is one source per partition by API design
-            "spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-            val stream = s.readStream.schema(EventStream.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(s"$inDir/part-*") // tiles only: pushers are z*_push
-              .as[EventStream.Event]
-            val out = graft.TempDirs.create("graft_st65o")
-            val drained = EventStream.runToFiles(s,
-              EventStream.timerSessionStream(stream,
-                EventStream.SessionGapMicros).toDF(),
-              s"$out/data", s"$out/ckpt")
-            val lastBatch = new java.io.File(s"$out/ckpt/commits")
-              .listFiles().map(_.getName).filter(_.forall(_.isDigit))
-              .map(_.toLong).max
-            val nParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-            val open = (0 until nParts).map { p =>
-              s.read.format("statestore")
-                .option("path", s"$out/ckpt")
-                .option("stateVarName", "sess")
-                .option("batchId", lastBatch.toString)
-                .option("snapshotStartBatchId", "0")
-                .option("snapshotPartitionId", p.toString)
-                .load()
-                .select(col("key.value").as("user_id"),
-                  col("value._1").as("anchor_ts"),
-                  col("value._2").as("n_events"),
-                  col("value._3").as("last_ts"))
-            }.reduce(_.unionByName(_))
-            drained.select("user_id", "anchor_ts", "n_events", "last_ts")
-              .unionByName(open)
-              .orderBy(col("user_id"), col("anchor_ts"))
-          }
+          val stream = EventStream.readStaged(s, EventStream.schema,
+              s"$inDir/part-*", perTrigger = 1) // tiles only: pushers are z*_push
+            .as[EventStream.Event]
+          val out = graft.TempDirs.create("graft_st65o")
+          val drained = EventStream.runToFiles(s,
+            EventStream.timerSessionStream(stream,
+              EventStream.SessionGapMicros).toDF(), out)
+          val ckpt = EventStream.checkpointDir(out)
+          def numbered(dir: String): Seq[Long] =
+            new java.io.File(dir).listFiles().map(_.getName)
+              .filter(_.forall(_.isDigit)).map(_.toLong).toSeq
+          val lastBatch = numbered(s"$ckpt/commits").max
+          // one state dir per partition the drain actually ran with
+          val open = numbered(s"$ckpt/state/0").sorted.map { p =>
+            s.read.format("statestore")
+              .option("path", ckpt)
+              .option("stateVarName", "sess")
+              .option("batchId", lastBatch.toString)
+              .option("snapshotStartBatchId", "0")
+              .option("snapshotPartitionId", p.toString)
+              .load()
+              .select(col("key.value").as("user_id"),
+                col("value._1").as("anchor_ts"),
+                col("value._2").as("n_events"),
+                col("value._3").as("last_ts"))
+          }.reduce(_.unionByName(_))
+          drained.select("user_id", "anchor_ts", "n_events", "last_ts")
+            .unionByName(open)
+            .orderBy(col("user_id"), col("anchor_ts"))
         }
       },
       Some("""WITH e AS (
@@ -4321,9 +4146,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureTimerSessionStream(s, d)
         val out = graft.TempDirs.create("graft_st66")
-        val ev = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/*.parquet") // tiles + watermark pushers
+        val ev = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
         val hourly = ev
@@ -4343,14 +4166,8 @@ object StreamMediaQueries {
         // corpus size; RocksDB's per-partition open/commit tax (×2
         // operators ×batches) buys nothing here. RocksDB is for
         // per-user/per-id state (st54/st06), where keys scale with data.
-        // State partitions sized to the state (a few hundred window×type
-        // keys), not the session's scan parallelism — the per-job knob a
-        // streaming deployment pins at its first checkpoint; two chained
-        // operators pay the per-partition commit tax twice per batch.
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, daily, s"$out/data", s"$out/ckpt")
-        }.filter(col("event_type") =!= "flush") // sentinel groups
+        EventStream.runToFiles(s, daily, out)
+          .filter(col("event_type") =!= "flush") // sentinel groups
           .orderBy(col("day"), col("event_type"))
       },
       Some("""WITH h AS (
@@ -4382,9 +4199,7 @@ object StreamMediaQueries {
         val inDir = ensureTimerSessionStream(s, d)
         val out = graft.TempDirs.create("graft_st67")
         def side(ty: String, tsName: String) =
-          s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/*.parquet") // tiles + watermark pushers
+          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${tsName}_user"),
               col("event_id").as(s"${tsName}_id"),
@@ -4403,16 +4218,8 @@ object StreamMediaQueries {
         // bounded by the 1 h interval × watermark delay — a sliding
         // TIME window of rows, not a per-key registry — and the window
         // agg's by open windows; neither scales with corpus keys.
-        // State-partition count tuned per job, the knob every streaming
-        // deployment pins at its first checkpoint: a stream-stream join
-        // keeps FOUR stores per partition per side-pair, so partition
-        // count multiplies per-batch commit overhead 4× harder than any
-        // other operator — size it to the state volume (time-bounded
-        // here), not the session's scan parallelism.
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, rolled, s"$out/data", s"$out/ckpt")
-        }.filter(!col("sentinel")) // sentinel self-pairs drop batch-side
+        EventStream.runToFiles(s, rolled, out)
+          .filter(!col("sentinel")) // sentinel self-pairs drop batch-side
           .select(col("hour"), col("n_attr"))
           .orderBy(col("hour"))
       },
@@ -4440,7 +4247,7 @@ object StreamMediaQueries {
     // then starts a second, brand-new query on the same checkpoint +
     // sink and certifies the FINAL sink against the batch oracle — a
     // duplicate or gap anywhere across the kill breaks the hash. The
-    // two phases share shuffle.partitions=8: state partition count is
+    // two phases share runToFiles' state-partition count: it is
     // fixed at the first checkpoint (the restart would fail loudly on a
     // mismatch, which is itself the deployment contract).
     ("st68_stream_restart",
@@ -4457,28 +4264,20 @@ object StreamMediaQueries {
           java.nio.file.Files.copy(f.toPath, dst.toPath)
           dst.setLastModified(f.lastModified) // keep the arrival contract
         }
-        def drain(): Unit = {
-          val agg = s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(s"${inDir.getAbsolutePath}/*.parquet")
+        def drain(): DataFrame = EventStream.runToFiles(s,
+          EventStream.readStaged(s, EventStream.schema,
+              s"${inDir.getAbsolutePath}/*.parquet", perTrigger = 1)
             .withColumn("event_time", Tables.eventTime(col("ts")))
             .withWatermark("event_time", "1 hour")
             .groupBy(window(col("event_time"), "1 hour").as("w"),
               col("event_type"))
             .agg(count(lit(1)).as("n"), sum(col("user_id")).as("user_sum"))
             .select(col("w.start").as("hour"), col("event_type"),
-              col("n"), col("user_sum"))
-          graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-            EventStream.runToFiles(s, agg, s"$out/data", s"$out/ckpt")
-          }
-          ()
-        }
+              col("n"), col("user_sum")), out)
         stage(feed.take(2)) // tiles 1..2 arrive
         drain()             // first query drains them, then "dies"
         stage(feed.drop(2)) // tile 3 + pushers arrive while down
         drain()             // NEW query, same checkpoint: resume
-        s.read.parquet(s"$out/data")
           .filter(col("event_type") =!= "flush") // sentinel groups
           .orderBy(col("hour"), col("event_type"))
       },
@@ -4508,9 +4307,8 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureDupEventStream(s, d)
         val out = graft.TempDirs.create("graft_st69out")
-        val rolled = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/*.parquet") // dup-bearing tiles + pushers
+        val rolled = EventStream.readStaged(s, EventStream.schema,
+            s"$inDir/*.parquet") // dup-bearing tiles + pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
@@ -4519,14 +4317,11 @@ object StreamMediaQueries {
           .agg(count(lit(1)).as("n_unique"), sum(col("user_id")).as("user_sum"))
           .select(col("w.start").as("hour"), col("event_type"),
             col("n_unique"), col("user_sum"))
-        // default state store, partitions sized to state (the st66
-        // rationale): dedup state is O(events within the delay) — time-
-        // bounded — and window state O(open windows × types); two
-        // stateful ops pay the per-partition commit tax twice per batch.
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, rolled, s"$out/data", s"$out/ckpt")
-        }.filter(col("event_type") =!= "flush") // sentinel groups
+        // default state store (the st66 rationale): dedup state is
+        // O(events within the delay) — time-bounded — and window state
+        // O(open windows × types).
+        EventStream.runToFiles(s, rolled, out)
+          .filter(col("event_type") =!= "flush") // sentinel groups
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -4551,12 +4346,11 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val inDir = ensureDupEventStream(s, d)
         val out = graft.TempDirs.create("graft_st70")
-        val tagged = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$inDir/*.parquet")
+        val tagged = EventStream.readStaged(s, EventStream.schema,
+            s"$inDir/*.parquet")
           .select(col("event_id"), col("user_id"),
             regexp_extract(col("_metadata.file_name"), "^(t\\d)", 1).as("tile"))
-        EventStream.runToFiles(s, tagged, s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(s, tagged, out)
           .filter(col("tile") =!= "") // pusher files (z*_push) drop out
           .groupBy(col("tile"))
           .agg(count(lit(1)).as("n_rows"),
@@ -4604,9 +4398,7 @@ object StreamMediaQueries {
         val inDir = ensureTimerSessionStream(s, d)
         val out = graft.TempDirs.create("graft_st71")
         def side(ty: String, tsName: String) =
-          s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/*.parquet") // tiles + watermark pushers
+          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${tsName}_user"),
               col("event_id").as(s"${tsName}_id"),
@@ -4617,10 +4409,8 @@ object StreamMediaQueries {
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"),
           "left_semi")
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, converted, s"$out/data", s"$out/ckpt")
-        }.filter(col("v_user") >= 0) // sentinel self-matches drop
+        EventStream.runToFiles(s, converted, out)
+          .filter(col("v_user") >= 0) // sentinel self-matches drop
           .orderBy(col("v_id"))
       },
       Some("""SELECT v.user_id AS v_user, v.event_id AS v_id,
@@ -4654,9 +4444,8 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         val (evenDir, oddDir) = ensureUnionFeeds(s, d)
         val out = graft.TempDirs.create("graft_st72out")
-        def feed(dir: String) = s.readStream.schema(EventStream.schema)
-          .option("maxFilesPerTrigger", "2")
-          .parquet(s"$dir/*.parquet") // tiles + this feed's own pushers
+        def feed(dir: String) = EventStream.readStaged(s, EventStream.schema,
+            s"$dir/*.parquet") // tiles + this feed's own pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
         val rolled = feed(evenDir).unionByName(feed(oddDir))
@@ -4665,10 +4454,8 @@ object StreamMediaQueries {
           .agg(count(lit(1)).as("n"), sum(col("user_id")).as("user_sum"))
           .select(col("w.start").as("hour"), col("event_type"),
             col("n"), col("user_sum"))
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, rolled, s"$out/data", s"$out/ckpt")
-        }.filter(col("event_type") =!= "flush") // both feeds' sentinels
+        EventStream.runToFiles(s, rolled, out)
+          .filter(col("event_type") =!= "flush") // both feeds' sentinels
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
@@ -4699,9 +4486,7 @@ object StreamMediaQueries {
         val inDir = ensureTimerSessionStream(s, d)
         val out = graft.TempDirs.create("graft_st73")
         def side(ty: String, pfx: String) =
-          s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/*.parquet") // tiles + watermark pushers
+          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${pfx}_user"),
               col("event_id").as(s"${pfx}_id"),
@@ -4714,10 +4499,8 @@ object StreamMediaQueries {
             "full_outer")
           .select(coalesce(col("v_user"), col("p_user")).as("user_id"),
             col("v_id"), col("p_id"))
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, joined, s"$out/data", s"$out/ckpt")
-        }.filter(col("user_id") >= 0) // sentinel self-matches drop
+        EventStream.runToFiles(s, joined, out)
+          .filter(col("user_id") >= 0) // sentinel self-matches drop
           .orderBy(col("user_id"), col("v_id"), col("p_id"))
       },
       Some("""WITH e AS (
@@ -4783,9 +4566,7 @@ object StreamMediaQueries {
         val inDir = ensureTimerSessionStream(s, d)
         val out = graft.TempDirs.create("graft_st75")
         def side(ty: String, pfx: String) =
-          s.readStream.schema(EventStream.schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(s"$inDir/*.parquet") // tiles + watermark pushers
+          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${pfx}_user"),
               col("event_id").as(s"${pfx}_id"),
@@ -4797,10 +4578,8 @@ object StreamMediaQueries {
               col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"),
             "right_outer")
           .select(col("p_user").as("user_id"), col("v_id"), col("p_id"))
-        graft.Confs.withConfs(s, Seq("spark.sql.shuffle.partitions" ->
-            graft.Confs.stateParts(1L << 20).toString)) {
-          EventStream.runToFiles(s, joined, s"$out/data", s"$out/ckpt")
-        }.filter(col("user_id") >= 0) // sentinel self-matches drop
+        EventStream.runToFiles(s, joined, out)
+          .filter(col("user_id") >= 0) // sentinel self-matches drop
           .orderBy(col("user_id"), col("v_id"), col("p_id"))
       },
       Some("""WITH e AS (

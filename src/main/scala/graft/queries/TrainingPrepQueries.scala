@@ -1102,8 +1102,7 @@ object TrainingPrepQueries {
       (s: SparkSession, d: String) => {
         val out = graft.TempDirs.create("graft_st04")
         EventStream.runToFiles(s,
-            EventStream.hourlyCounts(EventStream.readEvents(s, d)),
-            s"$out/data", s"$out/ckpt")
+            EventStream.hourlyCounts(EventStream.readEvents(s, d)), out)
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""WITH e AS (

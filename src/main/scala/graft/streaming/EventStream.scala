@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -109,6 +109,51 @@ object EventStream {
     (batch.filter(bad), batch.filter(!bad))
   }
 
+  /** The one reader for staged arrival fixtures: a file-source stream
+    * over `glob` under a declared `schema`, `perTrigger` files per
+    * micro-batch. Two files per trigger is the default every drain here
+    * runs at; a face that pins a batch boundary to each file (a
+    * watermark pusher that must land alone, an oracle that replays one
+    * batch per file) passes 1 and says why beside the call. */
+  def readStaged(spark: SparkSession, schema: StructType, glob: String,
+                 perTrigger: Int = 2): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", perTrigger.toString)
+      .parquet(glob)
+
+  /** A drain root's layout: the sink writes `<dir>/data`, the
+    * checkpoint lives in `<dir>/ckpt`. */
+  def dataDir(dir: String): String = s"$dir/data"
+  def checkpointDir(dir: String): String = s"$dir/ckpt"
+
+  /** Start `writer` with `Trigger.AvailableNow`, checkpointed under
+    * `dir` (see [[checkpointDir]]; `None` = Spark's own temporary
+    * checkpoint), and block until it has drained everything available.
+    * Returns the terminated query, whose `recentProgress` still holds
+    * the per-batch telemetry. One-shot drain tuning, restored afterwards:
+    *  - `noData` keeps (default) or skips the trailing no-data
+    *    micro-batches — see [[runToFiles]] for who needs which;
+    *  - checksum sidecar files are off: each sidecar is an extra
+    *    FileContext create that shells out on the local FS, roughly
+    *    doubling state-commit latency on a per-run checkpoint.
+    * State partitions are NOT scoped here: a foreachBatch body runs
+    * batch jobs that keep session parallelism, so [[runToFiles]] and
+    * [[runToMemory]] scope them around their own stateful queries. */
+  def drain[T](spark: SparkSession, writer: DataStreamWriter[T],
+               dir: Option[String], noData: Boolean = true): StreamingQuery =
+    graft.Confs.withConfs(spark, Seq(
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noData.toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) {
+      val q = dir.fold(writer)(d =>
+          writer.option("checkpointLocation", checkpointDir(d)))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
+
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong
+
   /** Run a streaming aggregate to completion over the available data and
     * return the result (memory sink, complete mode, AvailableNow).
     *
@@ -116,36 +161,29 @@ object EventStream {
     * driver — right for the oracle-checked query surface, where Complete
     * mode must include still-open windows. The production drain at scale
     * is [[runToFiles]]: Append mode + watermark to a parquet sink, no
-    * driver-held result. */
-  def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
+    * driver-held result.
+    *
+    * The sink gets a fresh name per call. Spark registers a memory sink
+    * as a session temp view, which would pin its rows on the driver for
+    * the session's life; the returned frame is resolved first and the
+    * view dropped, so the rows live exactly as long as the frame does.
+    * The trailing no-data batch is skipped (it changes nothing for
+    * AvailableNow output here), and state partitions are sized to the
+    * state ([[graft.Confs.stateParts]]): every memory-sink aggregate
+    * here holds key-bounded kilobytes; a caller with bigger state passes
+    * its own estimate. */
+  def runToMemory(spark: SparkSession, streamed: DataFrame,
                   mode: OutputMode = OutputMode.Complete,
                   parts: Int = graft.Confs.stateParts(1L << 20)): DataFrame = {
-    // One-shot drain tuning, restored afterwards:
-    //  - skip the watermark-commit empty batch (changes nothing for
-    //    AvailableNow + Complete output);
-    //  - skip checksum sidecar files on the ephemeral checkpoint — each
-    //    sidecar is an extra FileContext create that shells out on the
-    //    local FS, roughly doubling state-commit latency for zero benefit
-    //    on a throwaway dir;
-    //  - state partitions sized to the STATE ([[graft.Confs.stateParts]]:
-    //    every state-store provider pays a per-partition open/commit PER
-    //    MICRO-BATCH, so partitions beyond what the state volume needs
-    //    multiply pure per-batch overhead), not to the session's scan
-    //    parallelism. Every memory-sink aggregate here holds key-bounded
-    //    kilobytes; a caller with bigger state passes its own estimate.
-    graft.Confs.withConfs(spark, Seq(
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> parts.toString)) {
-      val q = streamed.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val name = s"graft_mem_${memorySinks.incrementAndGet()}"
+    try {
+      graft.Confs.withConfs(spark, Seq(
+        "spark.sql.shuffle.partitions" -> parts.toString)) {
+        drain(spark, streamed.writeStream.outputMode(mode).format("memory")
+          .queryName(name), None, noData = false)
+      }
       spark.table(name)
-    }
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** Run `body` with the RocksDB state store provider — the 100 TB
@@ -180,7 +218,9 @@ object EventStream {
     * watermark stay open and emit on the NEXT run from the same
     * checkpoint (exactly what a continuously-scheduled job wants);
     * one-shot consumers needing every window use [[runToMemory]].
-    * Returns the sink directory read back as a DataFrame.
+    * The sink and checkpoint live under the drain root `dir`
+    * ([[dataDir]], [[checkpointDir]]); returns the sink read back as a
+    * DataFrame.
     *
     * `noData = true` (default) keeps trailing no-data micro-batches on,
     * which event-time operators need to commit the final watermark
@@ -189,8 +229,8 @@ object EventStream {
     * advances the TTL clock and schedules eviction work, so
     * AvailableNow never reaches its all-committed termination state
     * and the drain spins forever. */
-  def runToFiles(spark: SparkSession, streamed: DataFrame, outDir: String,
-                 checkpointDir: String, noData: Boolean = true,
+  def runToFiles(spark: SparkSession, streamed: DataFrame, dir: String,
+                 noData: Boolean = true,
                  parts: Int = graft.Confs.stateParts(1L << 20)): DataFrame = {
     // State partitions sized to the STATE ([[graft.Confs.stateParts]]),
     // not the session's scan parallelism: per-partition store open/commit
@@ -201,18 +241,12 @@ object EventStream {
     // at session parallelism. Callers with bigger state pass their own
     // estimate (the first-checkpoint sizing knob a deployment pins).
     graft.Confs.withConfs(spark, Seq(
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noData.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> parts.toString)) {
-      val q = streamed.writeStream
+      drain(spark, streamed.writeStream
         .outputMode(OutputMode.Append)
         .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(outDir)
+        .option("path", dataDir(dir)), Some(dir), noData)
+      spark.read.parquet(dataDir(dir))
     }
   }
 

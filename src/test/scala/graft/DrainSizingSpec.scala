@@ -4,10 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.{EventStream, VersionedView}
 
-/** The round-20 drain-sizing internals: state partitions are a per-drain
-  * knob owned by the streaming helpers ([[Confs.stateParts]]), scoped
-  * for the drain's lifetime and restored afterwards — and the knob must
-  * actually reach the state store, not just the session conf. */
+/** The drain contract [[EventStream]] owns: state partitions are a
+  * per-drain knob ([[Confs.stateParts]]), scoped for the drain's
+  * lifetime and restored afterwards — and the knob must actually reach
+  * the state store, not just the session conf; the staged reader's
+  * files-per-trigger reaches the batch count; a drain root holds its
+  * sink and checkpoint; and a memory drain leaves no session state. */
 class DrainSizingSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -25,7 +27,7 @@ class DrainSizingSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_dsz").toString
     val drained = EventStream.runToFiles(spark,
       EventStream.hourlyCounts(EventStream.readEvents(spark, sf)),
-      s"$out/data", s"$out/ckpt", parts = 2)
+      out, parts = 2)
     // the knob reached the STORE: one state dir per partition
     val stateParts = new java.io.File(s"$out/ckpt/state/0")
       .listFiles().filter(_.isDirectory).map(_.getName)
@@ -38,8 +40,7 @@ class DrainSizingSpec extends SparkSpec {
     // default-parts drain
     val out2 = java.nio.file.Files.createTempDirectory("graft_dsz2").toString
     val default = EventStream.runToFiles(spark,
-      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)),
-      s"$out2/data", s"$out2/ckpt")
+      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), out2)
     assert(drained.exceptAll(default).isEmpty &&
       default.exceptAll(drained).isEmpty)
   }
@@ -48,13 +49,8 @@ class DrainSizingSpec extends SparkSpec {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val root = java.nio.file.Files.createTempDirectory("graft_dszv").toString
     val inDir = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/part-*")
+    val schema = graft.queries.StreamMediaQueries.dedupStreamSchema
+    val stream = EventStream.readStaged(spark, schema, s"$inDir/part-*")
     val base = spark.range(0)
       .select(col("id").as("doc_id"), col("id").as("n"))
     val state = VersionedView.run(spark, stream, s"$root/state",
@@ -79,5 +75,52 @@ class DrainSizingSpec extends SparkSpec {
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     assert(state.exceptAll(batchAll).isEmpty &&
       batchAll.exceptAll(state).isEmpty)
+  }
+
+  /** Micro-batches a finished drain committed: the checkpoint's commit log. */
+  private def committedBatches(dir: String): Int =
+    new java.io.File(s"${EventStream.checkpointDir(dir)}/commits").listFiles()
+      .count(_.getName.forall(_.isDigit))
+
+  test("readStaged's perTrigger sets the batch count; runToFiles owns the dir layout") {
+    val inDir = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
+    val schema = graft.queries.StreamMediaQueries.dedupStreamSchema
+    def drain(stream: org.apache.spark.sql.DataFrame): (String, Long) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_dszr").toString
+      (dir, EventStream.runToFiles(spark, stream, dir).count())
+    }
+    val glob = s"$inDir/part-*"
+    val (byDefault, nDefault) = drain(EventStream.readStaged(spark, schema, glob))
+    val (bySingle, nSingle) =
+      drain(EventStream.readStaged(spark, schema, glob, perTrigger = 1))
+    // the fixture is 4 files: 2 per trigger by default, 1 when pinned
+    assert(committedBatches(byDefault) == 2)
+    assert(committedBatches(bySingle) == 4)
+    val docs = Tables.load(spark, sf, "documents").count()
+    assert(nDefault == docs && nSingle == docs)
+    // the drain root holds exactly the sink and the checkpoint
+    val root = new java.io.File(byDefault)
+    assert(root.list().toSet == Set("data", "ckpt"))
+    assert(new java.io.File(EventStream.dataDir(byDefault), "_spark_metadata")
+      .isDirectory)
+    assert(new java.io.File(EventStream.checkpointDir(byDefault), "offsets")
+      .isDirectory)
+  }
+
+  test("runToMemory drops its sink's temp view; the frame stays readable") {
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary)
+        .map(_.name).toSet
+    val before = tempViews()
+    val snap = EventStream.runToMemory(spark,
+      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)))
+    // Spark registers every memory sink as a temp view, which would pin
+    // the sink's rows on the driver for the rest of the session
+    assert(tempViews() == before)
+    val first = snap.collect().toSeq
+    assert(first.nonEmpty)
+    assert(snap.collect().toSeq.sortBy(_.toString) == first.sortBy(_.toString))
+    assert(first.map(_.getAs[Long]("n_events")).sum ==
+      Tables.load(spark, sf, "events").count())
   }
 }

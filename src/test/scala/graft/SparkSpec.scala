@@ -11,17 +11,10 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   // one JVM-wide session for the whole test run (suites run in one fork)
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // same posture as Verify/Bench: extensions (custom SQL functions +
-      // the semantics-preserving optimizer rules) active in every spec
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -62,7 +62,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming hourly counts equal the batch group-by") {
     val streamed = EventStream.runToMemory(spark,
-      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), "t_hourly")
+      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)))
     val batch = Tables.load(spark, sf, "events")
       .groupBy(date_trunc("hour", Tables.eventTime(col("ts"))).as("hour"),
         col("event_type"))
@@ -74,8 +74,7 @@ class StreamingSpec extends SparkSpec {
   test("file-sink drain (Append + watermark) emits exactly the finalized windows") {
     val out = java.nio.file.Files.createTempDirectory("graft_fsink").toString
     val drained = EventStream.runToFiles(spark,
-      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)),
-      s"$out/data", s"$out/ckpt")
+      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), out)
     // Append emits a window once the watermark (max event_time - 1h)
     // passes its end: expected = batch windows with end <= watermark
     val events = Tables.load(spark, sf, "events")
@@ -94,11 +93,11 @@ class StreamingSpec extends SparkSpec {
 
   test("RocksDB state store provider: same windowed results as the default store") {
     val default = EventStream.runToMemory(spark,
-      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), "t_hourly_hdfs")
+      EventStream.hourlyCounts(EventStream.readEvents(spark, sf)))
       .collect().toSet
     val rocks = EventStream.withRocksDBState(spark) {
       EventStream.runToMemory(spark,
-        EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), "t_hourly_rocks")
+        EventStream.hourlyCounts(EventStream.readEvents(spark, sf)))
         .collect().toSet
     }
     assert(rocks == default)
@@ -124,8 +123,7 @@ class StreamingSpec extends SparkSpec {
         .as[EventStream.Event]
       val out = java.nio.file.Files.createTempDirectory("graft_rocksp").toString
       EventStream.runToFiles(spark,
-          EventStream.sessionizeStream(stream, timeout = false).toDF(),
-          s"$out/data", s"$out/ckpt")
+          EventStream.sessionizeStream(stream, timeout = false).toDF(), out)
         .collect().map(r => (r.getAs[Long]("user_id"),
           r.getAs[Int]("session_id"), r.getAs[Long]("session_start"),
           r.getAs[Long]("session_end"), r.getAs[Long]("n_events"))).toSet
@@ -139,7 +137,7 @@ class StreamingSpec extends SparkSpec {
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("w.start").as("s"),
           col("w.end").as("e"), col("n_events"))
-      EventStream.runToFiles(spark, sess, s"$out/data", s"$out/ckpt")
+      EventStream.runToFiles(spark, sess, out)
         .collect().map(r => (r.getAs[Long]("user_id"),
           r.getAs[java.sql.Timestamp]("s"), r.getAs[java.sql.Timestamp]("e"),
           r.getAs[Long]("n_events"))).toSet
@@ -953,8 +951,7 @@ class StreamingSpec extends SparkSpec {
       df.coalesce(1).write.parquet(s"$tmp/events.parquet")
       val out = graft.streaming.EventStream.runToFiles(spark,
         graft.streaming.EventStream.hourlyCounts(
-          graft.streaming.EventStream.readEvents(spark, tmp)),
-        s"$tmp/data", s"$tmp/ckpt")
+          graft.streaming.EventStream.readEvents(spark, tmp)), tmp)
       tag -> out.collect().map(r =>
         (r.getAs[java.sql.Timestamp]("hour").getTime, r.getAs[String]("event_type"),
           r.getAs[Long]("n_events"))).toSet
@@ -969,8 +966,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val out = graft.streaming.EventStream.runToMemory(spark,
       graft.streaming.EventStream.slidingCounts(
-        graft.streaming.EventStream.readEvents(spark, sf)),
-      s"slide_${System.nanoTime()}")
+        graft.streaming.EventStream.readEvents(spark, sf)))
     val total = out.agg(sum(col("n_events"))).head.getLong(0)
     val n = Tables.load(spark, sf, "events").count()
     assert(total == 2 * n, s"overlap-2 sliding windows must double-count: $total vs 2*$n")
@@ -1069,8 +1065,7 @@ class StreamingSpec extends SparkSpec {
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
         .groupBy(col("source"), col("pred_lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("total_tokens"))
-      graft.streaming.EventStream.runToMemory(spark, rollup,
-          s"st27spec_${System.nanoTime()}")
+      graft.streaming.EventStream.runToMemory(spark, rollup)
         .orderBy(col("source"), col("pred_lang")).collect()
     }
     val perFile = drain(Some(1))
@@ -1459,8 +1454,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/*.parquet")
         .as[graft.streaming.EventStream.Event]
       graft.streaming.EventStream.runToFiles(spark,
-        graft.streaming.EventStream.cepStream(stream, 2L * H, 3L * H).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        graft.streaming.EventStream.cepStream(stream, 2L * H, 3L * H).toDF(), tmp)
     }
     stage(Seq((1L, 0L * H, 7L, "view", 0.0, ""),
       (2L, 1L * H, 7L, "click", 0.0, "")), "w0")
@@ -1495,8 +1489,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/*.parquet")
         .as[IntervalCoverage.Iv]
       graft.streaming.EventStream.runToFiles(spark,
-        IntervalCoverage.coverageStream(stream).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        IntervalCoverage.coverageStream(stream).toDF(), tmp)
     }
     stage(Seq((1L, 10L, 20L), (1L, 15L, 25L)), "w0") // one open island 10..25
     drain()
@@ -1653,8 +1646,7 @@ class StreamingSpec extends SparkSpec {
           .parquet(s"$in/*.parquet")
           .as[EventStream.Event]
         graft.streaming.EventStream.runToFiles(spark,
-          EventStream.timerSessionStream(stream, H).toDF(),
-          s"$tmp/data", s"$tmp/ckpt")
+          EventStream.timerSessionStream(stream, H).toDF(), tmp)
       }
       // drain 1: user 5's session open, timer armed at 2H + gap; the
       // final watermark (2H) hasn't reached it — nothing emitted
@@ -1696,8 +1688,7 @@ class StreamingSpec extends SparkSpec {
           .parquet(s"$in/*.parquet")
           .as[EventStream.Event]
         graft.streaming.EventStream.runToFiles(spark,
-          EventStream.typeSeqStream(stream).toDF(),
-          s"$tmp/data", s"$tmp/ckpt")
+          EventStream.typeSeqStream(stream).toDF(), tmp)
       }
       stage(Seq((1L, 10L, 5L, "view"), (2L, 20L, 5L, "view")), "w0")
       drain()
@@ -1887,8 +1878,7 @@ class StreamingSpec extends SparkSpec {
           .parquet(s"$in/*.parquet")
           .as[EventStream.Event]
         graft.streaming.EventStream.runToFiles(spark,
-          EventStream.recentPatternStream(stream, k = 3).toDF(),
-          s"$tmp/data", s"$tmp/ckpt")
+          EventStream.recentPatternStream(stream, k = 3).toDF(), tmp)
       }
       stage(Seq((1L, 10L, 5L, "view"), (2L, 20L, 5L, "click")), "w0")
       drain()
@@ -1929,14 +1919,12 @@ class StreamingSpec extends SparkSpec {
       graft.streaming.EventStream.runToFiles(spark,
         stream().groupByKey(_.user_id)
           .transformWithState(new SchemaEvolutionFixtures.CountProcV1,
-            TimeMode.None(), OM.Append()).toDF("event_id", "n", "prev_ts"),
-        s"$tmp/data", s"$tmp/ckpt")
+            TimeMode.None(), OM.Append()).toDF("event_id", "n", "prev_ts"), tmp)
       stage(Seq((3L, 300L, 5L), (4L, 400L, 5L)), "w1")
       val rows = graft.streaming.EventStream.runToFiles(spark,
         stream().groupByKey(_.user_id)
           .transformWithState(new SchemaEvolutionFixtures.CountProcV2,
-            TimeMode.None(), OM.Append()).toDF("event_id", "n", "prev_ts"),
-        s"$tmp/data", s"$tmp/ckpt")
+            TimeMode.None(), OM.Append()).toDF("event_id", "n", "prev_ts"), tmp)
         .orderBy("event_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // event 3: count continues at 3 (V1 state readable), the new
@@ -1983,8 +1971,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/*.parquet")
         .as[EventStream.Event]
       graft.streaming.EventStream.runToFiles(spark,
-        EventStream.timerSessionStream(stream, H).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        EventStream.timerSessionStream(stream, H).toDF(), tmp)
       def stateAt(b: Int): Map[Long, Long] =
         spark.read.format("statestore")
           .option("path", s"$tmp/ckpt")
@@ -2172,8 +2159,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/w0/part-*")
         .as[EventStream.Event]
       val drained = graft.streaming.EventStream.runToFiles(spark,
-        EventStream.timerSessionStream(stream, H).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        EventStream.timerSessionStream(stream, H).toDF(), tmp)
       // session 1 closed by the event path (gap 8H > 1H); sessions 2
       // and 9/1 still open — they must be IN THE STORE, readable
       // without replaying the stream
@@ -2252,8 +2238,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/*.parquet")
         .as[EventStream.Event]
       graft.streaming.EventStream.runToFiles(spark,
-        EventStream.timerSessionStream(stream, H).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        EventStream.timerSessionStream(stream, H).toDF(), tmp)
       val changes = spark.read.format("statestore")
         .option("path", s"$tmp/ckpt")
         .option("stateVarName", "sess")
@@ -2362,8 +2347,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$in/*.parquet")
         .as[graft.streaming.EventStream.Event]
       graft.streaming.EventStream.runToFiles(spark,
-        graft.streaming.EventStream.zscoreStream(stream).toDF(),
-        s"$tmp/data", s"$tmp/ckpt")
+        graft.streaming.EventStream.zscoreStream(stream).toDF(), tmp)
     }
     stage((1L to 5L).map(i => (i, i * 1000L, 7L, "view", 1.0, "")), "w0")
     drain()
@@ -2482,7 +2466,7 @@ class StreamingSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"))
       graft.Confs.withConfs(spark, Seq(
         "spark.sql.streaming.multipleWatermarkPolicy" -> policy)) {
-        EventStream.runToFiles(spark, rolled, s"$out/data", s"$out/ckpt")
+        EventStream.runToFiles(spark, rolled, out)
       }.filter(col("event_type") =!= "flush")
         .agg(coalesce(sum(col("n")), lit(0L))).collect()(0).getLong(0)
     }
