@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Stager, Tables}
 import graft.ops.ScaleJoins
 
 /** The join-locality toolkit as oracle-checked queries: salting and
@@ -21,14 +21,14 @@ object ScaleJoinQueries {
   private lazy val bucketDbLocation: String =
     graft.TempDirs.create("graft_buckets")
 
-  /** Build the bucketed lineitem/orders tables for `d` once per
-    * (session, sf) — the write-once/join-many idiom this file documents:
-    * at 100 TB the bucketed fact tables are a materialized layout that
-    * MANY joins reuse, so q45 times the co-located join, not the table
-    * build. Returns the two table names. Memoized via tableExists (the
-    * sf dir is encoded in the name so distinct SFs never alias); the
-    * write itself stays covered by ScaleSpec. */
-  def ensureBucketedTables(s: SparkSession, d: String): (String, String) = {
+  /** The bucketed lineitem/orders tables for `d` — the
+    * write-once/join-many idiom this file documents: at 100 TB the
+    * bucketed fact tables are a materialized layout that MANY joins
+    * reuse, so q45 times the co-located join, not the table build.
+    * Returns the two table names. Memoized via tableExists (the sf dir
+    * is encoded in the name so distinct SFs never alias); the write
+    * itself stays covered by ScaleSpec. */
+  val ensureBucketedTables = Stager.inCatalog("graft_buckets") { (s, d) =>
     s.sql("CREATE DATABASE IF NOT EXISTS graft_buckets " +
       s"LOCATION '$bucketDbLocation'")
     val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
@@ -48,15 +48,15 @@ object ScaleJoinQueries {
   }
 
   /** q175's analyzed catalog tables: orders/customer/nation registered
-    * once per (JVM, sf) with `ANALYZE TABLE … COMPUTE STATISTICS FOR
-    * ALL COLUMNS` — rowCount + per-column NDV/min/max, the inputs the
-    * cost-based optimizer reorders joins with. Stats collection is a
+    * with `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL COLUMNS` —
+    * rowCount + per-column NDV/min/max, the inputs the cost-based
+    * optimizer reorders joins with. Stats collection is a
     * maintenance job at scale (run at ingest, amortized over every
     * later query), so it stays in the fixture, not the timed query. */
   private lazy val statsDbLocation: String =
     graft.TempDirs.create("graft_statsdb")
 
-  def ensureStatsTables(s: SparkSession, d: String): (String, String, String) = {
+  val ensureStatsTables = Stager.inCatalog("graft_stats") { (s, d) =>
     s.sql("CREATE DATABASE IF NOT EXISTS graft_stats " +
       s"LOCATION '$statsDbLocation'")
     val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
@@ -192,35 +192,29 @@ object ScaleJoinQueries {
 
   /** q173's key-partitioned layout: customer and supplier re-staged
     * into [[graft.sources.KeyedPartitionSource]]'s `k=<nationkey>`
-    * directory format — write-once per (JVM, sf), the q45 bucketed-
-    * tables rule (the layout is the deployment artifact; the query
-    * times the shuffle-free join, not the one-off re-layout). The
+    * directory format — the layout is the deployment artifact; the
+    * query times the shuffle-free join, not the one-off re-layout. The
     * staging WRITE goes through the source's own DSv2 sink, whose
     * `RequiresDistributionAndOrdering` makes the engine plan the
     * clustering shuffle that produces the layout — the full SPJ
     * lifecycle is distributed, write and read (plan-pinned in
     * ScaleSpec). */
-  private val keyedLayoutDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def ensureKeyedLayout(s: SparkSession, d: String): String =
-    keyedLayoutDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_spj")
-      def stage(table: String, key: String, id: String, label: String,
-                sub: String): Unit = {
-        new java.io.File(s"$tmp/$sub").mkdirs()
-        Tables.load(s, d, table)
-          .select(col(key).cast("long").as("key"),
-            col(id).cast("long").as("id"), col(label).as("label"))
-          .write.format("graft.sources.KeyedPartitionSource")
-          .option("path", s"$tmp/$sub")
-          .mode("append")
-          .save()
-      }
-      stage("customer", "c_nationkey", "c_custkey", "c_mktsegment", "cust")
-      stage("supplier", "s_nationkey", "s_suppkey", "s_name", "supp")
-      tmp
-    })
+  private[graft] val ensureKeyedLayout: Stager[String] = Stager("graft_spj") { (s, d, tmp) =>
+    def stage(table: String, key: String, id: String, label: String,
+              sub: String): Unit = {
+      new java.io.File(s"$tmp/$sub").mkdirs()
+      Tables.load(s, d, table)
+        .select(col(key).cast("long").as("key"),
+          col(id).cast("long").as("id"), col(label).as("label"))
+        .write.format("graft.sources.KeyedPartitionSource")
+        .option("path", s"$tmp/$sub")
+        .mode("append")
+        .save()
+    }
+    stage("customer", "c_nationkey", "c_custkey", "c_mktsegment", "cust")
+    stage("supplier", "s_nationkey", "s_suppkey", "s_name", "supp")
+    tmp
+  }
 
   /** q173's join body, shared with ScaleSpec's zero-Exchange
     * assertion: both sides read through the SPJ-reporting source, the
@@ -256,29 +250,23 @@ object ScaleJoinQueries {
       .agg(count(lit(1)).as("n_items"),
         sum(col("l_quantity")).as("sum_qty"))
 
-  /** q47's derived sketch capacity, once per sf dir (it is a property
-    * of the data alone; keying by session would pin session references
-    * in a static map for the JVM's lifetime). */
-  private val q47Capacity = scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  /** Derive (and memoize) q47's exact-regime capacity: the max
-    * per-source distinct-term count, floor 64. Called from Bench's
-    * warmup so the one-off distinct-count pre-pass — oracle-enabling
-    * setup, not sketch work — never lands inside a timed query body.
-    * An empty documents table degenerates to the floor instead of
-    * throwing on `head()`. */
-  private[graft] def q47CapacityFor(s: SparkSession, d: String): Int =
-    q47Capacity.getOrElseUpdate(d, {
-      val maxVocab = Tables.firstLongOption(
-        Tables.load(s, d, "documents")
-          .select(col("source"),
-            explode(graft.ops.TextAnalysis.tokens(lower(col("text")))).as("term"))
-          .groupBy(col("source"))
-          .agg(countDistinct(col("term")).as("v"))
-          .agg(max(col("v")).as("m")))
-        .getOrElse(64L)
-      math.max(64L, maxVocab).toInt
-    })
+  /** q47's exact-regime capacity: the max per-source distinct-term
+    * count, floor 64 — a property of the data alone, so it is keyed by
+    * sf dir, not session. A stager, so the one-off distinct-count
+    * pre-pass — oracle-enabling setup, not sketch work — never lands
+    * inside a timed query body. An empty documents table degenerates
+    * to the floor instead of throwing on `head()`. */
+  private[graft] val q47CapacityFor: Stager[Int] = Stager("graft_q47") { (s, d, _) =>
+    val maxVocab = Tables.firstLongOption(
+      Tables.load(s, d, "documents")
+        .select(col("source"),
+          explode(graft.ops.TextAnalysis.tokens(lower(col("text")))).as("term"))
+        .groupBy(col("source"))
+        .agg(countDistinct(col("term")).as("v"))
+        .agg(max(col("v")).as("m")))
+      .getOrElse(64L)
+    math.max(64L, maxVocab).toInt
+  }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Stager, Tables}
 
 /** Source/sink format coverage beyond CSV + parquet + REST: JSON-lines
   * and ORC round-trips. Each query writes the table through the format
@@ -863,16 +863,11 @@ object SourceFormatQueries {
     }
 
   /** q58's Z-ordered lineitem layout + the (pmin, pmax, smin, smax)
-    * bounds it was normalized with, memoized per (JVM, sf). 16 range
-    * partitions of the z-value ⇒ ~16 files, each a near-rectangle of
-    * the (partkey, suppkey) plane. */
-  private val zorderLayouts =
-    scala.collection.concurrent.TrieMap.empty[String, (String, (Long, Long, Long, Long))]
-
-  private[graft] def ensureZOrderLayout(
-      s: SparkSession, d: String): (String, (Long, Long, Long, Long)) =
-    zorderLayouts.getOrElseUpdate(d, {
-      val out = graft.TempDirs.create("graft_zorder")
+    * bounds it was normalized with. 16 range partitions of the z-value
+    * ⇒ ~16 files, each a near-rectangle of the (partkey, suppkey)
+    * plane. */
+  private[graft] val ensureZOrderLayout: Stager[(String, (Long, Long, Long, Long))] =
+    Stager("graft_zorder") { (s, d, out) =>
       val li = Tables.load(s, d, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_returnflag"))
@@ -887,25 +882,21 @@ object SourceFormatQueries {
         .drop("__z")
         .write.mode("overwrite").parquet(out)
       (out, bounds)
-    })
+    }
 
-  /** q180's clusterBy'd lineitem table, memoized per (JVM, sf) with the
-    * (kmin, kmax) orderkey bounds its probe derives from. Created via
+  /** q180's clusterBy'd lineitem table with the (kmin, kmax) orderkey
+    * bounds its probe derives from. Created via
     * DataFrameWriterV2 `clusterBy` (the metadata declaration), data
     * pre-shaped as a clustering connector would lay it out: 16 range
     * partitions of l_orderkey, sorted within each, so every file holds
     * one narrow disjoint slab and footer min-max stats carry the probe.
     * Lives in its own session-catalog database at a shutdown-cleaned
     * location (the [[graft.ops.ScaleJoins]] bucketed-tables idiom). */
-  private val clusterByTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, (Long, Long))]
-
   private lazy val clusterDbLocation: String =
     graft.TempDirs.create("graft_cluster")
 
-  private[graft] def ensureClusterByTable(
-      s: SparkSession, d: String): (String, (Long, Long)) =
-    clusterByTables.getOrElseUpdate(d, {
+  private[graft] val ensureClusterByTable: Stager[(String, (Long, Long))] =
+    Stager("graft_q180") { (s, d, _) =>
       s.sql("CREATE DATABASE IF NOT EXISTS graft_cluster " +
         s"LOCATION '$clusterDbLocation'")
       val sfx = d.replaceAll("[^A-Za-z0-9]", "_")
@@ -921,45 +912,37 @@ object SourceFormatQueries {
           .writeTo(tbl).using("parquet").clusterBy("l_orderkey").create()
       }
       (tbl, bounds)
-    })
+    }
 
-  /** q57's two-batch schema-evolved layout, memoized per (JVM, sf):
-    * batch 1 (even doc ids) wrote (doc_id, lang) before the `source`
-    * column existed; batch 2 (odd ids) wrote (doc_id, lang, source).
+  /** q57's two-batch schema-evolved layout: batch 1 (even doc ids)
+    * wrote (doc_id, lang) before the `source` column existed; batch 2
+    * (odd ids) wrote (doc_id, lang, source).
     * Long-lived 100 TB tables ALWAYS look like this — columns arrive
     * over time and old files never rewrite. */
-  private val evolvedLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
+  private[graft] val ensureEvolvedLayout: Stager[String] = Stager("graft_evolve") { (s, d, out) =>
+    val docs = Tables.load(s, d, "documents")
+    docs.filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id"), col("lang"))
+      .write.mode("overwrite").parquet(s"$out/batch=1")
+    docs.filter(col("doc_id") % 2 =!= 0)
+      .select(col("doc_id"), col("lang"), col("source"))
+      .write.mode("overwrite").parquet(s"$out/batch=2")
+    out
+  }
 
-  private[graft] def ensureEvolvedLayout(s: SparkSession, d: String): String =
-    evolvedLayouts.getOrElseUpdate(d, {
-      val out = graft.TempDirs.create("graft_evolve")
-      val docs = Tables.load(s, d, "documents")
-      docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("lang"))
-        .write.mode("overwrite").parquet(s"$out/batch=1")
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .write.mode("overwrite").parquet(s"$out/batch=2")
-      out
-    })
-
-  /** Per-JVM memoized ship-month-partitioned lineitem layout for q55:
-    * directories by `ship_month`, rows sorted by `l_shipdate` within
-    * partitions (file/row-group stats line up with the sort key).
-    * Built from Bench's warmup so the timed query measures the pruned
-    * SCAN — the repeated operation — not the one-off layout job. */
-  private val shipLayouts = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def ensureShipDateLayout(s: SparkSession, d: String): String =
-    shipLayouts.getOrElseUpdate(d, {
-      val out = graft.TempDirs.create("graft_shippart")
-      Tables.load(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
-          col("l_shipdate"))
-        .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
-        .repartition(col("ship_month"))
-        .sortWithinPartitions(col("l_shipdate"))
-        .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-      out
-    })
+  /** q55's ship-month-partitioned lineitem layout: directories by
+    * `ship_month`, rows sorted by `l_shipdate` within partitions
+    * (file/row-group stats line up with the sort key), so the timed
+    * query measures the pruned SCAN — the repeated operation — not the
+    * one-off layout job. */
+  private[graft] val ensureShipDateLayout: Stager[String] = Stager("graft_shippart") { (s, d, out) =>
+    Tables.load(s, d, "lineitem")
+      .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
+        col("l_shipdate"))
+      .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
+      .repartition(col("ship_month"))
+      .sortWithinPartitions(col("l_shipdate"))
+      .write.mode("overwrite").partitionBy("ship_month").parquet(out)
+    out
+  }
 }

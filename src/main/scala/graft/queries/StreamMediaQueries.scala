@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Stager, Tables}
 import graft.ops.{Multimodal, Similarity}
 import graft.streaming.EventStream
 
@@ -16,157 +16,108 @@ import graft.streaming.EventStream
 object StreamMediaQueries {
 
   /** m04's object-store fixture: one payload file per media row for the
-    * first [[MediaFileCount]] ids, built once per sf dir per JVM
-    * (pre-existing in a real pipeline, so its construction is setup,
-    * not query work). Bounded deliberately: a file per object is how
-    * media corpora ARRIVE, but Hadoop's per-file open costs ~2-3 ms on
-    * local FS (measured), so an unbounded tiny-file scan is the
-    * documented 100 TB anti-pattern — real pipelines ingest a bounded
-    * manifest slice per task (or shard objects into archives); the
-    * query demonstrates the source on exactly such a slice. */
+    * first [[MediaFileCount]] ids. Bounded deliberately: a file per
+    * object is how media corpora ARRIVE, but Hadoop's per-file open
+    * costs ~2-3 ms on local FS (measured), so an unbounded tiny-file
+    * scan is the documented 100 TB anti-pattern — real pipelines ingest
+    * a bounded manifest slice per task (or shard objects into
+    * archives); the query demonstrates the source on exactly such a
+    * slice. */
   val MediaFileCount = 500
-  private val mediaFileDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
-  def ensureMediaFiles(s: SparkSession, d: String): String =
-    mediaFileDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_m04")
-      // driver-side writes (toLocalIterator): the fixture dir is a
-      // DRIVER-local path, which executor-side foreachPartition would
-      // only reach in local mode; the slice is bounded so streaming it
-      // through the driver is small and cluster-correct
-      Multimodal.fromDocuments(Tables.load(s, d, "documents")).toDF()
-        .filter(col("media_id") < MediaFileCount)
-        .select(col("media_id"), col("payload"))
-        .toLocalIterator().forEachRemaining { r =>
-          val f = java.nio.file.Paths.get(s"$tmp/${r.getLong(0)}.bin")
-          java.nio.file.Files.write(f, r.getAs[Array[Byte]](1))
-          f.toFile.deleteOnExit()
-        }
-      tmp
-    })
+  val ensureMediaFiles: Stager[String] = Stager("graft_m04") { (s, d, tmp) =>
+    // driver-side writes (toLocalIterator): the fixture dir is a
+    // DRIVER-local path, which executor-side foreachPartition would
+    // only reach in local mode; the slice is bounded so streaming it
+    // through the driver is small and cluster-correct
+    Multimodal.fromDocuments(Tables.load(s, d, "documents")).toDF()
+      .filter(col("media_id") < MediaFileCount)
+      .select(col("media_id"), col("payload"))
+      .toLocalIterator().forEachRemaining { r =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/${r.getLong(0)}.bin"),
+          r.getAs[Array[Byte]](1))
+      }
+    tmp
+  }
 
   /** st27's arrival fixture: (doc_id, text, source) staged as 4 files
-    * — the document crawl as it lands. Write-once per (JVM, sf), same
-    * rule as [[ensureDedupStreamInput]]: the stream pre-exists, st27
-    * times the incremental rollup drain. */
-  private val docCardStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureDocCardStream(s: SparkSession, d: String): String =
-    docCardStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st27in")
-      Tables.load(s, d, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * — the document crawl as it lands. */
+  val ensureDocCardStream: Stager[String] = Stager("graft_st27in") { (s, d, tmp) =>
+    Tables.load(s, d, "documents")
+      .select(col("doc_id"), col("text"), col("source"))
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** st43's arrival fixture: the lineitem facts as 3 files (hash split
     * — the gate's metrics are algebraic sums, so arrival order is
-    * immaterial). Write-once per (JVM, sf): the feed pre-exists, the
-    * query times the streaming gate fold. */
-  private val gateStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureGateStream(s: SparkSession, d: String): String =
-    gateStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st43in")
-      Tables.load(s, d, "lineitem")
-        .repartition(3)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * immaterial). */
+  val ensureGateStream: Stager[String] = Stager("graft_st43in") { (s, d, tmp) =>
+    Tables.load(s, d, "lineitem")
+      .repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** st52's staging: the customer dim as 3 unordered parquet tiles —
     * k-anonymity class sizes are algebraic counts, so no arrival
-    * contract is needed (the [[ensureGateStream]] pattern). Write-once
-    * per (JVM, sf). */
-  private val custStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureCustomerStream(s: SparkSession, d: String): String =
-    custStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st52in")
-      Tables.load(s, d, "customer")
-        .repartition(3)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * contract is needed (the [[ensureGateStream]] pattern). */
+  val ensureCustomerStream: Stager[String] = Stager("graft_st52in") { (s, d, tmp) =>
+    Tables.load(s, d, "customer")
+      .repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** st53's staging: the orders fact (custkey + orderdate only) as 3
     * unordered tiles — bitmap OR is commutative, so arrival order is
-    * irrelevant. Write-once per (JVM, sf). */
-  private val orderFactStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureOrderFactStream(s: SparkSession, d: String): String =
-    orderFactStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st53in")
-      Tables.load(s, d, "orders")
-        .select(col("o_custkey"), col("o_orderdate"))
-        .repartition(3)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * irrelevant. */
+  val ensureOrderFactStream: Stager[String] = Stager("graft_st53in") { (s, d, tmp) =>
+    Tables.load(s, d, "orders")
+      .select(col("o_custkey"), col("o_orderdate"))
+      .repartition(3)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** st54's arrival fixture: the events corpus as 3 ts-range tiles
-    * (mtime-ordered — global-time-ordered arrival, the watermark
-    * contract: no event arrives after the watermark passed it) plus
-    * TWO trailing single-row watermark pushers for the sentinel user
-    * −1 at maxTs + 24 h and + 48 h. Two, because an event-time timer
-    * armed before batch k fires in the first batch whose START
-    * watermark (= data through batch k−1) passes it: the first pusher
-    * commits the +24 h watermark, the second gives the engine a batch
-    * to fire every real user's final-session timer in — no reliance on
-    * trailing no-data micro-batches. Write-once per (JVM, sf). */
-  private val timerSessionDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureTimerSessionStream(s: SparkSession, d: String): String =
-    timerSessionDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st54")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val events = Tables.load(s, d, "events")
-      val maxTs = events.agg(max(col("ts"))).head().getLong(0)
-      events.select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .repartitionByRange(3, col("ts"))
-        .write.mode("overwrite").parquet(inDir.getAbsolutePath)
-      val ranged = inDir.listFiles().filter(_.getName.startsWith("part-")).toSeq
-      finishEventTiles(s, tmp, inDir, ranged, maxTs)
-      inDir.getAbsolutePath
-    })
+    * (global-time-ordered arrival, the watermark contract: no event
+    * arrives after the watermark passed it) plus TWO trailing
+    * single-row watermark pushers for the sentinel user −1 at
+    * maxTs + 24 h and + 48 h. Two, because an event-time timer armed
+    * before batch k fires in the first batch whose START watermark
+    * (= data through batch k−1) passes it: the first pusher commits the
+    * +24 h watermark, the second gives the engine a batch to fire every
+    * real user's final-session timer in — no reliance on trailing
+    * no-data micro-batches. */
+  val ensureTimerSessionStream: Stager[String] = Stager("graft_st54") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val events = Tables.load(s, d, "events")
+    val maxTs = events.agg(max(col("ts"))).head().getLong(0)
+    events.select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartitionByRange(3, col("ts"))
+      .write.mode("overwrite").parquet(inDir)
+    finishEventTiles(s, inDir, Stager.parts(inDir), maxTs)
+    inDir
+  }
 
   /** Shared tail of the ts-range tiled event fixtures
     * ([[ensureTimerSessionStream]]/[[ensureBootstrapSessionStream]]):
     * append the TWO sentinel watermark pushers for user −1 at
     * maxTs + 24 h / + 48 h (two, because an event-time timer armed
     * before batch k fires in the first batch whose START watermark
-    * passes it) and stamp mtimes so arrival order is tiles
-    * (oldest-first), then pushers. */
-  private def finishEventTiles(s: SparkSession, tmp: String,
-      inDir: java.io.File, tiles: Seq[java.io.File], maxTs: Long): Unit = {
+    * passes it) and pin arrival order: `tiles` in the given order, then
+    * the pushers. */
+  private def finishEventTiles(s: SparkSession, inDir: String,
+      tiles: Seq[java.io.File], maxTs: Long): Unit = {
     import s.implicits._
-    def pusher(id: Long, ts: Long, name: String): java.io.File = {
-      val sd = s"$tmp/stage_$name"
-      Seq((id, ts, -1L, "flush", 0.0, ""))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(sd)
-      val part = new java.io.File(sd).listFiles()
-        .filter(_.getName.startsWith("part-")).head
-      val dst = new java.io.File(inDir, s"$name.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst
-    }
+    def pusher(id: Long, ts: Long, name: String): java.io.File =
+      Stager.oneFile(Seq((id, ts, -1L, "flush", 0.0, ""))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), inDir, name)
     val dayUs = 24L * 3600 * 1000 * 1000
-    val pushers = Seq(pusher(-1L, maxTs + dayUs, "z0_push"),
-      pusher(-2L, maxTs + 2 * dayUs, "z1_push"))
-    val now = System.currentTimeMillis()
-    tiles.sortBy(_.getName).zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(now - 60000 + i * 1000) }
-    pushers.zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(now + i * 1000) }
+    Stager.arrive(tiles ++ Seq(pusher(-1L, maxTs + dayUs, "z0_push"),
+      pusher(-2L, maxTs + 2 * dayUs, "z1_push")))
   }
 
   /** st69's at-least-once fixture: the events corpus as 3 ts-range
@@ -178,48 +129,35 @@ object StreamMediaQueries {
     * of their originals: the cross-tile copy's ts ≥ tileMax − 30 min >
     * batch-start watermark (tileMax − 1 h), so it is neither dropped
     * as late nor past the dedup key's state retention (ts + 1 h).
-    * Plus st54's two sentinel pushers and the same mtime contract.
-    * Write-once per (JVM, sf). */
-  private val dupEventDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureDupEventStream(s: SparkSession, d: String): String =
-    dupEventDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st69")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val events = Tables.load(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      val maxTs = events.agg(max(col("ts"))).head().getLong(0)
-      // fixture staging only: the single-partition ntile is the tiler,
-      // never the timed operator (one pass at build, cached per JVM)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("ts"), col("event_id"))
-      val tiled = events.withColumn("tile", ntile(3).over(w)).cache()
-      val tileMax = tiled.groupBy(col("tile")).agg(max(col("ts")).as("m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val halfHourUs = 30L * 60 * 1000 * 1000
-      val tiles = (1 to 3).map { k =>
-        val cur = tiled.filter(col("tile") === k).drop("tile")
-        val dupSame = cur.filter(col("event_id") % 7 === 0)
-        val dupCross =
-          if (k == 1) cur.limit(0)
-          else tiled.filter(col("tile") === (k - 1) &&
-              col("ts") >= lit(tileMax(k - 1) - halfHourUs) &&
-              col("event_id") % 4 === 0)
-            .drop("tile")
-        val sd = s"$tmp/stage_t$k"
-        cur.unionByName(dupSame).unionByName(dupCross)
-          .coalesce(1).write.mode("overwrite").parquet(sd)
-        val part = new java.io.File(sd).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dst = new java.io.File(inDir, s"t$k.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst
-      }
-      tiled.unpersist()
-      finishEventTiles(s, tmp, inDir, tiles, maxTs)
-      inDir.getAbsolutePath
-    })
+    * Plus st54's two sentinel pushers and the same arrival order. */
+  val ensureDupEventStream: Stager[String] = Stager("graft_st69") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val events = Tables.load(s, d, "events")
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+    val maxTs = events.agg(max(col("ts"))).head().getLong(0)
+    // fixture staging only: the single-partition ntile is the tiler,
+    // never the timed operator (one pass at build, cached per JVM)
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(col("ts"), col("event_id"))
+    val tiled = events.withColumn("tile", ntile(3).over(w)).cache()
+    val tileMax = tiled.groupBy(col("tile")).agg(max(col("ts")).as("m"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val halfHourUs = 30L * 60 * 1000 * 1000
+    val tiles = (1 to 3).map { k =>
+      val cur = tiled.filter(col("tile") === k).drop("tile")
+      val dupSame = cur.filter(col("event_id") % 7 === 0)
+      val dupCross =
+        if (k == 1) cur.limit(0)
+        else tiled.filter(col("tile") === (k - 1) &&
+            col("ts") >= lit(tileMax(k - 1) - halfHourUs) &&
+            col("event_id") % 4 === 0)
+          .drop("tile")
+      Stager.oneFile(cur.unionByName(dupSame).unionByName(dupCross), inDir, s"t$k")
+    }
+    tiled.unpersist()
+    finishEventTiles(s, inDir, tiles, maxTs)
+    inDir
+  }
 
   /** st72's two-feed fixture: the events corpus split by user parity
     * into TWO independent feeds with deliberately ASYMMETRIC tiling —
@@ -232,141 +170,116 @@ object StreamMediaQueries {
     * arrive below the jumped watermark and be dropped as late
     * (StreamingSpec proves exactly that). Each feed carries its own
     * two sentinel pushers at the global maxTs: a feed whose clock
-    * stops early would hold the min back forever. Write-once per
-    * (JVM, sf). */
-  private val unionFeedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  def ensureUnionFeeds(s: SparkSession, d: String): (String, String) =
-    unionFeedDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st72")
-      val events = Tables.load(s, d, "events")
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      val maxTs = events.agg(max(col("ts"))).head().getLong(0)
-      def feed(name: String, cond: org.apache.spark.sql.Column,
-               nTiles: Int): String = {
-        val inDir = new java.io.File(s"$tmp/$name"); inDir.mkdirs()
-        events.filter(cond)
-          .repartitionByRange(nTiles, col("ts"))
-          .write.mode("overwrite").parquet(inDir.getAbsolutePath)
-        val tiles = inDir.listFiles().filter(_.getName.startsWith("part-")).toSeq
-        finishEventTiles(s, tmp, inDir, tiles, maxTs)
-        inDir.getAbsolutePath
-      }
-      (feed("even", col("user_id") % 2 === 0, 3),
-        feed("odd", col("user_id") % 2 =!= 0, 1))
-    })
+    * stops early would hold the min back forever. */
+  val ensureUnionFeeds: Stager[(String, String)] = Stager("graft_st72") { (s, d, tmp) =>
+    val events = Tables.load(s, d, "events")
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+    val maxTs = events.agg(max(col("ts"))).head().getLong(0)
+    def feed(name: String, cond: org.apache.spark.sql.Column,
+             nTiles: Int): String = {
+      val inDir = s"$tmp/$name"
+      events.filter(cond)
+        .repartitionByRange(nTiles, col("ts"))
+        .write.mode("overwrite").parquet(inDir)
+      finishEventTiles(s, inDir, Stager.parts(inDir), maxTs)
+      inDir
+    }
+    (feed("even", col("user_id") % 2 === 0, 3),
+      feed("odd", col("user_id") % 2 =!= 0, 1))
+  }
 
   /** st63's handoff fixture: the events corpus cut at the FIRST
     * ts-range boundary — the earliest tile lands in `$tmp/batch` (the
     * backfill's input), the later two tiles plus st54's two watermark
-    * pushers land in `$tmp/in` (the stream the new job drains). Same
-    * mtime ordering contract as [[ensureTimerSessionStream]].
-    * Write-once per (JVM, sf). */
-  private val bootstrapSessionDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureBootstrapSessionStream(s: SparkSession, d: String): String =
-    bootstrapSessionDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st63")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val batchDir = new java.io.File(s"$tmp/batch"); batchDir.mkdirs()
-      val stage = s"$tmp/stage"
-      val events = Tables.load(s, d, "events")
-      val maxTs = events.agg(max(col("ts"))).head().getLong(0)
-      events.select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .repartitionByRange(3, col("ts"))
-        .write.mode("overwrite").parquet(stage)
-      // range partition index == file order: part-00000 is the lowest
-      // ts range — the batch half; the rest stream
-      val parts = new java.io.File(stage).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      java.nio.file.Files.move(parts.head.toPath,
-        new java.io.File(batchDir, "batch.parquet").toPath)
-      val streamed = parts.tail.toSeq.map { f =>
-        val dst = new java.io.File(inDir, f.getName)
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst
-      }
-      finishEventTiles(s, tmp, inDir, streamed, maxTs)
-      tmp
-    })
+    * pushers land in `$tmp/in` (the stream the new job drains), in
+    * [[ensureTimerSessionStream]]'s arrival order. */
+  val ensureBootstrapSessionStream: Stager[String] = Stager("graft_st63") { (s, d, tmp) =>
+    val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
+    val batchDir = new java.io.File(s"$tmp/batch"); batchDir.mkdirs()
+    val stage = s"$tmp/stage"
+    val events = Tables.load(s, d, "events")
+    val maxTs = events.agg(max(col("ts"))).head().getLong(0)
+    events.select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartitionByRange(3, col("ts"))
+      .write.mode("overwrite").parquet(stage)
+    // range partition index == file order: part-00000 is the lowest
+    // ts range — the batch half; the rest stream
+    val parts = Stager.parts(stage)
+    java.nio.file.Files.move(parts.head.toPath,
+      new java.io.File(batchDir, "batch.parquet").toPath)
+    val streamed = parts.tail.map { f =>
+      val dst = new java.io.File(inDir, f.getName)
+      java.nio.file.Files.move(f.toPath, dst.toPath)
+      dst
+    }
+    finishEventTiles(s, inDir.getPath, streamed, maxTs)
+    tmp
+  }
 
   /** m09's staging: (media_id, payload) parquet mixing all three decode
     * classes deterministically by id mod 3 — a REAL PNG (id-derived
     * dimensions, [[Multimodal.ImageCodec.pngBytes]]), the same PNG cut
     * at 24 bytes (signature intact, body gone — the truncated-transfer
     * case), and raw UTF-8 text bytes (the misrouted-row case). Bounded
-    * to media_id < 500 (the m04 slice rule). Write-once per (JVM, sf). */
-  private val decodeMixDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureDecodeMixFiles(s: SparkSession, d: String): String =
-    decodeMixDirs.getOrElseUpdate(d, {
-      import s.implicits._
-      val tmp = graft.TempDirs.create("graft_m09in")
-      Tables.load(s, d, "documents")
-        .filter(col("doc_id") < 500)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val payload = (id % 3) match {
-            case 0L => Multimodal.ImageCodec.pngBytes(id)
-            case 1L => Multimodal.ImageCodec.pngBytes(id).take(24)
-            case _ => text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
-          (id, payload)
+    * to media_id < 500 (the m04 slice rule). */
+  val ensureDecodeMixFiles: Stager[String] = Stager("graft_m09in") { (s, d, tmp) =>
+    import s.implicits._
+    Tables.load(s, d, "documents")
+      .filter(col("doc_id") < 500)
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        val payload = (id % 3) match {
+          case 0L => Multimodal.ImageCodec.pngBytes(id)
+          case 1L => Multimodal.ImageCodec.pngBytes(id).take(24)
+          case _ => text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         }
-        .toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+        (id, payload)
+      }
+      .toDF("media_id", "payload")
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
-  /** st47's arrival fixture: q141's distinct per-supplier intervals as
-    * 3 lo-VALUE-range-ordered files plus a per-supplier sentinel flush
-    * file (lo = Long.MaxValue), mtimes pinning delivery order. Value-
-    * range tiling (not rank tiling) means equal-lo rows can never
-    * straddle a batch boundary out of order — the arrival contract the
-    * sweep-line fold needs. Write-once per (JVM, sf). */
-  private val intervalStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q141's distinct per-supplier intervals `(sk, lo, hi)`, cached, with
+    * `arr` the arrival key st47/st50 tile by. */
+  private def supplierIntervals(s: SparkSession, d: String,
+      arr: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+    val day = datediff(to_date(col("l_shipdate")), lit("1990-01-01")).cast("long")
+    Tables.load(s, d, "lineitem")
+      .select(col("l_suppkey").as("sk"), day.as("lo"),
+        (day + round(col("l_quantity")).cast("long")).as("hi"))
+      .distinct()
+      .withColumn("arr", arr(col("lo")))
+      .cache()
+  }
 
-  def ensureIntervalStream(s: SparkSession, d: String): String =
-    intervalStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st47")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val day = datediff(to_date(col("l_shipdate")), lit("1990-01-01"))
-        .cast("long")
-      val iv = Tables.load(s, d, "lineitem")
-        .select(col("l_suppkey").as("sk"), day.as("lo"),
-          (day + round(col("l_quantity")).cast("long")).as("hi"))
-        .distinct().cache()
-      val mm = iv.agg(min(col("lo")).as("mn"), max(col("lo")).as("mx")).head()
-      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-      val span = math.max(mx - mn + 1, 1L)
-      def stage(df: DataFrame, name: String): java.io.File = {
-        val stageDir = s"$tmp/stage_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(stageDir)
-        val part = new java.io.File(stageDir).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dst = new java.io.File(inDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst
-      }
-      val waves = (0 to 2).map { t =>
-        stage(iv.filter(((col("lo") - mn) * 3L / span).cast("long") === t),
-          s"b$t")
-      }
-      val sentinel = stage(iv.select(col("sk")).distinct()
-        .select(col("sk"), lit(Long.MaxValue).as("lo"),
-          lit(Long.MaxValue).as("hi")), "b3_flush")
-      iv.unpersist()
-      val now = System.currentTimeMillis()
-      (waves :+ sentinel).zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(now - (3 - i) * 60000L)
-      }
-      inDir.getAbsolutePath
-    })
+  /** Stages `iv` as 3 arrival-key-range waves plus a per-supplier
+    * sentinel flush wave (lo = hi = Long.MaxValue), arriving in that
+    * order; returns the input dir. */
+  private def stageIntervalWaves(iv: DataFrame, inDir: String): String = {
+    val mm = iv.agg(min(col("arr")).as("mn"), max(col("arr")).as("mx")).head()
+    val (mn, mx) = (mm.getLong(0), mm.getLong(1))
+    val span = math.max(mx - mn + 1, 1L)
+    val waves = (0 to 2).map { t =>
+      Stager.oneFile(iv.filter(((col("arr") - mn) * 3L / span).cast("long") === t)
+        .select(col("sk"), col("lo"), col("hi")), inDir, s"b$t")
+    }
+    val sentinel = Stager.oneFile(iv.select(col("sk")).distinct()
+      .select(col("sk"), lit(Long.MaxValue).as("lo"),
+        lit(Long.MaxValue).as("hi")), inDir, "b3_flush")
+    iv.unpersist()
+    Stager.arrive(waves :+ sentinel)
+    inDir
+  }
+
+  /** st47's arrival fixture: q141's intervals as 3 lo-VALUE-range waves
+    * plus the sentinel flush wave. Value-range tiling (not rank tiling)
+    * means equal-lo rows can never straddle a batch boundary out of
+    * order — the arrival contract the sweep-line fold needs. */
+  val ensureIntervalStream: Stager[String] = Stager("graft_st47") { (s, d, tmp) =>
+    stageIntervalWaves(supplierIntervals(s, d, lo => lo), s"$tmp/in")
+  }
 
   /** st50's arrival fixture: the SAME intervals as st47, but tiled by a
     * JITTERED arrival key `lo + j, j = deterministic hash in
@@ -375,299 +288,154 @@ object StreamMediaQueries {
     * the watermark contract: if y is delivered no later than x then
     * `y.lo <= y.lo + j_y <= x.lo + j_x < x.lo + slack`, hence every
     * arrival satisfies `lo > maxLoSeen - slack`. Sentinel flush wave
-    * last. Write-once per (JVM, sf). */
-  private val jitteredIntervalDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * last. */
   private[graft] val st50SlackDays = 3L
 
-  def ensureIntervalStreamJittered(s: SparkSession, d: String): String =
-    jitteredIntervalDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st50")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val day = datediff(to_date(col("l_shipdate")), lit("1990-01-01"))
-        .cast("long")
-      val jitter = pmod(col("sk") * 1315423911L + col("lo") * 2654435761L +
-        col("hi") * 97L, lit(st50SlackDays))
-      val iv = Tables.load(s, d, "lineitem")
-        .select(col("l_suppkey").as("sk"), day.as("lo"),
-          (day + round(col("l_quantity")).cast("long")).as("hi"))
-        .distinct()
-        .withColumn("arr", col("lo") + jitter)
-        .cache()
-      val mm = iv.agg(min(col("arr")).as("mn"), max(col("arr")).as("mx")).head()
-      val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-      val span = math.max(mx - mn + 1, 1L)
-      def stage(df: DataFrame, name: String): java.io.File = {
-        val stageDir = s"$tmp/stage_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(stageDir)
-        val part = new java.io.File(stageDir).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dst = new java.io.File(inDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst
-      }
-      val waves = (0 to 2).map { t =>
-        stage(iv.filter(((col("arr") - mn) * 3L / span).cast("long") === t)
-          .select(col("sk"), col("lo"), col("hi")), s"b$t")
-      }
-      val sentinel = stage(iv.select(col("sk")).distinct()
-        .select(col("sk"), lit(Long.MaxValue).as("lo"),
-          lit(Long.MaxValue).as("hi")), "b3_flush")
-      iv.unpersist()
-      val now = System.currentTimeMillis()
-      (waves :+ sentinel).zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(now - (3 - i) * 60000L)
-      }
-      inDir.getAbsolutePath
-    })
+  val ensureIntervalStreamJittered: Stager[String] = Stager("graft_st50") { (s, d, tmp) =>
+    val jitter = pmod(col("sk") * 1315423911L + col("lo") * 2654435761L +
+      col("hi") * 97L, lit(st50SlackDays))
+    stageIntervalWaves(supplierIntervals(s, d, lo => lo + jitter), s"$tmp/in")
+  }
 
   /** st29's arrival fixture: two dimension-update batches against the
-    * customer dim — (key, new segment) files whose mtimes pin delivery
-    * order at one file per trigger (batch 0: keys ≡0 mod 7 →
-    * MACHINERY; batch 1: keys ≡0 mod 5 → HOUSEHOLD). SCD2 history
-    * DEPENDS on batch boundaries by design (which batch closed a row
-    * is the recorded fact), so the fixture pins them exactly like
-    * st12/st24's arrival fixtures, and the oracle replays the same two
-    * waves in order. Write-once per (JVM, sf). */
-  private val dimUpdateStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureDimUpdateStream(s: SparkSession, d: String): String =
-    dimUpdateStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st29")
-      val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
-      val cust = Tables.load(s, d, "customer")
-      def stage(df: org.apache.spark.sql.DataFrame, name: String): java.io.File = {
-        val stageDir = s"$tmp/stage_$name"
-        df.coalesce(1).write.mode("overwrite").parquet(stageDir)
-        val part = new java.io.File(stageDir).listFiles()
-          .filter(_.getName.startsWith("part-")).head
-        val dst = new java.io.File(inDir, s"$name.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst
-      }
-      val b0 = stage(cust.filter(col("c_custkey") % 7 === 0)
-        .select(col("c_custkey").as("k"), lit("MACHINERY").as("new_seg")), "b0")
-      val b1 = stage(cust.filter(col("c_custkey") % 5 === 0)
-        .select(col("c_custkey").as("k"), lit("HOUSEHOLD").as("new_seg")), "b1")
-      val now = System.currentTimeMillis()
-      b0.setLastModified(now - 60000)
-      b1.setLastModified(now)
-      inDir.getAbsolutePath
-    })
-
-  /** st12's arrival fixture: the events corpus as 3 time-range-ordered
-    * files plus a final per-user sentinel-flush file, mtimes forcing
-    * FileStreamSource to deliver them in that order. Built once per
-    * (JVM, sf) — the stream pre-exists in a real pipeline (same
-    * write-once rule as [[ensureMediaFiles]] / q45's bucketed tables),
-    * so st12 times the stateful sessionization drain, not fixture IO. */
-  private val sessionStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * customer dim — (key, new segment) files delivered in order at one
+    * file per trigger (batch 0: keys ≡0 mod 7 → MACHINERY; batch 1:
+    * keys ≡0 mod 5 → HOUSEHOLD). SCD2 history DEPENDS on batch
+    * boundaries by design (which batch closed a row is the recorded
+    * fact), so the fixture pins them exactly like st12/st24's arrival
+    * fixtures, and the oracle replays the same two waves in order. */
+  val ensureDimUpdateStream: Stager[String] = Stager("graft_st29") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val cust = Tables.load(s, d, "customer")
+    Stager.arrive(Seq(
+      Stager.oneFile(cust.filter(col("c_custkey") % 7 === 0)
+        .select(col("c_custkey").as("k"), lit("MACHINERY").as("new_seg")), inDir, "b0"),
+      Stager.oneFile(cust.filter(col("c_custkey") % 5 === 0)
+        .select(col("c_custkey").as("k"), lit("HOUSEHOLD").as("new_seg")), inDir, "b1")))
+    inDir
+  }
 
   /** st34's arrival fixture: the q83 hourly aggregate (user_id < 20,
-    * DECIMAL-exact sums) as 3 HOUR-range-ordered files, mtimes pinning
-    * FileStreamSource order — each (user, hour) row exists once
-    * globally, so hour-ordered files give every user in-order arrival
-    * with no sentinel (a user's last hour is its grid end). Built once
-    * per (JVM, sf), same write-once rule as [[ensureSessionStream]]. */
-  private val locfStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * DECIMAL-exact sums) as 3 HOUR-range-ordered files delivered in
+    * hour order — each (user, hour) row exists once globally, so
+    * hour-ordered files give every user in-order arrival with no
+    * sentinel (a user's last hour is its grid end). */
+  val ensureLocfStream: Stager[String] = Stager("graft_st34") { (s, d, tmp) =>
+    val hourUs = EventStream.HourMicros
+    val inDir = s"$tmp/in"
+    Tables.load(s, d, "events")
+      .filter(col("user_id") < 20)
+      .groupBy(col("user_id"), expr(s"ts DIV $hourUs").as("h"))
+      .agg(count(lit(1)).as("n_ev"),
+        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+          .cast("double").as("sum_v"))
+      .repartitionByRange(3, col("h"))
+      .write.mode("overwrite").parquet(inDir)
+    Stager.arrive(Stager.parts(inDir))
+    inDir
+  }
 
-  def ensureLocfStream(s: SparkSession, d: String): String =
-    locfStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st34")
-      val hourUs = EventStream.HourMicros
-      val inDir = new java.io.File(s"$tmp/in")
-      Tables.load(s, d, "events")
-        .filter(col("user_id") < 20)
-        .groupBy(col("user_id"), expr(s"ts DIV $hourUs").as("h"))
-        .agg(count(lit(1)).as("n_ev"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-            .cast("double").as("sum_v"))
-        .repartitionByRange(3, col("h"))
-        .write.mode("overwrite").parquet(inDir.getAbsolutePath)
-      val parts = inDir.listFiles().filter(_.getName.startsWith("part-"))
-      val now = System.currentTimeMillis()
-      parts.toSeq.sortBy(_.getName).zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(now - 60000 + i * 1000) }
-      inDir.getAbsolutePath
-    })
-
-  def ensureSessionStream(s: SparkSession, d: String): String =
-    sessionStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st12")
-      val events = Tables.load(s, d, "events")
-      val maxTs = events.agg(max(col("ts"))).head().getLong(0)
-      val inDir = new java.io.File(s"$tmp/in")
-      events.select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .repartitionByRange(3, col("ts"))
-        .write.mode("overwrite").parquet(inDir.getAbsolutePath)
-      val ranged = inDir.listFiles().filter(_.getName.startsWith("part-")).toSet
-      events.select(col("user_id")).distinct()
-        .select((-col("user_id") - 1).as("event_id"),
-          lit(maxTs + 24L * 3600 * 1000 * 1000).as("ts"), // +24 h in µs
-          col("user_id"), lit("flush").as("event_type"),
-          lit(0.0).as("value"), lit("").as("props"))
-        .coalesce(1).write.mode("append").parquet(inDir.getAbsolutePath)
-      val sentinel = inDir.listFiles()
-        .filter(f => f.getName.startsWith("part-") && !ranged.contains(f))
-      // mtime drives FileStreamSource order: range files in time order,
-      // sentinel flush last
-      val now = System.currentTimeMillis()
-      ranged.toSeq.sortBy(_.getName).zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(now - 60000 + i * 1000) }
-      sentinel.foreach(_.setLastModified(now))
-      inDir.getAbsolutePath
-    })
+  /** st12's arrival fixture: the events corpus as 3 time-range-ordered
+    * files plus a final per-user sentinel-flush file, delivered in that
+    * order. */
+  val ensureSessionStream: Stager[String] = Stager("graft_st12") { (s, d, tmp) =>
+    val events = Tables.load(s, d, "events")
+    val maxTs = events.agg(max(col("ts"))).head().getLong(0)
+    val inDir = s"$tmp/in"
+    events.select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartitionByRange(3, col("ts"))
+      .write.mode("overwrite").parquet(inDir)
+    val ranged = Stager.parts(inDir)
+    val sentinel = Stager.oneFile(events.select(col("user_id")).distinct()
+      .select((-col("user_id") - 1).as("event_id"),
+        lit(maxTs + 24L * 3600 * 1000 * 1000).as("ts"), // +24 h in µs
+        col("user_id"), lit("flush").as("event_type"),
+        lit(0.0).as("value"), lit("").as("props")), inDir, "flush")
+    Stager.arrive(ranged :+ sentinel)
+    inDir
+  }
 
   /** st24's arrival fixture: the events corpus as three deterministic
     * equal-width TIME-RANGE thirds arriving MIDDLE → NEWEST → OLDEST
     * (a backfill landing behind live traffic) plus a +24 h flush
-    * sentinel, mtimes pinning the batch order at one file per trigger.
+    * sentinel, delivered in that order at one file per trigger.
     * The tile is one map-side integer
     * expression per row — `((ts − min) · 3) div span` — engine-portable
     * (the oracle replays the identical arithmetic) and free of the
     * single-partition sort an ntile-over-total-order split funnels the
     * corpus through; the only global work is one min/max aggregate.
     * (repartitionByRange is still out: its range boundaries come from
-    * Spark-internal sampling the oracle cannot reproduce.) Built once
-    * per (JVM, sf) — write-once rule, the drain never mutates its
-    * input. */
-  private val lateAuditDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureLateAuditStream(s: SparkSession, d: String): String =
-    lateAuditDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st24")
-      val inDir = new java.io.File(s"$tmp/in")
-      val events = Tables.load(s, d, "events")
-      val mm = events.agg(min(col("ts")), max(col("ts"))).head()
-      val minTs = mm.getLong(0); val maxTs = mm.getLong(1)
-      val span = maxTs - minTs + 1
-      val tiled = events
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .withColumn("tile",
-          expr(s"((ts - ${minTs}L) * 3) div ${span}L").cast("int") + 1)
-      def partsOf(dir: java.io.File): Set[String] =
-        Option(dir.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
-          .filter(_.startsWith("part-"))
-      def stage(df: DataFrame): java.io.File = {
-        val before = partsOf(inDir)
-        df.coalesce(1).write.mode("append").parquet(inDir.getAbsolutePath)
-        val added = (partsOf(inDir) -- before).toSeq
-        require(added.size == 1, s"expected one staged file, got $added")
-        new java.io.File(inDir, added.head)
-      }
-      val fMid = stage(tiled.filter(col("tile") === 2).drop("tile"))
-      val fNew = stage(tiled.filter(col("tile") === 3).drop("tile"))
-      val fOld = stage(tiled.filter(col("tile") === 1).drop("tile"))
-      val fFlush = stage(events.sparkSession.range(1).select(
+    * Spark-internal sampling the oracle cannot reproduce.) */
+  val ensureLateAuditStream: Stager[String] = Stager("graft_st24") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val events = Tables.load(s, d, "events")
+    val mm = events.agg(min(col("ts")), max(col("ts"))).head()
+    val minTs = mm.getLong(0); val maxTs = mm.getLong(1)
+    val span = maxTs - minTs + 1
+    val tiled = events
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .withColumn("tile",
+        expr(s"((ts - ${minTs}L) * 3) div ${span}L").cast("int") + 1)
+    def tile(t: Int, name: String) =
+      Stager.oneFile(tiled.filter(col("tile") === t).drop("tile"), inDir, name)
+    Stager.arrive(Seq(tile(2, "b0_mid"), tile(3, "b1_new"), tile(1, "b2_old"),
+      Stager.oneFile(s.range(1).select(
         lit(-1L).as("event_id"),
         lit(maxTs + 24L * 3600 * 1000 * 1000).as("ts"),
         lit(-1L).as("user_id"), lit("flush").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props")))
-      val now = System.currentTimeMillis()
-      Seq(fMid, fNew, fOld, fFlush).zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(now - 60000 + i * 1000) }
-      inDir.getAbsolutePath
-    })
+        lit(0.0).as("value"), lit("").as("props")), inDir, "b3_flush")))
+    inDir
+  }
+
+  /** st39's supply-flow stream: lineitem pre-projected to
+    * (pk, sk, qty, price_c) and staged as 3 waves split by
+    * `l_orderkey % 3` (pure modulo — no sort of any kind), delivered
+    * in wave order. */
+  val ensureLineitemStream: Stager[String] = Stager("graft_st39") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val li = Tables.load(s, d, "lineitem")
+      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
+        round(col("l_quantity")).cast("long").as("qty"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_c"),
+        (col("l_orderkey") % 3).cast("int").as("tile"))
+    Stager.arrive((0 to 2).map(t => Stager.oneFile(
+      li.filter(col("tile") === t).select("pk", "sk", "qty", "price_c"), inDir, s"b$t")))
+    inDir
+  }
 
   /** st38's arrival fixture: the orders table staged as THREE
     * deterministic order-date thirds (the same engine-portable integer
     * tile arithmetic as [[ensureLateAuditStream]] — no global sort),
-    * each wave one parquet file, mtimes pinning the batch order. Rows
-    * carry (k, month) pre-derived so the drain joins and rolls up
-    * without re-parsing dates. Built once per (JVM, sf) — write-once
-    * rule; every run drains into its own versioned view. */
-  private val orderStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** st39's supply-flow stream: lineitem pre-projected to
-    * (pk, sk, qty, price_c) and staged as 3 waves split by
-    * `l_orderkey % 3` (pure modulo — no sort of any kind), mtimes
-    * pinning batch order. Write-once per (JVM, sf). */
-  private val lineitemStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureLineitemStream(s: SparkSession, d: String): String =
-    lineitemStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st39")
-      val inDir = new java.io.File(s"$tmp/in")
-      val li = Tables.load(s, d, "lineitem")
-        .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
-          round(col("l_quantity")).cast("long").as("qty"),
-          round(col("l_extendedprice") * 100).cast("long").as("price_c"),
-          (col("l_orderkey") % 3).cast("int").as("tile"))
-      def partsOf(dir: java.io.File): Set[String] =
-        Option(dir.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
-          .filter(_.startsWith("part-"))
-      def stage(df: DataFrame): java.io.File = {
-        val before = partsOf(inDir)
-        df.coalesce(1).write.mode("append").parquet(inDir.getAbsolutePath)
-        val added = (partsOf(inDir) -- before).toSeq
-        require(added.size == 1, s"expected one staged file, got $added")
-        new java.io.File(inDir, added.head)
-      }
-      val waves = (0 to 2).map(t =>
-        stage(li.filter(col("tile") === t).select("pk", "sk", "qty", "price_c")))
-      val now = System.currentTimeMillis()
-      waves.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(now - 60000 + i * 1000) }
-      inDir.getAbsolutePath
-    })
-
-  def ensureOrderStream(s: SparkSession, d: String): String =
-    orderStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st38")
-      val inDir = new java.io.File(s"$tmp/in")
-      val o = Tables.load(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          datediff(col("o_orderdate"), lit("1990-01-01")).cast("long").as("dd"))
-      val mm = o.agg(min(col("dd")), max(col("dd"))).head()
-      val minD = mm.getLong(0); val span = mm.getLong(1) - minD + 1
-      val tiled = o.withColumn("tile",
-        expr(s"((dd - ${minD}L) * 3) div ${span}L").cast("int") + 1)
-      def partsOf(dir: java.io.File): Set[String] =
-        Option(dir.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
-          .filter(_.startsWith("part-"))
-      def stage(df: DataFrame): java.io.File = {
-        val before = partsOf(inDir)
-        df.coalesce(1).write.mode("append").parquet(inDir.getAbsolutePath)
-        val added = (partsOf(inDir) -- before).toSeq
-        require(added.size == 1, s"expected one staged file, got $added")
-        new java.io.File(inDir, added.head)
-      }
-      val waves = (1 to 3).map(t =>
-        stage(tiled.filter(col("tile") === t).select("k", "month")))
-      val now = System.currentTimeMillis()
-      waves.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(now - 60000 + i * 1000) }
-      inDir.getAbsolutePath
-    })
+    * each wave one parquet file, delivered in date order. Rows carry
+    * (k, month) pre-derived so the drain joins and rolls up without
+    * re-parsing dates; every run drains into its own versioned view. */
+  val ensureOrderStream: Stager[String] = Stager("graft_st38") { (s, d, tmp) =>
+    val inDir = s"$tmp/in"
+    val o = Tables.load(s, d, "orders")
+      .select(col("o_orderkey").as("k"),
+        date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        datediff(col("o_orderdate"), lit("1990-01-01")).cast("long").as("dd"))
+    val mm = o.agg(min(col("dd")), max(col("dd"))).head()
+    val minD = mm.getLong(0); val span = mm.getLong(1) - minD + 1
+    val tiled = o.withColumn("tile",
+      expr(s"((dd - ${minD}L) * 3) div ${span}L").cast("int") + 1)
+    Stager.arrive((1 to 3).map(t => Stager.oneFile(
+      tiled.filter(col("tile") === t).select("k", "month"), inDir, s"b$t")))
+    inDir
+  }
 
   /** st07/st13's arrival fixture: the documents corpus staged as 4
     * parquet files, streamed one per micro-batch so the store merges 4
-    * genuine incremental deliveries. Built once per (JVM, sf) — the
-    * same write-once rule as [[ensureMediaFiles]]: the incoming corpus
-    * pre-exists in a real pipeline, and the drain never MUTATES its
-    * input (only the per-run store does), so the queries time the
-    * drain/purge, not the staging write. Merge order is associative
+    * genuine incremental deliveries. The drain never MUTATES its input
+    * (only the per-run store does), and merge order is associative
     * (DedupStore's contract), so sharing the files across runs cannot
     * change results. */
-  private val dedupStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureDedupStreamInput(s: SparkSession, d: String): String =
-    dedupStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st07in")
-      Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+  val ensureDedupStreamInput: Stager[String] = Stager("graft_st07in") { (s, d, tmp) =>
+    Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** [[ensureDedupStreamInput]]'s file schema: `(doc_id, text)`. */
   val dedupStreamSchema: org.apache.spark.sql.types.StructType =
@@ -681,104 +449,75 @@ object StreamMediaQueries {
     * DSv2 batch writes (even doc_ids, then odd) into a per-(JVM, sf)
     * store, returning `(storeDir, cursor)` where the cursor names the
     * version after delivery one — the sync point st16's change feed
-    * reads from. Built once per (JVM, sf) under the usual write-once
-    * rule: lookup and changedSince are pure reads (neither mutates the
-    * store), so the build is setup and the queries time the
-    * bucket-/cursor-pruned READS — the operation a serving or
-    * downstream-sync consumer repeats at scale. */
-  private val batchStores =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  def ensureBatchStore(s: SparkSession, d: String): (String, String) =
-    batchStores.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st15s")
-      val store = s"$tmp/store"
-      val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-        .write.format("graft.sources.DedupStoreSink")
-        .option("path", store).option("nBuckets", "16")
-        .mode("append").save()
-      val cursor = graft.streaming.DedupStore.currentVersion(store).getOrElse(
-        throw new IllegalStateException(s"batch write committed nothing at $store"))
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-        .write.format("graft.sources.DedupStoreSink")
-        .option("path", store).mode("append").save()
-      (store, cursor)
-    })
+    * reads from. Lookup and changedSince are pure reads (neither
+    * mutates the store), so the queries time the bucket-/cursor-pruned
+    * READS — the operation a serving or downstream-sync consumer
+    * repeats at scale. */
+  val ensureBatchStore: Stager[(String, String)] = Stager("graft_st15s") { (s, d, tmp) =>
+    val store = s"$tmp/store"
+    val docs = Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
+    docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+      .write.format("graft.sources.DedupStoreSink")
+      .option("path", store).option("nBuckets", "16")
+      .mode("append").save()
+    val cursor = graft.streaming.DedupStore.currentVersion(store).getOrElse(
+      throw new IllegalStateException(s"batch write committed nothing at $store"))
+    docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+      .write.format("graft.sources.DedupStoreSink")
+      .option("path", store).mode("append").save()
+    (store, cursor)
+  }
 
   /** st17's staged query stream: the first 20 embedding vectors as 4
     * parquet files (drained two per trigger — two multi-query
-    * micro-batches). Immutable input under the write-once
-    * rule: query traffic pre-exists in a serving deployment, and the
-    * probe never mutates it — the timed operation is the per-batch
-    * pruned probe of the (also pre-built) s08 index. */
-  private val queryStreamDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    * micro-batches). Query traffic pre-exists in a serving deployment,
+    * and the probe never mutates it — the timed operation is the
+    * per-batch pruned probe of the (also pre-built) s08 index. */
+  val ensureQueryStream: Stager[String] = Stager("graft_st17in") { (s, d, tmp) =>
+    Tables.load(s, d, "embeddings").filter(col("vec_id") < 20)
+      .select(col("vec_id"), col("embedding"))
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
-  def ensureQueryStream(s: SparkSession, d: String): String =
-    queryStreamDirs.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st17in")
-      Tables.load(s, d, "embeddings").filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+  /** st21's TRAINED base index (evens, s02's training regime): codebook
+    * training is the amortized build operation — the thing st21 times
+    * is streaming append + probe, so each run COPIES this immutable
+    * base into its own temp dir (a fresh mutable index, appends stay
+    * honest) instead of re-running Lloyd iterations inside the timed
+    * body. */
+  val ensureBaseIvfIndex: Stager[String] = Stager("graft_st21base") { (s, d, tmp) =>
+    Similarity.buildIvfIndex(
+      Tables.load(s, d, "embeddings").select("vec_id", "embedding")
+        .filter(pmod(col("vec_id"), lit(2)) === 0),
+      s"$tmp/index", nCells = 16, trainIters = 2)
+    s"$tmp/index"
+  }
 
   /** st21's arrival fixture: the ODD-vec_id embeddings staged as 4
     * parquet files, streamed two per micro-batch into a per-RUN fresh
     * index (the append is the timed operation, so the input is
-    * immutable but the index is not shared). Built once per (JVM, sf)
-    * under the write-once rule. */
-  private val oddVectorStreams =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** st21's TRAINED base index (evens, s02's training regime), staged
-    * once per (JVM, sf) under the write-once rule: codebook training is
-    * the amortized build operation — the thing st21 times is streaming
-    * append + probe, so each run COPIES this immutable base into its
-    * own temp dir (a fresh mutable index, appends stay honest) instead
-    * of re-running Lloyd iterations inside the timed body. */
-  private val baseIvfIndexes =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureBaseIvfIndex(s: SparkSession, d: String): String =
-    baseIvfIndexes.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st21base")
-      Similarity.buildIvfIndex(
-        Tables.load(s, d, "embeddings").select("vec_id", "embedding")
-          .filter(pmod(col("vec_id"), lit(2)) === 0),
-        s"$tmp/index", nCells = 16, trainIters = 2)
-      s"$tmp/index"
-    })
-
-  def ensureOddVectorStream(s: SparkSession, d: String): String =
-    oddVectorStreams.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st21in")
-      Tables.load(s, d, "embeddings")
-        .filter(pmod(col("vec_id"), lit(2)) === 1)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * immutable but the index is not shared). */
+  val ensureOddVectorStream: Stager[String] = Stager("graft_st21in") { (s, d, tmp) =>
+    Tables.load(s, d, "embeddings")
+      .filter(pmod(col("vec_id"), lit(2)) === 1)
+      .select(col("vec_id"), col("embedding"))
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   /** st26's arrival fixture: d13's "new 20%" (LCG bucket ≥ 8) split
-    * into 4 files drained as two micro-batches. Built once per
-    * (JVM, sf) — arrival data is pre-existing input, not query work. */
-  private val newDocStreams =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  def ensureNewDocStream(s: SparkSession, d: String): String =
-    newDocStreams.getOrElseUpdate(d, {
-      val tmp = graft.TempDirs.create("graft_st26in")
-      Tables.load(s, d, "documents")
-        .filter(graft.ops.TrainingPrep.hashBucket(col("doc_id"), 10) >= 8)
-        .select(col("doc_id"), col("text"))
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$tmp/in")
-      s"$tmp/in"
-    })
+    * into 4 files drained as two micro-batches. */
+  val ensureNewDocStream: Stager[String] = Stager("graft_st26in") { (s, d, tmp) =>
+    Tables.load(s, d, "documents")
+      .filter(graft.ops.TrainingPrep.hashBucket(col("doc_id"), 10) >= 8)
+      .select(col("doc_id"), col("text"))
+      .repartition(4)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    s"$tmp/in"
+  }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
@@ -993,7 +732,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
         val out = graft.TempDirs.create("graft_st12o")
         // per-user GroupState is the highest-cardinality merging state
@@ -1047,7 +786,7 @@ object StreamMediaQueries {
         val inDir = ensureLateAuditStream(s, d)
         val out = graft.TempDirs.create("graft_st24o")
         val stream = EventStream.readStaged(s, EventStream.schema,
-            s"$inDir/part-*", perTrigger = 1)
+            s"$inDir/*.parquet", perTrigger = 1)
           .withColumn("event_time", Tables.eventTime(col("ts")))
         val drained = EventStream.runToFiles(s,
           EventStream.hourlyCounts(stream), out)
@@ -2440,7 +2179,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st35o")
@@ -2479,7 +2218,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st36o")
@@ -2523,7 +2262,7 @@ object StreamMediaQueries {
           .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
         val stream = EventStream.readStaged(s, StructType(Seq(
             StructField("k", LongType), StructField("month", StringType))),
-            s"$in/part-*")
+            s"$in/*.parquet")
         val emptyView = rollup(li.limit(0)
           .withColumn("month", lit("")))
         graft.streaming.VersionedView.run(
@@ -2556,7 +2295,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st37o")
@@ -2655,7 +2394,7 @@ object StreamMediaQueries {
         val stream = EventStream.readStaged(s, StructType(Seq(
             StructField("pk", LongType), StructField("sk", LongType),
             StructField("qty", LongType), StructField("price_c", LongType))),
-            s"$in/part-*")
+            s"$in/*.parquet")
         val emptyState = fold(s.range(0).select(
           col("id").as("pk"), col("id").as("sk"),
           col("id").as("cost_c"), col("id").as("avail")))
@@ -2713,7 +2452,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st40o")
@@ -2775,7 +2514,7 @@ object StreamMediaQueries {
         val stream = EventStream.readStaged(s, StructType(Seq(
             StructField("pk", LongType), StructField("sk", LongType),
             StructField("qty", LongType), StructField("price_c", LongType))),
-            s"$in/part-*")
+            s"$in/*.parquet")
         val emptyState = s.range(0).select(
           col("id").cast("string").as("o_orderpriority"),
           col("id").as("n_pairs"), col("id").as("sum_price_c"))
@@ -2824,7 +2563,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st42o")
@@ -2950,7 +2689,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val out = graft.TempDirs.create("graft_st45o")
@@ -3102,7 +2841,7 @@ object StreamMediaQueries {
             (max(cents) - min(cents) + 1L).as("span")).head()
         val (mn, span) = (mm.getLong(0), mm.getLong(1))
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
           .toDF()
@@ -3196,7 +2935,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/part-*")
+        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
           .as[EventStream.Event]
           .filter(_.event_type != "flush")
         val pattern = Seq(
@@ -3299,7 +3038,7 @@ object StreamMediaQueries {
         val inDir = ensureSessionStream(s, d)
         EventStream.withRocksDBState(s) {
           val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*")
+              s"$inDir/*.parquet")
             .as[EventStream.Event]
             .filter(_.event_type != "flush")
           val out = graft.TempDirs.create("graft_st51o")
@@ -3469,7 +3208,7 @@ object StreamMediaQueries {
         val inDir = ensureSessionStream(s, d)
         EventStream.withRocksDBState(s) {
           val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*")
+              s"$inDir/*.parquet")
             .as[EventStream.Event]
             .filter(_.event_type != "flush")
           val out = graft.TempDirs.create("graft_st55o")

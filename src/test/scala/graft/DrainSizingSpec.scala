@@ -8,8 +8,10 @@ import graft.streaming.{EventStream, VersionedView}
   * per-drain knob ([[Confs.stateParts]]), scoped for the drain's
   * lifetime and restored afterwards — and the knob must actually reach
   * the state store, not just the session conf; the staged reader's
-  * files-per-trigger reaches the batch count; a drain root holds its
-  * sink and checkpoint; and a memory drain leaves no session state. */
+  * files-per-trigger reaches the batch count; a staged fixture's
+  * arrival order is the order [[Stager.arrive]] stamps; a drain root
+  * holds its sink and checkpoint; and a memory drain leaves no session
+  * state. */
 class DrainSizingSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -105,6 +107,29 @@ class DrainSizingSpec extends SparkSpec {
       .isDirectory)
     assert(new java.io.File(EventStream.checkpointDir(byDefault), "offsets")
       .isDirectory)
+  }
+
+  test("Stager.arrive sets delivery order, whatever the file names") {
+    import spark.implicits._
+    val in = s"${TempDirs.create("graft_arrive")}/in"
+    // file names and write order both run opposite to the arrival
+    // order k = 0, 1, 2 that arrive stamps
+    val written = Seq("a" -> 2L, "b" -> 1L, "c" -> 0L).map { case (name, k) =>
+      Stager.oneFile(Seq(k).toDF("k"), in, name)
+    }
+    assert(new java.io.File(in).list().toSet == Set("a.parquet", "b.parquet", "c.parquet"))
+    Stager.arrive(written.reverse)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
+    EventStream.drain(spark,
+      EventStream.readStaged(spark,
+          org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"),
+          s"$in/*.parquet", perTrigger = 1)
+        .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          seen.add(id -> batch.as[Long].collect().toSeq): Unit
+        }, None)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq.sortBy(_._1) ==
+      Seq(0L -> Seq(0L), 1L -> Seq(1L), 2L -> Seq(2L)))
   }
 
   test("runToMemory drops its sink's temp view; the frame stays readable") {

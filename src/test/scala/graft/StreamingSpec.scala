@@ -119,7 +119,7 @@ class StreamingSpec extends SparkSpec {
       val inDir = graft.queries.StreamMediaQueries.ensureSessionStream(spark, sf)
       val stream = spark.readStream.schema(EventStream.schema)
         .option("maxFilesPerTrigger", "1")
-        .parquet(s"$inDir/part-*")
+        .parquet(s"$inDir/*.parquet")
         .as[EventStream.Event]
       val out = java.nio.file.Files.createTempDirectory("graft_rocksp").toString
       EventStream.runToFiles(spark,
