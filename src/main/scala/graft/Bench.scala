@@ -52,49 +52,40 @@ object Bench {
     // that checkpoint, (c) a stream-stream interval join, and (d)
     // dropDuplicatesWithinWatermark + session_window — one tiny batch
     // each, so per-query timings measure the operator, not first-touch
-    import org.apache.spark.sql.types.{LongType, StructField => SF, StructType => ST, StringType, DoubleType}
-    val evSchema = graft.streaming.EventStream.schema
-    val tsDir = graft.queries.StreamMediaQueries.ensureTimerSessionStream(spark, sfDir)
-    graft.streaming.EventStream.withRocksDBState(spark) {
+    import graft.streaming.EventStream
+    val ts = graft.queries.StreamMediaQueries.ensureTimerSessionStream(spark, sfDir)
+    // one batch: every staged file in the first trigger
+    def tiny = ts.read(spark, perTrigger = Int.MaxValue)
+    EventStream.withRocksDBState(spark) {
       import spark.implicits._
-      val tiny = spark.readStream.schema(evSchema)
-        .parquet(s"$tsDir/*.parquet") // one batch: no maxFilesPerTrigger
-        .filter(col("user_id") < 5 || col("user_id") < 0)
-        .as[graft.streaming.EventStream.Event]
       val wdir = graft.TempDirs.create("graft_warm_tws")
-      graft.streaming.EventStream.runToFiles(spark,
-        graft.streaming.EventStream.timerSessionStream(tiny,
-          graft.streaming.EventStream.SessionGapMicros).toDF(),
+      EventStream.runToFiles(spark,
+        EventStream.timerSessionStream(
+          tiny.filter(col("user_id") < 5 || col("user_id") < 0).as[EventStream.Event],
+          EventStream.SessionGapMicros).toDF(),
         wdir).count()
-      spark.read.format("statestore")
-        .option("path", graft.streaming.EventStream.checkpointDir(wdir))
-        .option("stateVarName", "sess")
-        .load().count()
+      EventStream.readState(spark, wdir, "stateVarName" -> "sess").count()
     }
-    val wj = graft.TempDirs.create("graft_warm_join")
-    def wside(ty: String, p: String) = spark.readStream.schema(evSchema)
-      .parquet(s"$tsDir/*.parquet")
+    def wside(ty: String, p: String) = tiny
       .filter((col("event_type") === ty && col("user_id") < 5) || col("user_id") < 0)
       .select(col("user_id").as(s"${p}_user"),
         graft.Tables.eventTime(col("ts")).as(s"${p}_time"))
       .withWatermark(s"${p}_time", "2 hours")
-    graft.streaming.EventStream.runToFiles(spark,
+    EventStream.runToFiles(spark,
       wside("view", "v").join(wside("purchase", "p"),
         col("v_user") === col("p_user") &&
           col("p_time") >= col("v_time") &&
-          col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"), "full_outer"),
-      wj).count()
-    val wd = graft.TempDirs.create("graft_warm_dedup")
-    graft.streaming.EventStream.runToFiles(spark,
-      spark.readStream.schema(evSchema).parquet(s"$tsDir/*.parquet")
-        .filter(col("user_id") < 5)
+          col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"), "full_outer")
+    ).count()
+    EventStream.runToFiles(spark,
+      tiny.filter(col("user_id") < 5)
         .withColumn("event_time", graft.Tables.eventTime(col("ts")))
         .withWatermark("event_time", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(col("user_id"),
           session_window(col("event_time"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n")).drop("w"),
-      wd).count()
+        .agg(count(lit(1)).as("n")).drop("w")
+    ).count()
   }
 
   def main(args: Array[String]): Unit = {

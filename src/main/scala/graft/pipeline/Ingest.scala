@@ -21,9 +21,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Two execution modes:
   *  - [[ingest]]: driver-side loop, byte-parity with the reference (the
   *    realistic mode for a 10^4-row API).
-  *  - [[ingestDistributed]]: the 100 TB-scale path — pages fan out across
-  *    executors via `spark.range(numPages)` + `mapPartitions`, so ingestion
-  *    bandwidth scales with the cluster instead of the driver NIC.
+  *  - [[ingestDistributed]]: the 100 TB-scale path — contiguous page
+  *    slices fan out across executors, so ingestion bandwidth scales with
+  *    the cluster instead of the driver NIC.
+  * Both distributed paths (this one and `sources.BreweryDataSource`)
+  * turn their page slices into rows through [[pageRows]].
   */
 object Ingest {
 
@@ -82,6 +84,19 @@ object Ingest {
       else v
     }.mkString(",")
 
+  /** The one fan-out core: the pages of `pages`, fetched in order, as
+    * rows of their `fields` values (null where a record lacks one).
+    * `fetched(n)` runs once page n has been fetched, before its rows are
+    * consumed. Runs on executors in both distributed paths. */
+  def pageRows(fetcher: Fetcher, pages: Iterator[Int], perPage: Int,
+               fields: Seq[String] = header,
+               fetched: Int => Unit = _ => ()): Iterator[Seq[String]] =
+    pages.flatMap { n =>
+      val records = fetcher.page(n, perPage)
+      fetched(n)
+      records.iterator.map(r => fields.map(k => r.getOrElse(k, null)))
+    }
+
   /** Driver-side ingest (reference-parity). Returns the bronze run dir. */
   def ingest(spark: SparkSession, fetcher: Fetcher, bronzeDir: String,
              runTs: Instant, perPage: Int = PerPage,
@@ -109,7 +124,8 @@ object Ingest {
 
   /** Distributed ingest: page fan-out over executors, single partitioned
     * CSV dataset out (still header-bearing, glob-compatible with the
-    * silver reader). */
+    * silver reader). Each task fetches one contiguous slice of pages, so
+    * no shuffle runs before the first fetch. */
   def ingestDistributed(spark: SparkSession, fetcher: Fetcher,
                         bronzeDir: String, runTs: Instant,
                         perPage: Int = PerPage,
@@ -119,15 +135,13 @@ object Ingest {
     val runDir = new Path(bronzeDir, Layers.runFolderName(runTs)).toString
     val parallelism = math.min(pages, spark.sparkContext.defaultParallelism)
     val pagesFetched = spark.sparkContext.longAccumulator("ingest_pages_fetched")
-    val rows: org.apache.spark.rdd.RDD[Row] = spark.range(1, pages + 1L)
-      .repartition(math.max(parallelism, 1))
-      .rdd.mapPartitions { pageNums =>
-        pageNums.flatMap { n =>
-          val fetched = fetcher.page(n.toInt, perPage)
+    val rows: org.apache.spark.rdd.RDD[Row] = spark.sparkContext
+      .parallelize(1 to pages, math.max(parallelism, 1))
+      .mapPartitions { slice =>
+        pageRows(fetcher, slice, perPage, fetched = { n =>
           pagesFetched.add(1)
-          progress.pageFetched(n.toInt, total)
-          fetched.map(r => Row.fromSeq(header.map(k => r.getOrElse(k, null))))
-        }
+          progress.pageFetched(n, total)
+        }).map(Row.fromSeq)
       }
     spark.createDataFrame(rows, schema)
       .write.option("header", true)

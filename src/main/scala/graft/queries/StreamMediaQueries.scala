@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Stager, Tables}
 import graft.ops.{Multimodal, Similarity}
 import graft.streaming.EventStream
+import graft.streaming.EventStream.Arrivals
 
 /** Streaming + multimodal query surface. st01/st02 run the real
   * Structured Streaming / typed-Dataset engines and still have DuckDB
@@ -42,43 +43,43 @@ object StreamMediaQueries {
 
   /** st27's arrival fixture: (doc_id, text, source) staged as 4 files
     * — the document crawl as it lands. */
-  val ensureDocCardStream: Stager[String] = Stager("graft_st27in") { (s, d, tmp) =>
+  val ensureDocCardStream: Stager[Arrivals] = Stager("graft_st27in") { (s, d, tmp) =>
     Tables.load(s, d, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st43's arrival fixture: the lineitem facts as 3 files (hash split
     * — the gate's metrics are algebraic sums, so arrival order is
     * immaterial). */
-  val ensureGateStream: Stager[String] = Stager("graft_st43in") { (s, d, tmp) =>
+  val ensureGateStream: Stager[Arrivals] = Stager("graft_st43in") { (s, d, tmp) =>
     Tables.load(s, d, "lineitem")
       .repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st52's staging: the customer dim as 3 unordered parquet tiles —
     * k-anonymity class sizes are algebraic counts, so no arrival
     * contract is needed (the [[ensureGateStream]] pattern). */
-  val ensureCustomerStream: Stager[String] = Stager("graft_st52in") { (s, d, tmp) =>
+  val ensureCustomerStream: Stager[Arrivals] = Stager("graft_st52in") { (s, d, tmp) =>
     Tables.load(s, d, "customer")
       .repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st53's staging: the orders fact (custkey + orderdate only) as 3
     * unordered tiles — bitmap OR is commutative, so arrival order is
     * irrelevant. */
-  val ensureOrderFactStream: Stager[String] = Stager("graft_st53in") { (s, d, tmp) =>
+  val ensureOrderFactStream: Stager[Arrivals] = Stager("graft_st53in") { (s, d, tmp) =>
     Tables.load(s, d, "orders")
       .select(col("o_custkey"), col("o_orderdate"))
       .repartition(3)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st54's arrival fixture: the events corpus as 3 ts-range tiles
@@ -91,7 +92,7 @@ object StreamMediaQueries {
     * +24 h watermark, the second gives the engine a batch to fire every
     * real user's final-session timer in — no reliance on trailing
     * no-data micro-batches. */
-  val ensureTimerSessionStream: Stager[String] = Stager("graft_st54") { (s, d, tmp) =>
+  val ensureTimerSessionStream: Stager[Arrivals] = Stager("graft_st54") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val events = Tables.load(s, d, "events")
     val maxTs = events.agg(max(col("ts"))).head().getLong(0)
@@ -99,7 +100,7 @@ object StreamMediaQueries {
       .repartitionByRange(3, col("ts"))
       .write.mode("overwrite").parquet(inDir)
     finishEventTiles(s, inDir, Stager.parts(inDir), maxTs)
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** Shared tail of the ts-range tiled event fixtures
@@ -130,7 +131,7 @@ object StreamMediaQueries {
     * batch-start watermark (tileMax − 1 h), so it is neither dropped
     * as late nor past the dedup key's state retention (ts + 1 h).
     * Plus st54's two sentinel pushers and the same arrival order. */
-  val ensureDupEventStream: Stager[String] = Stager("graft_st69") { (s, d, tmp) =>
+  val ensureDupEventStream: Stager[Arrivals] = Stager("graft_st69") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val events = Tables.load(s, d, "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -156,7 +157,7 @@ object StreamMediaQueries {
     }
     tiled.unpersist()
     finishEventTiles(s, inDir, tiles, maxTs)
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st72's two-feed fixture: the events corpus split by user parity
@@ -171,29 +172,29 @@ object StreamMediaQueries {
     * (StreamingSpec proves exactly that). Each feed carries its own
     * two sentinel pushers at the global maxTs: a feed whose clock
     * stops early would hold the min back forever. */
-  val ensureUnionFeeds: Stager[(String, String)] = Stager("graft_st72") { (s, d, tmp) =>
+  val ensureUnionFeeds: Stager[(Arrivals, Arrivals)] = Stager("graft_st72") { (s, d, tmp) =>
     val events = Tables.load(s, d, "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     val maxTs = events.agg(max(col("ts"))).head().getLong(0)
     def feed(name: String, cond: org.apache.spark.sql.Column,
-             nTiles: Int): String = {
+             nTiles: Int): Arrivals = {
       val inDir = s"$tmp/$name"
       events.filter(cond)
         .repartitionByRange(nTiles, col("ts"))
         .write.mode("overwrite").parquet(inDir)
       finishEventTiles(s, inDir, Stager.parts(inDir), maxTs)
-      inDir
+      Arrivals.of(s, inDir)
     }
     (feed("even", col("user_id") % 2 === 0, 3),
       feed("odd", col("user_id") % 2 =!= 0, 1))
   }
 
-  /** st63's handoff fixture: the events corpus cut at the FIRST
-    * ts-range boundary — the earliest tile lands in `$tmp/batch` (the
-    * backfill's input), the later two tiles plus st54's two watermark
-    * pushers land in `$tmp/in` (the stream the new job drains), in
+  /** st63's handoff fixture, `(batchDir, stream)`: the events corpus
+    * cut at the FIRST ts-range boundary — the earliest tile lands in
+    * `batchDir` (the backfill's input), the later two tiles plus st54's
+    * two watermark pushers are the stream the new job drains, in
     * [[ensureTimerSessionStream]]'s arrival order. */
-  val ensureBootstrapSessionStream: Stager[String] = Stager("graft_st63") { (s, d, tmp) =>
+  val ensureBootstrapSessionStream: Stager[(String, Arrivals)] = Stager("graft_st63") { (s, d, tmp) =>
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val batchDir = new java.io.File(s"$tmp/batch"); batchDir.mkdirs()
     val stage = s"$tmp/stage"
@@ -213,7 +214,7 @@ object StreamMediaQueries {
       dst
     }
     finishEventTiles(s, inDir.getPath, streamed, maxTs)
-    tmp
+    (batchDir.getPath, Arrivals.of(s, inDir.getPath))
   }
 
   /** m09's staging: (media_id, payload) parquet mixing all three decode
@@ -256,8 +257,8 @@ object StreamMediaQueries {
 
   /** Stages `iv` as 3 arrival-key-range waves plus a per-supplier
     * sentinel flush wave (lo = hi = Long.MaxValue), arriving in that
-    * order; returns the input dir. */
-  private def stageIntervalWaves(iv: DataFrame, inDir: String): String = {
+    * order. */
+  private def stageIntervalWaves(s: SparkSession, iv: DataFrame, inDir: String): Arrivals = {
     val mm = iv.agg(min(col("arr")).as("mn"), max(col("arr")).as("mx")).head()
     val (mn, mx) = (mm.getLong(0), mm.getLong(1))
     val span = math.max(mx - mn + 1, 1L)
@@ -270,15 +271,15 @@ object StreamMediaQueries {
         lit(Long.MaxValue).as("hi")), inDir, "b3_flush")
     iv.unpersist()
     Stager.arrive(waves :+ sentinel)
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st47's arrival fixture: q141's intervals as 3 lo-VALUE-range waves
     * plus the sentinel flush wave. Value-range tiling (not rank tiling)
     * means equal-lo rows can never straddle a batch boundary out of
     * order — the arrival contract the sweep-line fold needs. */
-  val ensureIntervalStream: Stager[String] = Stager("graft_st47") { (s, d, tmp) =>
-    stageIntervalWaves(supplierIntervals(s, d, lo => lo), s"$tmp/in")
+  val ensureIntervalStream: Stager[Arrivals] = Stager("graft_st47") { (s, d, tmp) =>
+    stageIntervalWaves(s, supplierIntervals(s, d, lo => lo), s"$tmp/in")
   }
 
   /** st50's arrival fixture: the SAME intervals as st47, but tiled by a
@@ -291,10 +292,10 @@ object StreamMediaQueries {
     * last. */
   private[graft] val st50SlackDays = 3L
 
-  val ensureIntervalStreamJittered: Stager[String] = Stager("graft_st50") { (s, d, tmp) =>
+  val ensureIntervalStreamJittered: Stager[Arrivals] = Stager("graft_st50") { (s, d, tmp) =>
     val jitter = pmod(col("sk") * 1315423911L + col("lo") * 2654435761L +
       col("hi") * 97L, lit(st50SlackDays))
-    stageIntervalWaves(supplierIntervals(s, d, lo => lo + jitter), s"$tmp/in")
+    stageIntervalWaves(s, supplierIntervals(s, d, lo => lo + jitter), s"$tmp/in")
   }
 
   /** st29's arrival fixture: two dimension-update batches against the
@@ -304,7 +305,7 @@ object StreamMediaQueries {
     * boundaries by design (which batch closed a row is the recorded
     * fact), so the fixture pins them exactly like st12/st24's arrival
     * fixtures, and the oracle replays the same two waves in order. */
-  val ensureDimUpdateStream: Stager[String] = Stager("graft_st29") { (s, d, tmp) =>
+  val ensureDimUpdateStream: Stager[Arrivals] = Stager("graft_st29") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val cust = Tables.load(s, d, "customer")
     Stager.arrive(Seq(
@@ -312,7 +313,7 @@ object StreamMediaQueries {
         .select(col("c_custkey").as("k"), lit("MACHINERY").as("new_seg")), inDir, "b0"),
       Stager.oneFile(cust.filter(col("c_custkey") % 5 === 0)
         .select(col("c_custkey").as("k"), lit("HOUSEHOLD").as("new_seg")), inDir, "b1")))
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st34's arrival fixture: the q83 hourly aggregate (user_id < 20,
@@ -320,7 +321,7 @@ object StreamMediaQueries {
     * hour order — each (user, hour) row exists once globally, so
     * hour-ordered files give every user in-order arrival with no
     * sentinel (a user's last hour is its grid end). */
-  val ensureLocfStream: Stager[String] = Stager("graft_st34") { (s, d, tmp) =>
+  val ensureLocfStream: Stager[Arrivals] = Stager("graft_st34") { (s, d, tmp) =>
     val hourUs = EventStream.HourMicros
     val inDir = s"$tmp/in"
     Tables.load(s, d, "events")
@@ -332,13 +333,13 @@ object StreamMediaQueries {
       .repartitionByRange(3, col("h"))
       .write.mode("overwrite").parquet(inDir)
     Stager.arrive(Stager.parts(inDir))
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st12's arrival fixture: the events corpus as 3 time-range-ordered
     * files plus a final per-user sentinel-flush file, delivered in that
     * order. */
-  val ensureSessionStream: Stager[String] = Stager("graft_st12") { (s, d, tmp) =>
+  val ensureSessionStream: Stager[Arrivals] = Stager("graft_st12") { (s, d, tmp) =>
     val events = Tables.load(s, d, "events")
     val maxTs = events.agg(max(col("ts"))).head().getLong(0)
     val inDir = s"$tmp/in"
@@ -352,7 +353,15 @@ object StreamMediaQueries {
         col("user_id"), lit("flush").as("event_type"),
         lit(0.0).as("value"), lit("").as("props")), inDir, "flush")
     Stager.arrive(ranged :+ sentinel)
-    inDir
+    Arrivals.of(s, inDir)
+  }
+
+  /** The ordered-session faces' input: [[ensureSessionStream]]'s
+    * arrivals as typed events, sentinel flushes dropped. */
+  private def sessionEvents(s: SparkSession, d: String): Dataset[EventStream.Event] = {
+    import s.implicits._
+    ensureSessionStream(s, d).read(s).as[EventStream.Event]
+      .filter(_.event_type != "flush")
   }
 
   /** st24's arrival fixture: the events corpus as three deterministic
@@ -366,7 +375,7 @@ object StreamMediaQueries {
     * corpus through; the only global work is one min/max aggregate.
     * (repartitionByRange is still out: its range boundaries come from
     * Spark-internal sampling the oracle cannot reproduce.) */
-  val ensureLateAuditStream: Stager[String] = Stager("graft_st24") { (s, d, tmp) =>
+  val ensureLateAuditStream: Stager[Arrivals] = Stager("graft_st24") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val events = Tables.load(s, d, "events")
     val mm = events.agg(min(col("ts")), max(col("ts"))).head()
@@ -384,14 +393,14 @@ object StreamMediaQueries {
         lit(maxTs + 24L * 3600 * 1000 * 1000).as("ts"),
         lit(-1L).as("user_id"), lit("flush").as("event_type"),
         lit(0.0).as("value"), lit("").as("props")), inDir, "b3_flush")))
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st39's supply-flow stream: lineitem pre-projected to
     * (pk, sk, qty, price_c) and staged as 3 waves split by
     * `l_orderkey % 3` (pure modulo — no sort of any kind), delivered
     * in wave order. */
-  val ensureLineitemStream: Stager[String] = Stager("graft_st39") { (s, d, tmp) =>
+  val ensureLineitemStream: Stager[Arrivals] = Stager("graft_st39") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val li = Tables.load(s, d, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
@@ -400,7 +409,7 @@ object StreamMediaQueries {
         (col("l_orderkey") % 3).cast("int").as("tile"))
     Stager.arrive((0 to 2).map(t => Stager.oneFile(
       li.filter(col("tile") === t).select("pk", "sk", "qty", "price_c"), inDir, s"b$t")))
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st38's arrival fixture: the orders table staged as THREE
@@ -409,7 +418,7 @@ object StreamMediaQueries {
     * each wave one parquet file, delivered in date order. Rows carry
     * (k, month) pre-derived so the drain joins and rolls up without
     * re-parsing dates; every run drains into its own versioned view. */
-  val ensureOrderStream: Stager[String] = Stager("graft_st38") { (s, d, tmp) =>
+  val ensureOrderStream: Stager[Arrivals] = Stager("graft_st38") { (s, d, tmp) =>
     val inDir = s"$tmp/in"
     val o = Tables.load(s, d, "orders")
       .select(col("o_orderkey").as("k"),
@@ -421,7 +430,7 @@ object StreamMediaQueries {
       expr(s"((dd - ${minD}L) * 3) div ${span}L").cast("int") + 1)
     Stager.arrive((1 to 3).map(t => Stager.oneFile(
       tiled.filter(col("tile") === t).select("k", "month"), inDir, s"b$t")))
-    inDir
+    Arrivals.of(s, inDir)
   }
 
   /** st07/st13's arrival fixture: the documents corpus staged as 4
@@ -430,20 +439,12 @@ object StreamMediaQueries {
     * (only the per-run store does), and merge order is associative
     * (DedupStore's contract), so sharing the files across runs cannot
     * change results. */
-  val ensureDedupStreamInput: Stager[String] = Stager("graft_st07in") { (s, d, tmp) =>
+  val ensureDedupStreamInput: Stager[Arrivals] = Stager("graft_st07in") { (s, d, tmp) =>
     Tables.load(s, d, "documents").select(col("doc_id"), col("text"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
-
-  /** [[ensureDedupStreamInput]]'s file schema: `(doc_id, text)`. */
-  val dedupStreamSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
 
   /** st15/st16's store fixture: the documents corpus delivered as TWO
     * DSv2 batch writes (even doc_ids, then odd) into a per-(JVM, sf)
@@ -473,12 +474,12 @@ object StreamMediaQueries {
     * micro-batches). Query traffic pre-exists in a serving deployment,
     * and the probe never mutates it — the timed operation is the
     * per-batch pruned probe of the (also pre-built) s08 index. */
-  val ensureQueryStream: Stager[String] = Stager("graft_st17in") { (s, d, tmp) =>
+  val ensureQueryStream: Stager[Arrivals] = Stager("graft_st17in") { (s, d, tmp) =>
     Tables.load(s, d, "embeddings").filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st21's TRAINED base index (evens, s02's training regime): codebook
@@ -499,24 +500,24 @@ object StreamMediaQueries {
     * parquet files, streamed two per micro-batch into a per-RUN fresh
     * index (the append is the timed operation, so the input is
     * immutable but the index is not shared). */
-  val ensureOddVectorStream: Stager[String] = Stager("graft_st21in") { (s, d, tmp) =>
+  val ensureOddVectorStream: Stager[Arrivals] = Stager("graft_st21in") { (s, d, tmp) =>
     Tables.load(s, d, "embeddings")
       .filter(pmod(col("vec_id"), lit(2)) === 1)
       .select(col("vec_id"), col("embedding"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   /** st26's arrival fixture: d13's "new 20%" (LCG bucket ≥ 8) split
     * into 4 files drained as two micro-batches. */
-  val ensureNewDocStream: Stager[String] = Stager("graft_st26in") { (s, d, tmp) =>
+  val ensureNewDocStream: Stager[Arrivals] = Stager("graft_st26in") { (s, d, tmp) =>
     Tables.load(s, d, "documents")
       .filter(graft.ops.TrainingPrep.hashBucket(col("doc_id"), 10) >= 8)
       .select(col("doc_id"), col("text"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/in")
-    s"$tmp/in"
+    Arrivals.of(s, s"$tmp/in")
   }
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
@@ -731,10 +732,7 @@ object StreamMediaQueries {
     ("st12_stream_sessionize",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-        val out = graft.TempDirs.create("graft_st12o")
+        val stream = ensureSessionStream(s, d).read(s).as[EventStream.Event]
         // per-user GroupState is the highest-cardinality merging state
         // in the suite (one open session per active user): run on the
         // RocksDB provider — the 100 TB configuration, where state is
@@ -742,7 +740,7 @@ object StreamMediaQueries {
         // ceiling. Provider parity is spec-gated in StreamingSpec.
         EventStream.withRocksDBState(s) {
           EventStream.runToFiles(s,
-              EventStream.sessionizeStream(stream, timeout = false).toDF(), out)
+              EventStream.sessionizeStream(stream, timeout = false).toDF())
         }.orderBy(col("user_id"), col("session_id"))
       },
       Some("""WITH e AS (
@@ -783,13 +781,9 @@ object StreamMediaQueries {
     // total order and file mtimes pin the batch sequence.
     ("st24_stream_late_audit",
       (s: SparkSession, d: String) => {
-        val inDir = ensureLateAuditStream(s, d)
-        val out = graft.TempDirs.create("graft_st24o")
-        val stream = EventStream.readStaged(s, EventStream.schema,
-            s"$inDir/*.parquet", perTrigger = 1)
+        val stream = ensureLateAuditStream(s, d).read(s, perTrigger = 1)
           .withColumn("event_time", Tables.eventTime(col("ts")))
-        val drained = EventStream.runToFiles(s,
-          EventStream.hourlyCounts(stream), out)
+        val drained = EventStream.runToFiles(s, EventStream.hourlyCounts(stream))
         val totalReal = Tables.load(s, d, "events").count()
         val emitted = drained
           .agg(coalesce(sum(col("n_events")), lit(0L))).head().getLong(0)
@@ -886,7 +880,6 @@ object StreamMediaQueries {
     // exercised in the shipped path, not only in StreamingSpec.
     ("st06_stream_dedup",
       (s: SparkSession, d: String) => {
-        val out = graft.TempDirs.create("graft_st06")
         val ev = EventStream.readEvents(s, d)
         val atLeastOnce = ev.unionAll(ev)
         val deduped = atLeastOnce
@@ -894,7 +887,7 @@ object StreamMediaQueries {
           .dropDuplicatesWithinWatermark("event_id")
           .select(col("event_id"), col("event_type"), col("user_id"))
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, deduped, out)
+          EventStream.runToFiles(s, deduped)
         }.orderBy(col("event_id"))
       },
       Some("""SELECT event_id, event_type, user_id
@@ -922,10 +915,8 @@ object StreamMediaQueries {
     ("st07_dedup_store",
       (s: SparkSession, d: String) => {
         val tmp = graft.TempDirs.create("graft_st07")
-        val inDir = ensureDedupStreamInput(s, d)
         // one file per trigger: the store merges 4 genuine deliveries
-        val docsStream = EventStream.readStaged(s, dedupStreamSchema,
-            s"$inDir/part-*", perTrigger = 1)
+        val docsStream = ensureDedupStreamInput(s, d).read(s, perTrigger = 1)
         graft.streaming.DedupStore.run(s, docsStream, s"$tmp/store", s"$tmp/ckpt")
           .select(col("keep_id"), col("n_copies"))
           .orderBy(col("keep_id"))
@@ -1019,10 +1010,8 @@ object StreamMediaQueries {
     ("st14_store_sink",
       (s: SparkSession, d: String) => {
         val tmp = graft.TempDirs.create("graft_st14")
-        val inDir = ensureDedupStreamInput(s, d)
         // one file per trigger, like st07: the sink commits 4 epochs
-        val docsStream = EventStream.readStaged(s, dedupStreamSchema,
-            s"$inDir/part-*", perTrigger = 1)
+        val docsStream = ensureDedupStreamInput(s, d).read(s, perTrigger = 1)
         EventStream.drain(s, docsStream.writeStream
           .format("graft.sources.DedupStoreSink")
           .option("path", s"$tmp/store"), Some(tmp))
@@ -1101,14 +1090,9 @@ object StreamMediaQueries {
     ("st17_stream_index_probe",
       (s: SparkSession, d: String) => {
         val idx = NorthStarQueries.ensureIvfIndex(s, d)
-        val inDir = ensureQueryStream(s, d)
         val corpus = Tables.load(s, d, "embeddings").select("vec_id", "embedding")
         val out = graft.TempDirs.create("graft_st17o")
-        import org.apache.spark.sql.types._
-        val qstream = EventStream.readStaged(s,
-            StructType(Seq(StructField("vec_id", LongType),
-              StructField("embedding", ArrayType(FloatType)))),
-            s"$inDir/part-*")
+        val qstream = ensureQueryStream(s, d).read(s)
         EventStream.drain(s, qstream.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             Similarity.ivfIndexTopK(idx, corpus,
@@ -1304,7 +1288,6 @@ object StreamMediaQueries {
     // no-data batch is what flushes the last expirations.
     ("st23_outer_stream_join",
       (s: SparkSession, d: String) => {
-        val out = graft.TempDirs.create("graft_st23")
         val ev = EventStream.readEvents(s, d)
         val views = ev.filter(col("event_type") === "view")
           .select(col("user_id"), col("event_id").as("view_id"),
@@ -1321,7 +1304,7 @@ object StreamMediaQueries {
             "left_outer")
           .select(col("user_id"), col("view_id"), col("purchase_id"),
             col("view_time"))
-        EventStream.runToFiles(s, joined, out)
+        EventStream.runToFiles(s, joined)
           .select(col("user_id"), col("view_id"), col("purchase_id"))
           .orderBy(col("user_id"), col("view_id"), col("purchase_id"))
       },
@@ -1360,7 +1343,6 @@ object StreamMediaQueries {
     // what it claims: streaming append + probe.
     ("st21_stream_index_append",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
         val tmp = graft.TempDirs.create("graft_st21")
         val idx = s"$tmp/index"
         val emb = Tables.load(s, d, "embeddings").select("vec_id", "embedding")
@@ -1369,11 +1351,7 @@ object StreamMediaQueries {
         val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
         org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(base),
           fs, new org.apache.hadoop.fs.Path(idx), false, conf)
-        val inDir = ensureOddVectorStream(s, d)
-        EventStream.drain(s, EventStream.readStaged(s,
-            StructType(Seq(StructField("vec_id", LongType),
-              StructField("embedding", ArrayType(FloatType)))),
-            s"$inDir/part-*")
+        EventStream.drain(s, ensureOddVectorStream(s, d).read(s)
           .writeStream
           .foreachBatch((batch: DataFrame, _: Long) =>
             Similarity.appendToIvfIndex(idx, batch)), Some(tmp))
@@ -1461,7 +1439,6 @@ object StreamMediaQueries {
     // emission through the dedup store's idempotent-batch contract.
     ("st26_stream_lsh_dedup",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
         val tmp = graft.TempDirs.create("graft_st26")
         val idx = s"$tmp/bands"
         val base = NorthStarQueries.ensureBandIndex(s, d)
@@ -1471,10 +1448,7 @@ object StreamMediaQueries {
           fs, new org.apache.hadoop.fs.Path(idx), false, conf)
         val docsAll = Tables.load(s, d, "documents")
         val out = s"$tmp/pairs"
-        EventStream.drain(s, EventStream.readStaged(s,
-            StructType(Seq(StructField("doc_id", LongType),
-              StructField("text", StringType))),
-            s"${ensureNewDocStream(s, d)}/part-*")
+        EventStream.drain(s, ensureNewDocStream(s, d).read(s)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             graft.ops.Dedup.incrementalMinhashNearDups(s, idx, docsAll, batch,
@@ -1523,7 +1497,6 @@ object StreamMediaQueries {
     // flush and nothing would emit.
     ("st20_session_window",
       (s: SparkSession, d: String) => {
-        val out = graft.TempDirs.create("graft_st20")
         val sess = EventStream.readEvents(s, d)
           .withWatermark("event_time", "1 hour")
           .groupBy(col("user_id"),
@@ -1536,7 +1509,7 @@ object StreamMediaQueries {
         // per-user cardinality, the RocksDB provider's case at 100 TB
         // (see st12); parity spec-gated in StreamingSpec
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, sess, out)
+          EventStream.runToFiles(s, sess)
         }.orderBy(col("user_id"), col("session_start"))
       },
       Some("""WITH e AS (
@@ -1815,16 +1788,11 @@ object StreamMediaQueries {
     // oracle replays the same two waves in order over the base dim.
     ("st29_stream_scd2",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
         val tmp = graft.TempDirs.create("graft_st29q")
-        val in = ensureDimUpdateStream(s, d)
         val base = Tables.load(s, d, "customer")
           .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"),
             lit(0L).as("vf"), lit(null).cast("long").as("vt"))
-        val updSchema = StructType(Seq(
-          StructField("k", LongType), StructField("new_seg", StringType)))
-        val stream = EventStream.readStaged(s, updSchema,
-            s"$in/*.parquet", perTrigger = 1)
+        val stream = ensureDimUpdateStream(s, d).read(s, perTrigger = 1)
         graft.streaming.Scd2Dim.run(s, stream, base, s"$tmp/dim", s"$tmp/ckpt")
           .select(col("k").as("c_custkey"), col("seg").as("c_mktsegment"),
             col("vf").as("valid_from"), col("vt").as("valid_to"))
@@ -1866,16 +1834,11 @@ object StreamMediaQueries {
     // Revenue is DECIMAL-exact, cast once.
     ("st33_temporal_enrich",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
         val tmp = graft.TempDirs.create("graft_st33q")
-        val in = ensureDimUpdateStream(s, d)
         val base = Tables.load(s, d, "customer")
           .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"),
             lit(0L).as("vf"), lit(null).cast("long").as("vt"))
-        val updSchema = StructType(Seq(
-          StructField("k", LongType), StructField("new_seg", StringType)))
-        val stream = EventStream.readStaged(s, updSchema,
-            s"$in/*.parquet", perTrigger = 1)
+        val stream = ensureDimUpdateStream(s, d).read(s, perTrigger = 1)
         val dim = graft.streaming.Scd2Dim.run(s, stream, base,
           s"$tmp/dim", s"$tmp/ckpt")
         val facts = Tables.load(s, d, "orders")
@@ -1992,9 +1955,7 @@ object StreamMediaQueries {
           .select(explode(Dedup.wordNGrams(
             Dedup.words(col("text")), 5)).as("gram"))
           .distinct().localCheckpoint()
-        val inDir = ensureDedupStreamInput(s, d)
-        EventStream.drain(s, EventStream.readStaged(s, dedupStreamSchema,
-            s"$inDir/part-*")
+        EventStream.drain(s, ensureDedupStreamInput(s, d).read(s)
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             val flagged = batch.select(col("doc_id"),
@@ -2052,18 +2013,16 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import graft.ops.{TextAnalysis, TrainingPrep}
         val tmp = graft.TempDirs.create("graft_st31")
-        val inDir = ensureDedupStreamInput(s, d)
+        val docs = ensureDedupStreamInput(s, d)
         def scoredOf(df: DataFrame): DataFrame = {
           val w = TextAnalysis.tokenCount(col("text")).cast("long")
           val u = TrainingPrep.hashBucket(col("doc_id"), 1000000) + 1L
           df.select(col("doc_id"), w.as("n_tokens"),
             (w.cast("double") * 1000000.0 / u.cast("double")).as("priority"))
         }
-        val stream = EventStream.readStaged(s, dedupStreamSchema,
-            s"$inDir/part-*")
+        val stream = docs.read(s)
         val emptyState = scoredOf(s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          dedupStreamSchema))
+          new java.util.ArrayList[org.apache.spark.sql.Row](), docs.schema))
         val finalState = graft.streaming.VersionedView.run(
             s, stream, s"$tmp/state", s"$tmp/ckpt", emptyState) {
           (state, batch, _) =>
@@ -2112,11 +2071,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import org.apache.spark.sql.types._
         import graft.ops.TextAnalysis
-        val inDir = ensureDocCardStream(s, d)
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("source", StringType)))
-        val stream = EventStream.readStaged(s, docSchema, s"$inDir/part-*")
+        val stream = ensureDocCardStream(s, d).read(s)
         val rollup = stream.select(col("source"),
             TextAnalysis.langId(col("text")).as("pred_lang"),
             TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"),
@@ -2177,14 +2132,9 @@ object StreamMediaQueries {
     // verbatim — batch certifies streaming, the st02/st12 discipline.
     ("st35_stream_debounce",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st35o")
+        val stream = sessionEvents(s, d)
         EventStream.runToFiles(s,
-            EventStream.debounceStream(stream, 300L * 1000 * 1000).toDF(), out)
+            EventStream.debounceStream(stream, 300L * 1000 * 1000).toDF())
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("kept")).cast("long").as("n_kept"),
@@ -2216,13 +2166,8 @@ object StreamMediaQueries {
     // anywhere shifts a sampled row and breaks the hash.
     ("st36_stream_user_seq",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st36o")
-        EventStream.runToFiles(s, EventStream.userSeqStream(stream).toDF(), out)
+        val stream = sessionEvents(s, d)
+        EventStream.runToFiles(s, EventStream.userSeqStream(stream).toDF())
           .filter(col("user_seq") % 7 === 0)
           .select(col("user_id"), col("user_seq"), col("event_id"))
           .orderBy(col("user_id"), col("user_seq"))
@@ -2251,8 +2196,6 @@ object StreamMediaQueries {
     // streaming, and both certify the delta algebra.
     ("st38_stream_join_view",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
-        val in = ensureOrderStream(s, d)
         val tmp = graft.TempDirs.create("graft_st38q")
         val li = Tables.load(s, d, "lineitem")
           .select(col("l_orderkey").as("k"),
@@ -2260,9 +2203,7 @@ object StreamMediaQueries {
         def rollup(joined: DataFrame): DataFrame = joined
           .groupBy(col("month"))
           .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-        val stream = EventStream.readStaged(s, StructType(Seq(
-            StructField("k", LongType), StructField("month", StringType))),
-            s"$in/*.parquet")
+        val stream = ensureOrderStream(s, d).read(s)
         val emptyView = rollup(li.limit(0)
           .withColumn("month", lit("")))
         graft.streaming.VersionedView.run(
@@ -2293,13 +2234,8 @@ object StreamMediaQueries {
     // agreement exact rather than tolerance-based.
     ("st37_stream_zscore",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st37o")
-        EventStream.runToFiles(s, EventStream.zscoreStream(stream).toDF(), out)
+        val stream = sessionEvents(s, d)
+        EventStream.runToFiles(s, EventStream.zscoreStream(stream).toDF())
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("scored")).cast("long").as("n_scored"),
@@ -2337,20 +2273,8 @@ object StreamMediaQueries {
     ("st34_stream_gap_fill",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureLocfStream(s, d)
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_ev",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sum_v",
-            org.apache.spark.sql.types.DoubleType)))
-        val stream = EventStream.readStaged(s, schema, s"$inDir/part-*")
-          .as[EventStream.Hourly]
-        val out = graft.TempDirs.create("graft_st34o")
-        EventStream.runToFiles(s, EventStream.locfStream(stream).toDF(), out)
+        val stream = ensureLocfStream(s, d).read(s).as[EventStream.Hourly]
+        EventStream.runToFiles(s, EventStream.locfStream(stream).toDF())
           .orderBy(col("user_id"), col("hour_us"))
       },
       Some("""WITH hourly AS (
@@ -2384,17 +2308,12 @@ object StreamMediaQueries {
     // SQL verbatim: batch certifies streaming.
     ("st39_stream_supply_value",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
         import org.apache.spark.sql.expressions.Window
-        val in = ensureLineitemStream(s, d)
         val tmp = graft.TempDirs.create("graft_st39q")
         def fold(df: DataFrame): DataFrame = df
           .groupBy(col("pk"), col("sk"))
           .agg(min(col("cost_c")).as("cost_c"), sum(col("avail")).as("avail"))
-        val stream = EventStream.readStaged(s, StructType(Seq(
-            StructField("pk", LongType), StructField("sk", LongType),
-            StructField("qty", LongType), StructField("price_c", LongType))),
-            s"$in/*.parquet")
+        val stream = ensureLineitemStream(s, d).read(s)
         val emptyState = fold(s.range(0).select(
           col("id").as("pk"), col("id").as("sk"),
           col("id").as("cost_c"), col("id").as("avail")))
@@ -2450,14 +2369,8 @@ object StreamMediaQueries {
     // streaming, the st02/st12 discipline.
     ("st40_stream_streaks",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st40o")
-        val snaps = EventStream.runToFiles(s,
-          EventStream.streakStream(stream).toDF(), out)
+        val stream = sessionEvents(s, d)
+        val snaps = EventStream.runToFiles(s, EventStream.streakStream(stream).toDF())
         snaps.groupBy(col("user_id"))
           .agg(max_by(struct(
               col("best_len").as("longest_streak"),
@@ -2496,8 +2409,6 @@ object StreamMediaQueries {
     // Oracle is q138's SQL verbatim: batch certifies streaming.
     ("st41_stream_price_recon",
       (s: SparkSession, d: String) => {
-        import org.apache.spark.sql.types._
-        val in = ensureLineitemStream(s, d)
         val tmp = graft.TempDirs.create("graft_st41q")
         val intervals = Tables.load(s, d, "orders")
           .select(col("o_orderpriority"),
@@ -2511,10 +2422,7 @@ object StreamMediaQueries {
           .groupBy(col("o_orderpriority"))
           .agg(sum(col("n_pairs")).as("n_pairs"),
             sum(col("sum_price_c")).as("sum_price_c"))
-        val stream = EventStream.readStaged(s, StructType(Seq(
-            StructField("pk", LongType), StructField("sk", LongType),
-            StructField("qty", LongType), StructField("price_c", LongType))),
-            s"$in/*.parquet")
+        val stream = ensureLineitemStream(s, d).read(s)
         val emptyState = s.range(0).select(
           col("id").cast("string").as("o_orderpriority"),
           col("id").as("n_pairs"), col("id").as("sum_price_c"))
@@ -2561,13 +2469,8 @@ object StreamMediaQueries {
     // 3-row aggregate after the drain.
     ("st42_stream_funnel",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st42o")
-        EventStream.runToFiles(s, EventStream.funnelStream(stream).toDF(), out)
+        val stream = sessionEvents(s, d)
+        EventStream.runToFiles(s, EventStream.funnelStream(stream).toDF())
           .groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
           .orderBy(col("stage"))
       },
@@ -2599,9 +2502,7 @@ object StreamMediaQueries {
     // rides the ingest, no second pass over landed data.
     ("st43_stream_quality_gate",
       (s: SparkSession, d: String) => {
-        val inDir = ensureGateStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val stream = ensureGateStream(s, d).read(s)
         val okeys = Tables.load(s, d, "orders").select(col("o_orderkey"))
         val flagged = stream.join(broadcast(okeys),
           col("l_orderkey") === col("o_orderkey"), "left_outer")
@@ -2687,15 +2588,10 @@ object StreamMediaQueries {
     // no punctuation needed).
     ("st45_stream_cep",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-        val out = graft.TempDirs.create("graft_st45o")
+        val stream = sessionEvents(s, d)
         EventStream.runToFiles(s,
             EventStream.cepStream(stream,
-              6L * 3600 * 1000000L, 12L * 3600 * 1000000L).toDF(), out)
+              6L * 3600 * 1000000L, 12L * 3600 * 1000000L).toDF())
           .select(col("user_id"), col("view_id"), col("click_id"),
             col("purchase_id"))
           .orderBy(col("user_id"), col("view_id"), col("click_id"),
@@ -2726,9 +2622,7 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import org.apache.spark.sql.types.DecimalType
         val D = DecimalType(38, 0)
-        val inDir = ensureGateStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val stream = ensureGateStream(s, d).read(s)
         val x = round(col("l_quantity")).cast("long")
         val y = round(col("l_extendedprice") * 100).cast("long")
         // sums accumulate in DECIMAL(38,0) like batch q149: a LONG Σxy
@@ -2786,14 +2680,10 @@ object StreamMediaQueries {
     ("st47_stream_coverage",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureIntervalStream(s, d)
-        val stream = EventStream.readStaged(s,
-            org.apache.spark.sql.types.StructType.fromDDL("sk LONG, lo LONG, hi LONG"),
-            s"$inDir/*.parquet")
+        val stream = ensureIntervalStream(s, d).read(s)
           .as[graft.streaming.IntervalCoverage.Iv]
-        val out = graft.TempDirs.create("graft_st47o")
         EventStream.runToFiles(s,
-            graft.streaming.IntervalCoverage.coverageStream(stream).toDF(), out)
+            graft.streaming.IntervalCoverage.coverageStream(stream).toDF())
           .orderBy(col("s_suppkey"))
       },
       Some("""WITH iv AS (
@@ -2840,11 +2730,7 @@ object StreamMediaQueries {
           .agg(min(cents).as("mn"),
             (max(cents) - min(cents) + 1L).as("span")).head()
         val (mn, span) = (mm.getLong(0), mm.getLong(1))
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
-          .toDF()
+        val stream = sessionEvents(s, d).toDF()
         val agg = stream
           .select(least(lit(9L), call_function("div",
               (cents - mn) * 10L, lit(span))).as("band"),
@@ -2933,19 +2819,14 @@ object StreamMediaQueries {
     // micro-batches); sentinels filtered (matches emit immediately).
     ("st49_stream_cep_quad",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
-        val stream = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet")
-          .as[EventStream.Event]
-          .filter(_.event_type != "flush")
+        val stream = sessionEvents(s, d)
         val pattern = Seq(
           ("signup", 0L),
           ("view", 168L * 3600 * 1000000L),
           ("click", 6L * 3600 * 1000000L),
           ("purchase", 12L * 3600 * 1000000L))
-        val out = graft.TempDirs.create("graft_st49o")
         EventStream.runToFiles(s,
-            EventStream.cepPatternStream(stream, pattern).toDF(), out)
+            EventStream.cepPatternStream(stream, pattern).toDF())
           .select(col("user_id"),
             element_at(col("event_ids"), 1).as("signup_id"),
             element_at(col("event_ids"), 2).as("view_id"),
@@ -2982,15 +2863,11 @@ object StreamMediaQueries {
     ("st50_stream_coverage_ooo",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureIntervalStreamJittered(s, d)
-        val stream = EventStream.readStaged(s,
-            org.apache.spark.sql.types.StructType.fromDDL("sk LONG, lo LONG, hi LONG"),
-            s"$inDir/*.parquet")
+        val stream = ensureIntervalStreamJittered(s, d).read(s)
           .as[graft.streaming.IntervalCoverage.Iv]
-        val out = graft.TempDirs.create("graft_st50o")
         EventStream.runToFiles(s,
             graft.streaming.IntervalCoverage
-              .coverageStreamWatermarked(stream, st50SlackDays).toDF(), out)
+              .coverageStreamWatermarked(stream, st50SlackDays).toDF())
           .orderBy(col("s_suppkey"))
       },
       Some("""WITH iv AS (
@@ -3034,16 +2911,10 @@ object StreamMediaQueries {
     // spec-gated. Input is the st12 arrival fixture; sentinels filtered.
     ("st51_typed_state_seq",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/*.parquet")
-            .as[EventStream.Event]
-            .filter(_.event_type != "flush")
-          val out = graft.TempDirs.create("graft_st51o")
+          val stream = sessionEvents(s, d)
           EventStream.runToFiles(s,
-              EventStream.typeSeqStream(stream).toDF(), out)
+              EventStream.typeSeqStream(stream).toDF())
             .orderBy(col("user_id"), col("event_id"))
         }
       },
@@ -3065,9 +2936,7 @@ object StreamMediaQueries {
     // of landed data. q161's oracle certifies the drained report.
     ("st52_stream_kanonymity",
       (s: SparkSession, d: String) => {
-        val inDir = ensureCustomerStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val classes = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val classes = ensureCustomerStream(s, d).read(s)
           .groupBy(col("c_nationkey"), col("c_mktsegment"),
             floor(col("c_acctbal") / 1000).cast("long").as("bal_band"))
           .agg(count(lit(1)).as("n"))
@@ -3113,9 +2982,7 @@ object StreamMediaQueries {
         val keyToDense = cust
           .join(graft.ops.Densify.dictionary(cust, "c_name"), "c_name")
           .select(col("c_custkey"), col("dense_id"))
-        val inDir = ensureOrderFactStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val weekly = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val weekly = ensureOrderFactStream(s, d).read(s)
           .select(call_function("div",
               datediff(to_date(col("o_orderdate")), lit("1990-01-01"))
                 .cast("long"), lit(7L)).as("week_ix"),
@@ -3153,15 +3020,11 @@ object StreamMediaQueries {
     ("st54_timer_sessions",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureTimerSessionStream(s, d)
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/*.parquet")
-            .as[EventStream.Event]
-          val out = graft.TempDirs.create("graft_st54o")
+          val stream = ensureTimerSessionStream(s, d).read(s).as[EventStream.Event]
           EventStream.runToFiles(s,
               EventStream.timerSessionStream(stream,
-                EventStream.SessionGapMicros).toDF(), out)
+                EventStream.SessionGapMicros).toDF())
             .filter(col("user_id") >= 0) // sentinel watermark pushers
             .orderBy(col("user_id"), col("anchor_ts"))
         }
@@ -3204,18 +3067,12 @@ object StreamMediaQueries {
     // entries instead of O(ever-seen users × full history).
     ("st55_ttl_recent_activity",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val inDir = ensureSessionStream(s, d)
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/*.parquet")
-            .as[EventStream.Event]
-            .filter(_.event_type != "flush")
-          val out = graft.TempDirs.create("graft_st55o")
+          val stream = sessionEvents(s, d)
           EventStream.runToFiles(s,
               EventStream.recentActivityStream(stream, nDays = 7,
                 org.apache.spark.sql.streaming.TTLConfig(
-                  java.time.Duration.ofHours(24))).toDF(), out,
+                  java.time.Duration.ofHours(24))).toDF(),
               noData = false) // ProcessingTime TTL: see runToFiles
             .orderBy(col("event_id"))
         }
@@ -3246,9 +3103,7 @@ object StreamMediaQueries {
     // ingest wave creates it. q163's oracle certifies the report.
     ("st56_stream_ldiversity",
       (s: SparkSession, d: String) => {
-        val inDir = ensureCustomerStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val cells = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val cells = ensureCustomerStream(s, d).read(s)
           .groupBy(col("c_nationkey"),
             floor(col("c_acctbal") / 1000).cast("long").as("bal_band"),
             col("c_mktsegment"))
@@ -3302,9 +3157,7 @@ object StreamMediaQueries {
         val keyToDense = cust
           .join(graft.ops.Densify.dictionary(cust, "c_name"), "c_name")
           .select(col("c_custkey").as("o_custkey"), col("dense_id"))
-        val inDir = ensureOrderFactStream(s, d)
-        val sch = s.read.parquet(inDir).schema
-        val stream = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val stream = ensureOrderFactStream(s, d).read(s)
         val weekly = graft.ops.ScaleJoins
           .saltedJoin(stream, keyToDense, "o_custkey", 8, col("o_orderdate"))
           .select(call_function("div",
@@ -3337,15 +3190,13 @@ object StreamMediaQueries {
     // DuckDB-JSON oracle certifies the drained report.
     ("st58_stream_variant_ingest",
       (s: SparkSession, d: String) => {
-        val inDir = ensureDocCardStream(s, d)
-        val sch = s.read.parquet(inDir).schema
         val base = concat(lit("{\"id\":"), col("doc_id"),
           lit(",\"meta\":{\"src\":\""), col("source"), lit("\""),
           when(col("doc_id") % 3 === 0,
             concat(lit(",\"score\":"), col("doc_id") % 97)).otherwise(lit("")),
           lit("},\"tags\":["), col("doc_id") % 5, lit(","),
           col("doc_id") % 7, lit("]}"))
-        val shredded = EventStream.readStaged(s, sch, s"$inDir/part-*")
+        val shredded = ensureDocCardStream(s, d).read(s)
           .select(when(col("doc_id") % 13 === 0, substring(base, 1, 10))
             .otherwise(base).as("js"))
           .select(try_parse_json(col("js")).as("v"))
@@ -3418,19 +3269,15 @@ object StreamMediaQueries {
     ("st59_statestore_read",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureTimerSessionStream(s, d)
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*") // tiles only: pushers are z*_push
+          val stream = ensureTimerSessionStream(s, d)
+            .read(s, files = "part-*") // tiles only: pushers are z*_push
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st59o")
           val drained = EventStream.runToFiles(s,
             EventStream.timerSessionStream(stream,
               EventStream.SessionGapMicros).toDF(), out)
-          val open = s.read.format("statestore")
-            .option("path", EventStream.checkpointDir(out))
-            .option("stateVarName", "sess")
-            .load()
+          val open = EventStream.readState(s, out, "stateVarName" -> "sess")
             .select(col("key.value").as("user_id"),
               col("value._1").as("anchor_ts"),
               col("value._2").as("n_events"),
@@ -3480,23 +3327,18 @@ object StreamMediaQueries {
     ("st60_state_changelog",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureTimerSessionStream(s, d)
         // the changelog exists because withRocksDBState turns RocksDB
         // changelog checkpointing on
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*", perTrigger = 1)
+          val stream = ensureTimerSessionStream(s, d)
+            .read(s, perTrigger = 1, files = "part-*") // tiles only
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st60o")
           val drained = EventStream.runToFiles(s,
             EventStream.timerSessionStream(stream,
               EventStream.SessionGapMicros).toDF(), out)
-          val changes = s.read.format("statestore")
-            .option("path", EventStream.checkpointDir(out))
-            .option("stateVarName", "sess")
-            .option("readChangeFeed", "true")
-            .option("changeStartBatchId", "0")
-            .load()
+          val changes = EventStream.readState(s, out, "stateVarName" -> "sess",
+              "readChangeFeed" -> "true", "changeStartBatchId" -> "0")
             .select(col("batch_id"), col("change_type"),
               col("key.value").as("user_id"),
               col("value._1").as("anchor_ts"),
@@ -3555,14 +3397,12 @@ object StreamMediaQueries {
     ("st61_liststate_context",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureTimerSessionStream(s, d)
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*") // tiles only: pushers are z*_push
+          val stream = ensureTimerSessionStream(s, d)
+            .read(s, files = "part-*") // tiles only: pushers are z*_push
             .as[EventStream.Event]
-          val out = graft.TempDirs.create("graft_st61o")
           EventStream.runToFiles(s,
-              EventStream.recentPatternStream(stream, k = 3).toDF(), out)
+              EventStream.recentPatternStream(stream, k = 3).toDF())
             .orderBy(col("event_id"))
         }
       },
@@ -3592,7 +3432,6 @@ object StreamMediaQueries {
     // (session_end ≤ final watermark) as st20.
     ("st62_dynamic_gap_sessions",
       (s: SparkSession, d: String) => {
-        val out = graft.TempDirs.create("graft_st62")
         val gap = when(col("event_type") === "view", lit("15 minutes"))
           .otherwise(lit("45 minutes"))
         val sess = EventStream.readEvents(s, d)
@@ -3604,7 +3443,7 @@ object StreamMediaQueries {
             col("w.start").as("session_start"),
             col("w.end").as("session_end"), col("n_events"))
         EventStream.withRocksDBState(s) {
-          EventStream.runToFiles(s, sess, out)
+          EventStream.runToFiles(s, sess)
         }.orderBy(col("user_id"), col("session_start"))
       },
       Some("""WITH e AS (
@@ -3657,10 +3496,10 @@ object StreamMediaQueries {
       (s: SparkSession, d: String) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val root = ensureBootstrapSessionStream(s, d)
+        val (batchDir, arrivals) = ensureBootstrapSessionStream(s, d)
         val gapUs = EventStream.SessionGapMicros
         // the backfill: gaps-and-islands over the batch half
-        val e = s.read.parquet(s"$root/batch")
+        val e = s.read.parquet(batchDir)
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts"), col("event_id"))
         val sess = e
@@ -3685,13 +3524,9 @@ object StreamMediaQueries {
         // fires in the first batch whose START watermark passes it),
         // and with only 2 data tiles a 2-files trigger would lump them.
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$root/in/*.parquet", perTrigger = 1)
-            .as[EventStream.Event]
-          val out = graft.TempDirs.create("graft_st63o")
+          val stream = arrivals.read(s, perTrigger = 1).as[EventStream.Event]
           val drained = EventStream.runToFiles(s,
-            EventStream.bootstrapSessionStream(stream, gapUs, openAtCut).toDF(),
-            out)
+            EventStream.bootstrapSessionStream(stream, gapUs, openAtCut).toDF())
           drained.select("user_id", "anchor_ts", "n_events", "last_ts")
             .filter(col("user_id") >= 0) // sentinel watermark pushers
             .unionByName(closedBatch)
@@ -3736,11 +3571,9 @@ object StreamMediaQueries {
     // the fold is a driver loop over ≤ n_batches tiny rows.
     ("st64_stream_observe",
       (s: SparkSession, d: String) => {
-        val inDir = ensureGateStream(s, d) // lineitem as 3 tiles
-        val sch = s.read.parquet(inDir).schema
         val out = graft.TempDirs.create("graft_st64")
-        val streamed = EventStream.readStaged(s, sch,
-            s"$inDir/part-*", perTrigger = 1)
+        val streamed = ensureGateStream(s, d) // lineitem as 3 tiles
+          .read(s, perTrigger = 1)
           .observe("ingest",
             count(lit(1)).as("rows_in"),
             sum(col("l_quantity").cast("long")).as("qty_sum"),
@@ -3803,13 +3636,12 @@ object StreamMediaQueries {
     ("st65_state_snapshot",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val inDir = ensureTimerSessionStream(s, d)
         // snapshot-anchored reads replay changelog files forward from an
         // uploaded snapshot — they exist only under the changelog
         // checkpointing withRocksDBState turns on
         EventStream.withRocksDBState(s) {
-          val stream = EventStream.readStaged(s, EventStream.schema,
-              s"$inDir/part-*", perTrigger = 1) // tiles only: pushers are z*_push
+          val stream = ensureTimerSessionStream(s, d)
+            .read(s, perTrigger = 1, files = "part-*") // tiles only: pushers are z*_push
             .as[EventStream.Event]
           val out = graft.TempDirs.create("graft_st65o")
           val drained = EventStream.runToFiles(s,
@@ -3822,13 +3654,9 @@ object StreamMediaQueries {
           val lastBatch = numbered(s"$ckpt/commits").max
           // one state dir per partition the drain actually ran with
           val open = numbered(s"$ckpt/state/0").sorted.map { p =>
-            s.read.format("statestore")
-              .option("path", ckpt)
-              .option("stateVarName", "sess")
-              .option("batchId", lastBatch.toString)
-              .option("snapshotStartBatchId", "0")
-              .option("snapshotPartitionId", p.toString)
-              .load()
+            EventStream.readState(s, out, "stateVarName" -> "sess",
+                "batchId" -> lastBatch.toString, "snapshotStartBatchId" -> "0",
+                "snapshotPartitionId" -> p.toString)
               .select(col("key.value").as("user_id"),
                 col("value._1").as("anchor_ts"),
                 col("value._2").as("n_events"),
@@ -3883,9 +3711,7 @@ object StreamMediaQueries {
     // two-step output a single aggregate can't produce.
     ("st66_chained_stateful",
       (s: SparkSession, d: String) => {
-        val inDir = ensureTimerSessionStream(s, d)
-        val out = graft.TempDirs.create("graft_st66")
-        val ev = EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
+        val ev = ensureTimerSessionStream(s, d).read(s) // tiles + watermark pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
         val hourly = ev
@@ -3905,7 +3731,7 @@ object StreamMediaQueries {
         // corpus size; RocksDB's per-partition open/commit tax (×2
         // operators ×batches) buys nothing here. RocksDB is for
         // per-user/per-id state (st54/st06), where keys scale with data.
-        EventStream.runToFiles(s, daily, out)
+        EventStream.runToFiles(s, daily)
           .filter(col("event_type") =!= "flush") // sentinel groups
           .orderBy(col("day"), col("event_type"))
       },
@@ -3935,10 +3761,9 @@ object StreamMediaQueries {
     // the aggregate and drop batch-side.
     ("st67_join_then_agg",
       (s: SparkSession, d: String) => {
-        val inDir = ensureTimerSessionStream(s, d)
-        val out = graft.TempDirs.create("graft_st67")
+        val events = ensureTimerSessionStream(s, d)
         def side(ty: String, tsName: String) =
-          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
+          events.read(s) // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${tsName}_user"),
               col("event_id").as(s"${tsName}_id"),
@@ -3957,7 +3782,7 @@ object StreamMediaQueries {
         // bounded by the 1 h interval × watermark delay — a sliding
         // TIME window of rows, not a per-key registry — and the window
         // agg's by open windows; neither scales with corpus keys.
-        EventStream.runToFiles(s, rolled, out)
+        EventStream.runToFiles(s, rolled)
           .filter(!col("sentinel")) // sentinel self-pairs drop batch-side
           .select(col("hour"), col("n_attr"))
           .orderBy(col("hour"))
@@ -3991,7 +3816,8 @@ object StreamMediaQueries {
     // mismatch, which is itself the deployment contract).
     ("st68_stream_restart",
       (s: SparkSession, d: String) => {
-        val srcDir = new java.io.File(ensureTimerSessionStream(s, d))
+        val src = ensureTimerSessionStream(s, d)
+        val srcDir = new java.io.File(src.dir)
         val out = graft.TempDirs.create("graft_st68")
         val inDir = new java.io.File(s"$out/in"); inDir.mkdirs()
         // source fixture order: 3 ts-range tiles (oldest mtime first),
@@ -4004,8 +3830,7 @@ object StreamMediaQueries {
           dst.setLastModified(f.lastModified) // keep the arrival contract
         }
         def drain(): DataFrame = EventStream.runToFiles(s,
-          EventStream.readStaged(s, EventStream.schema,
-              s"${inDir.getAbsolutePath}/*.parquet", perTrigger = 1)
+          Arrivals(inDir.getAbsolutePath, src.schema).read(s, perTrigger = 1)
             .withColumn("event_time", Tables.eventTime(col("ts")))
             .withWatermark("event_time", "1 hour")
             .groupBy(window(col("event_time"), "1 hour").as("w"),
@@ -4044,10 +3869,7 @@ object StreamMediaQueries {
     // their 'flush' windows drop batch-side) — the st66 lesson.
     ("st69_dedup_then_agg",
       (s: SparkSession, d: String) => {
-        val inDir = ensureDupEventStream(s, d)
-        val out = graft.TempDirs.create("graft_st69out")
-        val rolled = EventStream.readStaged(s, EventStream.schema,
-            s"$inDir/*.parquet") // dup-bearing tiles + pushers
+        val rolled = ensureDupEventStream(s, d).read(s) // dup-bearing tiles + pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
@@ -4059,7 +3881,7 @@ object StreamMediaQueries {
         // default state store (the st66 rationale): dedup state is
         // O(events within the delay) — time-bounded — and window state
         // O(open windows × types).
-        EventStream.runToFiles(s, rolled, out)
+        EventStream.runToFiles(s, rolled)
           .filter(col("event_type") =!= "flush") // sentinel groups
           .orderBy(col("hour"), col("event_type"))
       },
@@ -4083,13 +3905,10 @@ object StreamMediaQueries {
     // state; the rollup is batch-side on the drained sink.
     ("st70_stream_file_provenance",
       (s: SparkSession, d: String) => {
-        val inDir = ensureDupEventStream(s, d)
-        val out = graft.TempDirs.create("graft_st70")
-        val tagged = EventStream.readStaged(s, EventStream.schema,
-            s"$inDir/*.parquet")
+        val tagged = ensureDupEventStream(s, d).read(s)
           .select(col("event_id"), col("user_id"),
             regexp_extract(col("_metadata.file_name"), "^(t\\d)", 1).as("tile"))
-        EventStream.runToFiles(s, tagged, out)
+        EventStream.runToFiles(s, tagged)
           .filter(col("tile") =!= "") // pusher files (z*_push) drop out
           .groupBy(col("tile"))
           .agg(count(lit(1)).as("n_rows"),
@@ -4134,10 +3953,9 @@ object StreamMediaQueries {
     // self-match (same ts satisfies the interval), dropping batch-side.
     ("st71_semi_stream_join",
       (s: SparkSession, d: String) => {
-        val inDir = ensureTimerSessionStream(s, d)
-        val out = graft.TempDirs.create("graft_st71")
+        val events = ensureTimerSessionStream(s, d)
         def side(ty: String, tsName: String) =
-          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
+          events.read(s) // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${tsName}_user"),
               col("event_id").as(s"${tsName}_id"),
@@ -4148,7 +3966,7 @@ object StreamMediaQueries {
             col("p_time") >= col("v_time") &&
             col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"),
           "left_semi")
-        EventStream.runToFiles(s, converted, out)
+        EventStream.runToFiles(s, converted)
           .filter(col("v_user") >= 0) // sentinel self-matches drop
           .orderBy(col("v_id"))
       },
@@ -4181,19 +3999,17 @@ object StreamMediaQueries {
     // backpressure by design, not a bug.
     ("st72_union_stream_agg",
       (s: SparkSession, d: String) => {
-        val (evenDir, oddDir) = ensureUnionFeeds(s, d)
-        val out = graft.TempDirs.create("graft_st72out")
-        def feed(dir: String) = EventStream.readStaged(s, EventStream.schema,
-            s"$dir/*.parquet") // tiles + this feed's own pushers
+        val (even, odd) = ensureUnionFeeds(s, d)
+        def feed(arrivals: Arrivals) = arrivals.read(s) // tiles + this feed's own pushers
           .withColumn("event_time", Tables.eventTime(col("ts")))
           .withWatermark("event_time", "1 hour")
-        val rolled = feed(evenDir).unionByName(feed(oddDir))
+        val rolled = feed(even).unionByName(feed(odd))
           .groupBy(window(col("event_time"), "1 hour").as("w"),
             col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("user_id")).as("user_sum"))
           .select(col("w.start").as("hour"), col("event_type"),
             col("n"), col("user_sum"))
-        EventStream.runToFiles(s, rolled, out)
+        EventStream.runToFiles(s, rolled)
           .filter(col("event_type") =!= "flush") // both feeds' sentinels
           .orderBy(col("hour"), col("event_type"))
       },
@@ -4222,10 +4038,9 @@ object StreamMediaQueries {
     // singletons, and neither side is ever collected or broadcast.
     ("st73_full_outer_stream_join",
       (s: SparkSession, d: String) => {
-        val inDir = ensureTimerSessionStream(s, d)
-        val out = graft.TempDirs.create("graft_st73")
+        val events = ensureTimerSessionStream(s, d)
         def side(ty: String, pfx: String) =
-          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
+          events.read(s) // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${pfx}_user"),
               col("event_id").as(s"${pfx}_id"),
@@ -4238,7 +4053,7 @@ object StreamMediaQueries {
             "full_outer")
           .select(coalesce(col("v_user"), col("p_user")).as("user_id"),
             col("v_id"), col("p_id"))
-        EventStream.runToFiles(s, joined, out)
+        EventStream.runToFiles(s, joined)
           .filter(col("user_id") >= 0) // sentinel self-matches drop
           .orderBy(col("user_id"), col("v_id"), col("p_id"))
       },
@@ -4302,10 +4117,9 @@ object StreamMediaQueries {
     // RIGHT JOIN because the pushers finalize every verdict.
     ("st75_right_outer_stream_join",
       (s: SparkSession, d: String) => {
-        val inDir = ensureTimerSessionStream(s, d)
-        val out = graft.TempDirs.create("graft_st75")
+        val events = ensureTimerSessionStream(s, d)
         def side(ty: String, pfx: String) =
-          EventStream.readStaged(s, EventStream.schema, s"$inDir/*.parquet") // tiles + watermark pushers
+          events.read(s) // tiles + watermark pushers
             .filter(col("event_type") === ty || col("user_id") < 0)
             .select(col("user_id").as(s"${pfx}_user"),
               col("event_id").as(s"${pfx}_id"),
@@ -4317,7 +4131,7 @@ object StreamMediaQueries {
               col("p_time") <= col("v_time") + expr("INTERVAL 1 HOUR"),
             "right_outer")
           .select(col("p_user").as("user_id"), col("v_id"), col("p_id"))
-        EventStream.runToFiles(s, joined, out)
+        EventStream.runToFiles(s, joined)
           .filter(col("user_id") >= 0) // sentinel self-matches drop
           .orderBy(col("user_id"), col("v_id"), col("p_id"))
       },

@@ -1100,9 +1100,8 @@ object TrainingPrepQueries {
     // watermark-finalized windows land in the sink.
     ("st04_stream_file_drain",
       (s: SparkSession, d: String) => {
-        val out = graft.TempDirs.create("graft_st04")
         EventStream.runToFiles(s,
-            EventStream.hourlyCounts(EventStream.readEvents(s, d)), out)
+            EventStream.hourlyCounts(EventStream.readEvents(s, d)))
           .orderBy(col("hour"), col("event_type"))
       },
       Some("""WITH e AS (

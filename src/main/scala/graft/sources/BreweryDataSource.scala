@@ -111,20 +111,11 @@ private[sources] class BreweryReaderFactory(fetcherClass: String, perPage: Int,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val range = partition.asInstanceOf[PageRange]
     new PartitionReader[InternalRow] {
-      private val fetcher = BreweryScan.newFetcher(fetcherClass)
-      private val rows = (range.first to range.last).iterator
-        .flatMap(p => fetcher.page(p, perPage))
+      private val rows = Ingest.pageRows(BreweryScan.newFetcher(fetcherClass),
+        (range.first to range.last).iterator, perPage, fields.toSeq)
       override def next(): Boolean = rows.hasNext
-      override def get(): InternalRow = {
-        val r = rows.next()
-        new GenericInternalRow(
-          fields.map { k =>
-            r.getOrElse(k, null) match {
-              case null => null
-              case v => UTF8String.fromString(v)
-            }
-          }.toArray[Any])
-      }
+      override def get(): InternalRow =
+        new GenericInternalRow(rows.next().map(UTF8String.fromString).toArray[Any])
       override def close(): Unit = ()
     }
   }

@@ -109,17 +109,30 @@ object EventStream {
     (batch.filter(bad), batch.filter(!bad))
   }
 
-  /** The one reader for staged arrival fixtures: a file-source stream
-    * over `glob` under a declared `schema`, `perTrigger` files per
-    * micro-batch. Two files per trigger is the default every drain here
-    * runs at; a face that pins a batch boundary to each file (a
-    * watermark pusher that must land alone, an oracle that replays one
-    * batch per file) passes 1 and says why beside the call. */
-  def readStaged(spark: SparkSession, schema: StructType, glob: String,
-                 perTrigger: Int = 2): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", perTrigger.toString)
-      .parquet(glob)
+  /** A staged arrival fixture: the parquet files a stream stager wrote
+    * under `dir`, and the `schema` they declare, read back from them once
+    * when the fixture is staged (a file-stream source must declare its
+    * schema; probing it per run would add a footer pass to the face). */
+  final case class Arrivals(dir: String, schema: StructType) {
+
+    /** The one reader for staged arrivals: a file-source stream over the
+      * `files` glob under `dir`, `perTrigger` files per micro-batch. Two
+      * files per trigger is the default every drain here runs at; a
+      * face that pins a batch boundary to each file (a watermark pusher
+      * that must land alone, an oracle that replays one batch per file)
+      * passes 1 and says why beside the call. */
+    def read(spark: SparkSession, perTrigger: Int = 2,
+             files: String = "*.parquet"): DataFrame =
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", perTrigger.toString)
+        .parquet(s"$dir/$files")
+  }
+
+  object Arrivals {
+    /** The fixture staged under `dir`, its schema read from the files. */
+    def of(spark: SparkSession, dir: String): Arrivals =
+      Arrivals(dir, spark.read.parquet(dir).schema)
+  }
 
   /** A drain root's layout: the sink writes `<dir>/data`, the
     * checkpoint lives in `<dir>/ckpt`. */
@@ -143,13 +156,29 @@ object EventStream {
                dir: Option[String], noData: Boolean = true): StreamingQuery =
     graft.Confs.withConfs(spark, Seq(
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noData.toString,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) {
+      noChecksums)) {
       val q = dir.fold(writer)(d =>
           writer.option("checkpointLocation", checkpointDir(d)))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
       q
+    }
+
+  private val noChecksums = "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"
+
+  /** The state of the drain root `dir` through the `statestore` source,
+    * with `options` on top of its checkpoint path. Reads under the
+    * checksum setting [[drain]] wrote with: the source fixes its state
+    * store conf when it loads, so a read with checksums on would look up
+    * a sidecar for every state file and log a warning for each. */
+  def readState(spark: SparkSession, dir: String,
+                options: (String, String)*): DataFrame =
+    graft.Confs.withConfs(spark, Seq(noChecksums)) {
+      spark.read.format("statestore")
+        .option("path", checkpointDir(dir))
+        .options(options.toMap)
+        .load()
     }
 
   private val memorySinks = new java.util.concurrent.atomic.AtomicLong
@@ -219,8 +248,9 @@ object EventStream {
     * checkpoint (exactly what a continuously-scheduled job wants);
     * one-shot consumers needing every window use [[runToMemory]].
     * The sink and checkpoint live under the drain root `dir`
-    * ([[dataDir]], [[checkpointDir]]); returns the sink read back as a
-    * DataFrame.
+    * ([[dataDir]], [[checkpointDir]]), by default a fresh [[graft.TempDirs]]
+    * dir per call; a caller that reopens the root (a restart, a state
+    * read) passes its own. Returns the sink read back as a DataFrame.
     *
     * `noData = true` (default) keeps trailing no-data micro-batches on,
     * which event-time operators need to commit the final watermark
@@ -229,7 +259,8 @@ object EventStream {
     * advances the TTL clock and schedules eviction work, so
     * AvailableNow never reaches its all-committed termination state
     * and the drain spins forever. */
-  def runToFiles(spark: SparkSession, streamed: DataFrame, dir: String,
+  def runToFiles(spark: SparkSession, streamed: DataFrame,
+                 dir: String = graft.TempDirs.create("graft_drain"),
                  noData: Boolean = true,
                  parts: Int = graft.Confs.stateParts(1L << 20)): DataFrame = {
     // State partitions sized to the STATE ([[graft.Confs.stateParts]]),
@@ -258,6 +289,18 @@ object EventStream {
                    event_type: String, value: Double, props: String)
   case class Session(user_id: Long, session_id: Int, session_start: Long,
                      session_end: Long, n_events: Long)
+
+  /** The strict (ts, event_id) arrival guard of the per-user ordered
+    * operators: `e` must sort after the user's last seen (lastTs, lastId);
+    * lastTs = Long.MinValue means nothing has been seen yet. `op` names
+    * the operator in the failure. */
+  private def requireAfter(op: String, uid: Long, e: Event,
+                           lastTs: Long, lastId: Long): Unit =
+    if (lastTs != Long.MinValue &&
+        (e.ts < lastTs || (e.ts == lastTs && e.event_id <= lastId)))
+      throw new IllegalStateException(
+        s"$op: out-of-order arrival for user $uid " +
+          s"(got (ts, id) (${e.ts}, ${e.event_id}) after ($lastTs, $lastId))")
 
   val SessionGapMicros: Long = 30L * 60 * 1000 * 1000 // 30 min
 
@@ -504,13 +547,7 @@ object EventStream {
             var st = state.getOption.getOrElse(
               SeqState(0L, Long.MinValue, Long.MinValue))
             val out = sorted.map { e =>
-              if (st.lastTs != Long.MinValue &&
-                  (e.ts < st.lastTs ||
-                    (e.ts == st.lastTs && e.event_id <= st.lastId)))
-                throw new IllegalStateException(
-                  s"userSeqStream: out-of-order arrival for user $uid " +
-                    s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-                    s"(${st.lastTs}, ${st.lastId}))")
+              requireAfter("userSeqStream", uid, e, st.lastTs, st.lastId)
               st = SeqState(st.n + 1, e.ts, e.event_id)
               SeqAssigned(uid, st.n, e.event_id)
             }
@@ -567,13 +604,7 @@ object EventStream {
               FunnelState(UNSET, UNSET, UNSET, Long.MinValue, Long.MinValue))
             val out = Seq.newBuilder[StageHit]
             sorted.foreach { e =>
-              if (st.lastTs != Long.MinValue &&
-                  (e.ts < st.lastTs ||
-                    (e.ts == st.lastTs && e.event_id <= st.lastId)))
-                throw new IllegalStateException(
-                  s"funnelStream: out-of-order arrival for user $uid " +
-                    s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-                    s"(${st.lastTs}, ${st.lastId}))")
+              requireAfter("funnelStream", uid, e, st.lastTs, st.lastId)
               // strict > comparisons mirror q62's batch semantics bit
               // for bit; UNSET = Long.MinValue never collides with a
               // real timestamp (ts = 0 anchors normally)
@@ -631,12 +662,7 @@ object EventStream {
       val out = sorted.map { e =>
         val (lastTs, lastId) =
           if (guard.exists()) guard.get() else (Long.MinValue, Long.MinValue)
-        if (lastTs != Long.MinValue &&
-            (e.ts < lastTs || (e.ts == lastTs && e.event_id <= lastId)))
-          throw new IllegalStateException(
-            s"typeSeqStream: out-of-order arrival for user $uid " +
-              s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-              s"($lastTs, $lastId))")
+        requireAfter("typeSeqStream", uid, e, lastTs, lastId)
         val n = (if (counts.containsKey(e.event_type))
           counts.getValue(e.event_type) else 0L) + 1L
         counts.updateValue(e.event_type, n)
@@ -716,12 +742,7 @@ object EventStream {
       val out = sorted.map { e =>
         val (lastTs, lastId) =
           if (guard.exists()) guard.get() else (Long.MinValue, Long.MinValue)
-        if (lastTs != Long.MinValue &&
-            (e.ts < lastTs || (e.ts == lastTs && e.event_id <= lastId)))
-          throw new IllegalStateException(
-            s"recentActivityStream: out-of-order arrival for user $uid " +
-              s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-              s"($lastTs, $lastId))")
+        requireAfter("recentActivityStream", uid, e, lastTs, lastId)
         guard.update((e.ts, e.event_id))
         val day = e.ts / DayMicros
         val cutoff = day - nDays + 1
@@ -794,12 +815,7 @@ object EventStream {
       val out = sorted.map { e =>
         val (lastTs, lastId) =
           if (guard.exists()) guard.get() else (Long.MinValue, Long.MinValue)
-        if (lastTs != Long.MinValue &&
-            (e.ts < lastTs || (e.ts == lastTs && e.event_id <= lastId)))
-          throw new IllegalStateException(
-            s"recentPatternStream: out-of-order arrival for user $uid " +
-              s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-              s"($lastTs, $lastId))")
+        requireAfter("recentPatternStream", uid, e, lastTs, lastId)
         guard.update((e.ts, e.event_id))
         val ctx = (Vector.fill(k - 1 - buf.length)("_") ++ buf) :+ e.event_type
         buf = (buf :+ e.event_type).takeRight(k - 1)
@@ -1118,13 +1134,7 @@ object EventStream {
     var st = st0
     val out = Seq.newBuilder[CepMatchN]
     sorted.foreach { e =>
-      if (st.lastTs != Long.MinValue &&
-          (e.ts < st.lastTs ||
-            (e.ts == st.lastTs && e.event_id <= st.lastId)))
-        throw new IllegalStateException(
-          s"cepStream: out-of-order arrival for user $uid " +
-            s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-            s"(${st.lastTs}, ${st.lastId}))")
+      requireAfter("cepStream", uid, e, st.lastTs, st.lastId)
       // horizon pruning: a chain open at stage i matters while a future
       // stage-i+1 event can still satisfy t <= anchor + w_{i+1}
       // (ts only grows, so a pruned chain can never revive)
@@ -1219,13 +1229,7 @@ object EventStream {
             var st = state.getOption.getOrElse(
               ZState(Nil, Long.MinValue, Long.MinValue))
             val out = sorted.map { e =>
-              if (st.lastTs != Long.MinValue &&
-                  (e.ts < st.lastTs ||
-                    (e.ts == st.lastTs && e.event_id <= st.lastId)))
-                throw new IllegalStateException(
-                  s"zscoreStream: out-of-order arrival for user $uid " +
-                    s"(got (ts, id) (${e.ts}, ${e.event_id}) after " +
-                    s"(${st.lastTs}, ${st.lastId}))")
+              requireAfter("zscoreStream", uid, e, st.lastTs, st.lastId)
               val v = java.math.BigDecimal.valueOf(e.value * 100)
                 .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
               val n = st.window.size.toLong

@@ -7,11 +7,12 @@ import graft.streaming.{EventStream, VersionedView}
 /** The drain contract [[EventStream]] owns: state partitions are a
   * per-drain knob ([[Confs.stateParts]]), scoped for the drain's
   * lifetime and restored afterwards — and the knob must actually reach
-  * the state store, not just the session conf; the staged reader's
+  * the state store, not just the session conf; an arrival fixture
+  * records the schema its files declare, and its reader's
   * files-per-trigger reaches the batch count; a staged fixture's
   * arrival order is the order [[Stager.arrive]] stamps; a drain root
-  * holds its sink and checkpoint; and a memory drain leaves no session
-  * state. */
+  * holds its sink and checkpoint, and each default root is fresh; and a
+  * memory drain leaves no session state. */
 class DrainSizingSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -50,9 +51,8 @@ class DrainSizingSpec extends SparkSpec {
   test("VersionedView.run folds and commits versions at `parts` partitions") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val root = java.nio.file.Files.createTempDirectory("graft_dszv").toString
-    val inDir = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
-    val schema = graft.queries.StreamMediaQueries.dedupStreamSchema
-    val stream = EventStream.readStaged(spark, schema, s"$inDir/part-*")
+    val docs = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
+    val stream = docs.read(spark)
     val base = spark.range(0)
       .select(col("id").as("doc_id"), col("id").as("n"))
     val state = VersionedView.run(spark, stream, s"$root/state",
@@ -73,7 +73,7 @@ class DrainSizingSpec extends SparkSpec {
         s"${v.getName} has $dataFiles parquet files, expected <= 2")
     }
     // and the final state equals the batch recompute
-    val batchAll = spark.read.schema(schema).parquet(s"$inDir/part-*")
+    val batchAll = spark.read.schema(docs.schema).parquet(s"${docs.dir}/part-*")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     assert(state.exceptAll(batchAll).isEmpty &&
       batchAll.exceptAll(state).isEmpty)
@@ -84,17 +84,15 @@ class DrainSizingSpec extends SparkSpec {
     new java.io.File(s"${EventStream.checkpointDir(dir)}/commits").listFiles()
       .count(_.getName.forall(_.isDigit))
 
+  // `readStaged` became `Arrivals.read`; the test keeps its established name
   test("readStaged's perTrigger sets the batch count; runToFiles owns the dir layout") {
-    val inDir = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
-    val schema = graft.queries.StreamMediaQueries.dedupStreamSchema
+    val staged = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
     def drain(stream: org.apache.spark.sql.DataFrame): (String, Long) = {
       val dir = java.nio.file.Files.createTempDirectory("graft_dszr").toString
       (dir, EventStream.runToFiles(spark, stream, dir).count())
     }
-    val glob = s"$inDir/part-*"
-    val (byDefault, nDefault) = drain(EventStream.readStaged(spark, schema, glob))
-    val (bySingle, nSingle) =
-      drain(EventStream.readStaged(spark, schema, glob, perTrigger = 1))
+    val (byDefault, nDefault) = drain(staged.read(spark))
+    val (bySingle, nSingle) = drain(staged.read(spark, perTrigger = 1))
     // the fixture is 4 files: 2 per trigger by default, 1 when pinned
     assert(committedBatches(byDefault) == 2)
     assert(committedBatches(bySingle) == 4)
@@ -121,15 +119,39 @@ class DrainSizingSpec extends SparkSpec {
     Stager.arrive(written.reverse)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
     EventStream.drain(spark,
-      EventStream.readStaged(spark,
-          org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"),
-          s"$in/*.parquet", perTrigger = 1)
+      EventStream.Arrivals.of(spark, in).read(spark, perTrigger = 1)
         .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           seen.add(id -> batch.as[Long].collect().toSeq): Unit
         }, None)
     import scala.jdk.CollectionConverters._
     assert(seen.asScala.toSeq.sortBy(_._1) ==
       Seq(0L -> Seq(0L), 1L -> Seq(1L), 2L -> Seq(2L)))
+  }
+
+  test("runToFiles with no dir drains each call into a fresh root") {
+    // a shared default root would resume the first drain's checkpoint:
+    // the second drain would find every file already committed and read
+    // back only the first drain's rows
+    val docs = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
+    val all = Tables.load(spark, sf, "documents")
+    val even = col("doc_id") % 2 === 0
+    assert(EventStream.runToFiles(spark, docs.read(spark).filter(even)).count() ==
+      all.filter(even).count())
+    assert(EventStream.runToFiles(spark, docs.read(spark)).count() == all.count())
+  }
+
+  test("an Arrivals records the schema every one of its files declares") {
+    val q = graft.queries.StreamMediaQueries
+    // tiles and the sentinel pushers come from different writes
+    val events = q.ensureTimerSessionStream(spark, sf)
+    assert(events.schema == EventStream.schema)
+    Seq(events, q.ensureDedupStreamInput(spark, sf)).foreach { a =>
+      val files = new java.io.File(a.dir).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty)
+      files.foreach(f =>
+        assert(spark.read.parquet(f.getPath).schema == a.schema, f.getName))
+    }
   }
 
   test("runToMemory drops its sink's temp view; the frame stays readable") {

@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     // session_window (engine-owned merging windows).
     import spark.implicits._
     def typedSessions(): Set[(Long, Int, Long, Long, Long)] = {
-      val inDir = graft.queries.StreamMediaQueries.ensureSessionStream(spark, sf)
+      val inDir = graft.queries.StreamMediaQueries.ensureSessionStream(spark, sf).dir
       val stream = spark.readStream.schema(EventStream.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$inDir/*.parquet")
@@ -1052,7 +1052,7 @@ class StreamingSpec extends SparkSpec {
     // the algebraic-state claim: draining 1 file per micro-batch and
     // draining everything in one batch must produce the identical
     // snapshot, and both must equal the plain batch aggregation
-    val inDir = graft.queries.StreamMediaQueries.ensureDocCardStream(spark, sf)
+    val inDir = graft.queries.StreamMediaQueries.ensureDocCardStream(spark, sf).dir
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("source", StringType)))
@@ -2405,7 +2405,7 @@ class StreamingSpec extends SparkSpec {
     }
     spark.streams.addListener(listener)
     try {
-      val inDir = graft.queries.StreamMediaQueries.ensureGateStream(spark, sf)
+      val inDir = graft.queries.StreamMediaQueries.ensureGateStream(spark, sf).dir
       val total = spark.read.parquet(inDir).count()
       val sch = spark.read.parquet(inDir).schema
       val out = graft.TempDirs.create("graft_listener")
@@ -2452,7 +2452,7 @@ class StreamingSpec extends SparkSpec {
     // accounted for; under policy=max the tiled feed's later tiles
     // land below the jumped watermark and are dropped as late — the
     // row loss this test pins is WHY min is the only correct policy.
-    val (evenDir, oddDir) =
+    val (even, odd) =
       graft.queries.StreamMediaQueries.ensureUnionFeeds(spark, sf)
     def drained(policy: String): Long = {
       val out = graft.TempDirs.create(s"graft_st72spec_$policy")
@@ -2461,7 +2461,7 @@ class StreamingSpec extends SparkSpec {
         .parquet(s"$dir/*.parquet")
         .withColumn("event_time", Tables.eventTime(col("ts")))
         .withWatermark("event_time", "1 hour")
-      val rolled = feed(evenDir).unionByName(feed(oddDir))
+      val rolled = feed(even.dir).unionByName(feed(odd.dir))
         .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
       graft.Confs.withConfs(spark, Seq(
