@@ -123,9 +123,9 @@ object Ingest {
   }
 
   /** Distributed ingest: page fan-out over executors, single partitioned
-    * CSV dataset out (still header-bearing, glob-compatible with the
-    * silver reader). Each task fetches one contiguous slice of pages, so
-    * no shuffle runs before the first fetch. */
+    * CSV dataset out (still header-bearing, read by [[readBronze]] like
+    * the driver loop's run). Each task fetches one contiguous slice of
+    * pages, so no shuffle runs before the first fetch. */
   def ingestDistributed(spark: SparkSession, fetcher: Fetcher,
                         bronzeDir: String, runTs: Instant,
                         perPage: Int = PerPage,
@@ -151,7 +151,7 @@ object Ingest {
       .option("ignoreLeadingWhiteSpace", false)
       .option("ignoreTrailingWhiteSpace", false)
       .mode("overwrite").csv(runDir)
-    val written = spark.read.option("header", true).csv(s"$runDir/*.csv").count()
+    val written = readBronze(spark, runDir).count()
     require(written == total,
       s"ingestion completeness violated: wrote $written rows, expected $total")
     // >= not ==: accumulators in transformations may over-count under
@@ -161,6 +161,21 @@ object Ingest {
       s"page-progress mismatch: fetched ${pagesFetched.value} of $pages pages")
     runDir
   }
+
+  /** The one bronze reader: every `.csv` of the run dir `runDir` under
+    * the fixed [[schema]]. Both ingest paths write that schema, so
+    * nothing is inferred, and the driver lists the one root itself, so
+    * building the frame starts no Spark job (a glob of more than
+    * `parallelPartitionDiscovery.threshold` paths is listed by one).
+    * Each file's header is checked against [[schema]]: a foreign header
+    * fails the scan instead of being read by position. Files not named
+    * `*.csv` are skipped. Run dirs are flat by construction, so a `.csv`
+    * in a subdirectory would be read too. */
+  def readBronze(spark: SparkSession, runDir: String): DataFrame =
+    spark.read.schema(schema).option("header", true)
+      .option("enforceSchema", false)
+      .option("pathGlobFilter", "*.csv")
+      .csv(runDir)
 
   /** Completeness invariant (`README.md:84`): one CSV per page. */
   def assertComplete(spark: SparkSession, runDir: String, total: Int,

@@ -10,7 +10,8 @@ import graft.ops.TextClean
 /** EP2 — bronze CSV → cleansed, partitioned silver Parquet.
   *
   * Reference: `/root/reference/dags/data_transformations_bronze_to_silver.py`
-  *  - glob CSV read, header, no inference (all-string) (`:81-84`)
+  *  - glob CSV read, header, no inference (all-string) (`:81-84`); here
+  *    [[Ingest.readBronze]], the same columns under the fixed schema
   *  - 8-column projection (`:88-90`)
   *  - slug normalize city/state/country (`:94-96`)
   *  - 7 literal mojibake fixups (`:99-105`)
@@ -43,15 +44,19 @@ object Silver {
       .withColumn("country", TextClean.cleanText(col("country")))
 
   /** Full EP2 run: latest bronze run → transform → silver run folder.
-    * Returns the silver run dir written. */
+    * Returns the silver run dir written. The run is read through
+    * [[Ingest.readBronze]]: one root under the fixed schema, where the
+    * reference globs `*.csv` and takes the columns from the header.
+    * Bronze run dirs are flat by construction, so a nested `.csv` would
+    * be read as well; a file whose header differs from the schema fails
+    * the run. */
   def run(spark: SparkSession, bronzeDir: String, silverDir: String,
           runTs: Instant): String = {
     val bronzeRun = Layers.latestBronzeRun(spark, bronzeDir).getOrElse(
       throw new IllegalStateException(
         "No directory with CSV files found in the bronze directory."))
     val out = s"$silverDir/${Layers.runFolderName(runTs)}"
-    val bronze = spark.read.option("header", true).csv(s"$bronzeRun/*.csv")
-    transform(bronze)
+    transform(Ingest.readBronze(spark, bronzeRun.toString))
       .write.mode("overwrite")
       .partitionBy("country", "state") // static overwrite, as the reference (SURVEY.md §4)
       .parquet(out)

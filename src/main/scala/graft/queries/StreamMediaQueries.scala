@@ -1014,7 +1014,7 @@ object StreamMediaQueries {
         val docsStream = ensureDedupStreamInput(s, d).read(s, perTrigger = 1)
         EventStream.drain(s, docsStream.writeStream
           .format("graft.sources.DedupStoreSink")
-          .option("path", s"$tmp/store"), Some(tmp))
+          .option("path", s"$tmp/store"), tmp)
         graft.streaming.DedupStore.read(s, s"$tmp/store")
           .select(col("keep_id"), col("n_copies"))
           .orderBy(col("keep_id"))
@@ -1100,7 +1100,7 @@ object StreamMediaQueries {
                   col("embedding").as("q_embedding")),
                 k = 5, nProbe = 4, rescore = 32)
               .write.mode("append").parquet(s"$out/res")
-          }, Some(out))
+          }, out)
         s.read.parquet(s"$out/res")
           .select(col("query_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
           .orderBy(col("query_id"), col("rank"))
@@ -1354,7 +1354,7 @@ object StreamMediaQueries {
         EventStream.drain(s, ensureOddVectorStream(s, d).read(s)
           .writeStream
           .foreachBatch((batch: DataFrame, _: Long) =>
-            Similarity.appendToIvfIndex(idx, batch)), Some(tmp))
+            Similarity.appendToIvfIndex(idx, batch)), tmp)
         val queries = emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
           .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
         Similarity.ivfIndexTopK(idx, emb, queries, k = 5, nProbe = 4, rescore = 32)
@@ -1456,7 +1456,7 @@ object StreamMediaQueries {
               .write.mode("append").parquet(out)
             graft.ops.Dedup.appendMinhashBandIndex(batch, "doc_id", "text",
               n = 3, k = 16, bands = 4, idx)
-          }, Some(tmp))
+          }, tmp)
         s.read.parquet(out).orderBy(col("id_a"), col("id_b"))
       },
       Some("""WITH w AS (SELECT doc_id,
@@ -1908,7 +1908,7 @@ object StreamMediaQueries {
               batch, col("event_type") === "error" || col("value") < 1.0)
             bad.write.mode("overwrite").parquet(s"$dlqDir/batch_$batchId")
             good.write.mode("overwrite").parquet(s"$mainDir/batch_$batchId")
-          }, Some(tmp))
+          }, tmp)
         val main = s.read.parquet(s"$mainDir/batch_*")
           .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_checksum"))
           .select(lit("main").as("sink"), col("n_rows"), col("id_checksum"))
@@ -1967,7 +1967,7 @@ object StreamMediaQueries {
               .write.mode("overwrite").parquet(s"$qDir/batch_$batchId")
             batch.join(flagged, Seq("doc_id"), "left_anti")
               .write.mode("overwrite").parquet(s"$mainDir/batch_$batchId")
-          }, Some(tmp))
+          }, tmp)
         val main = s.read.parquet(s"$mainDir/batch_*")
           .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_checksum"))
           .select(lit("main").as("sink"), col("n_docs"), col("id_checksum"))
@@ -3585,7 +3585,7 @@ object StreamMediaQueries {
         val q = EventStream.drain(s, streamed.writeStream
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
           .format("parquet")
-          .option("path", EventStream.dataDir(out)), Some(out), noData = false)
+          .option("path", EventStream.dataDir(out)), out, noData = false)
         val perBatch = q.recentProgress.toSeq
           .flatMap(p => Option(p.observedMetrics.get("ingest"))
             .map(r => p.batchId -> r))

@@ -140,8 +140,8 @@ object EventStream {
   def checkpointDir(dir: String): String = s"$dir/ckpt"
 
   /** Start `writer` with `Trigger.AvailableNow`, checkpointed under
-    * `dir` (see [[checkpointDir]]; `None` = Spark's own temporary
-    * checkpoint), and block until it has drained everything available.
+    * `dir` (see [[checkpointDir]]), and block until it has drained
+    * everything available.
     * Returns the terminated query, whose `recentProgress` still holds
     * the per-batch telemetry. One-shot drain tuning, restored afterwards:
     *  - `noData` keeps (default) or skips the trailing no-data
@@ -153,12 +153,11 @@ object EventStream {
     * batch jobs that keep session parallelism, so [[runToFiles]] and
     * [[runToMemory]] scope them around their own stateful queries. */
   def drain[T](spark: SparkSession, writer: DataStreamWriter[T],
-               dir: Option[String], noData: Boolean = true): StreamingQuery =
+               dir: String, noData: Boolean = true): StreamingQuery =
     graft.Confs.withConfs(spark, Seq(
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noData.toString,
       noChecksums)) {
-      val q = dir.fold(writer)(d =>
-          writer.option("checkpointLocation", checkpointDir(d)))
+      val q = writer.option("checkpointLocation", checkpointDir(dir))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -192,6 +191,10 @@ object EventStream {
     * is [[runToFiles]]: Append mode + watermark to a parquet sink, no
     * driver-held result.
     *
+    * The checkpoint goes to a fresh [[graft.TempDirs]] root, not to
+    * Spark's temporary one under `java.io.tmpdir`, which a failed drain
+    * would leave behind.
+    *
     * The sink gets a fresh name per call. Spark registers a memory sink
     * as a session temp view, which would pin its rows on the driver for
     * the session's life; the returned frame is resolved first and the
@@ -209,7 +212,7 @@ object EventStream {
       graft.Confs.withConfs(spark, Seq(
         "spark.sql.shuffle.partitions" -> parts.toString)) {
         drain(spark, streamed.writeStream.outputMode(mode).format("memory")
-          .queryName(name), None, noData = false)
+          .queryName(name), graft.TempDirs.create("graft_mem"), noData = false)
       }
       spark.table(name)
     } finally spark.catalog.dropTempView(name)
@@ -276,7 +279,7 @@ object EventStream {
       drain(spark, streamed.writeStream
         .outputMode(OutputMode.Append)
         .format("parquet")
-        .option("path", dataDir(dir)), Some(dir), noData)
+        .option("path", dataDir(dir)), dir, noData)
       spark.read.parquet(dataDir(dir))
     }
   }

@@ -12,7 +12,8 @@ import graft.streaming.{EventStream, VersionedView}
   * files-per-trigger reaches the batch count; a staged fixture's
   * arrival order is the order [[Stager.arrive]] stamps; a drain root
   * holds its sink and checkpoint, and each default root is fresh; and a
-  * memory drain leaves no session state. */
+  * memory drain leaves no session state and, failed, no checkpoint
+  * outside its [[TempDirs]] root. */
 class DrainSizingSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -122,7 +123,7 @@ class DrainSizingSpec extends SparkSpec {
       EventStream.Arrivals.of(spark, in).read(spark, perTrigger = 1)
         .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
           seen.add(id -> batch.as[Long].collect().toSeq): Unit
-        }, None)
+        }, TempDirs.create("graft_arrive_drain"))
     import scala.jdk.CollectionConverters._
     assert(seen.asScala.toSeq.sortBy(_._1) ==
       Seq(0L -> Seq(0L), 1L -> Seq(1L), 2L -> Seq(2L)))
@@ -169,5 +170,22 @@ class DrainSizingSpec extends SparkSpec {
     assert(snap.collect().toSeq.sortBy(_.toString) == first.sortBy(_.toString))
     assert(first.map(_.getAs[Long]("n_events")).sum ==
       Tables.load(spark, sf, "events").count())
+  }
+
+  test("a failed runToMemory leaves no checkpoint under java.io.tmpdir") {
+    // Spark's own temporary checkpoint (temporary-<uuid>) is deleted only
+    // when its query stops cleanly
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temporaries(): Set[String] =
+      tmp.list().filter(_.startsWith("temporary-")).toSet
+    val before = temporaries()
+    val boom = udf { (n: Long) =>
+      if (n >= 0) throw new IllegalStateException("boom") else n
+    }
+    intercept[Exception] {
+      EventStream.runToMemory(spark, EventStream.readEvents(spark, sf)
+        .select(boom(col("event_id")).as("x")).groupBy("x").count())
+    }
+    assert(temporaries() -- before == Set.empty[String])
   }
 }

@@ -3,13 +3,16 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Gold, Ingest, Layers, SampleFetcher, Silver}
 
 /** End-to-end medallion pipeline test: stubbed ingest → bronze CSV →
   * silver cleanse → gold counts, plus latest-run discovery, `_SUCCESS`
-  * gating, and the ingestion completeness invariant (SURVEY.md §5). */
+  * gating, the ingestion completeness invariant (SURVEY.md §5), and the
+  * bronze reader's contract: no job to build it, stray files skipped,
+  * foreign headers refused, and the rows of the reference's glob read. */
 class PipelineSpec extends SparkSpec {
 
   private lazy val root = Files.createTempDirectory("graft_pipeline").toString
@@ -101,6 +104,80 @@ class PipelineSpec extends SparkSpec {
     assert(gold.select("brewery_type", "country", "state", "brewery_count").exceptAll(direct).isEmpty)
     // global temp view is queryable
     assert(spark.table(s"global_temp.${Gold.ViewName}").count() == gold.count())
+  }
+
+  private val quiet: Ingest.ProgressListener = (_: Int, _: Int) => ()
+
+  /** A driver-loop run of 50 bronze CSVs: more paths than Spark's
+    * parallel-discovery threshold of 32, which a glob read lists with a
+    * Spark job. */
+  private lazy val wideRun = Ingest.ingest(spark, new SampleFetcher(10000),
+    s"$root/bronze_wide", t0, progress = quiet)
+
+  test("readBronze plans no Spark job, even over more files than the listing threshold") {
+    assert(new java.io.File(wideRun).list().count(_.endsWith(".csv")) == 50)
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id"))): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("build") {
+        assert(Ingest.readBronze(spark, wideRun).schema == Ingest.schema)
+      }
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, so has the start of every job before it
+      inGroup("marker")(sc.parallelize(Seq(1), 1).count())
+      val seen = Iterator.continually(
+          groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { g => assert(g != null, "marker job never seen"); g != "marker" }
+        .toSeq
+      assert(seen.count(_ == "build") == 0,
+        s"building the bronze frame ran ${seen.count(_ == "build")} Spark job(s)")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("silver skips stray files in the bronze run and refuses a foreign header") {
+    val lake = TempDirs.create("graft_foreign")
+    val runDir = Ingest.ingest(spark, new SampleFetcher(450), s"$lake/bronze", t0,
+      progress = quiet)
+    def write(name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(runDir, name),
+        lines.mkString("", "\r\n", "\r\n").getBytes("UTF-8")): Unit
+    // CSV-shaped, so it would add a row if it were read
+    write("notes.txt", Seq(Ingest.header.mkString(","), Ingest.header.mkString(",")))
+    val silver = Silver.run(spark, s"$lake/bronze", s"$lake/silver", t0)
+    assert(spark.read.parquet(silver).count() == 450)
+    // same names, other order: a read by position would swap every column
+    write("brewery_data_99.csv", Seq(Ingest.header.reverse.mkString(","),
+      Ingest.header.reverse.mkString(",")))
+    val e = intercept[Exception] {
+      Silver.run(spark, s"$lake/bronze", s"$lake/silver", t1)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains("CSV header does not conform to the schema")),
+      messages.mkString("\n"))
+  }
+
+  test("readBronze gives the silver rows of the reference's glob read") {
+    val dist = Ingest.ingestDistributed(spark, new SampleFetcher(450),
+      s"$root/bronze_dist_parity", t0, progress = quiet)
+    Seq(wideRun -> 10000L, dist -> 450L).foreach { case (runDir, n) =>
+      val ours = Silver.transform(Ingest.readBronze(spark, runDir))
+      // the reference's read (`…bronze_to_silver.py:81-84`)
+      val reference = Silver.transform(
+        spark.read.option("header", true).csv(s"$runDir/*.csv"))
+      assert(ours.count() == n)
+      assert(ours.exceptAll(reference).isEmpty && reference.exceptAll(ours).isEmpty,
+        runDir)
+    }
   }
 
   test("distributed ingest parity: same rows as driver-side ingest") {
