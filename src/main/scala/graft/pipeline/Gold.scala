@@ -42,7 +42,8 @@ object Gold {
     counts.createOrReplaceGlobalTempView(ViewName)
     // catalog RPC, as the reference logs (`gold_data_aggregation.py:55-59`)
     spark.catalog.listTables("global_temp")
-    counts.write.mode("overwrite").partitionBy("country").parquet(out)
+    counts.write.options(Layers.WriteOptions).mode("overwrite")
+      .partitionBy("country").parquet(out)
     out
   }
 }

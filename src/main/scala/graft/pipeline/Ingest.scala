@@ -97,7 +97,8 @@ object Ingest {
       records.iterator.map(r => fields.map(k => r.getOrElse(k, null)))
     }
 
-  /** Driver-side ingest (reference-parity). Returns the bronze run dir. */
+  /** Driver-side ingest (reference-parity). Returns the bronze run dir,
+    * marked complete only once every page has landed. */
   def ingest(spark: SparkSession, fetcher: Fetcher, bronzeDir: String,
              runTs: Instant, perPage: Int = PerPage,
              progress: ProgressListener = LogProgress): String = {
@@ -106,6 +107,8 @@ object Ingest {
     val runDir = new Path(bronzeDir, Layers.runFolderName(runTs))
     val hfs = Layers.fs(spark, bronzeDir)
     hfs.mkdirs(runDir)
+    // a rerun in the same minute stays unmarked until it completes
+    hfs.delete(new Path(runDir, Layers.Marker), false)
     for (n <- 1 to pages) {
       val rows = fetcher.page(n, perPage)
       val out = hfs.create(new Path(runDir, s"brewery_data_$n.csv"), true)
@@ -119,13 +122,16 @@ object Ingest {
       progress.pageFetched(n, total) // XCom-parity: after the page lands
     }
     assertComplete(spark, runDir.toString, total, perPage)
+    Layers.markComplete(spark, runDir.toString)
     runDir.toString
   }
 
   /** Distributed ingest: page fan-out over executors, single partitioned
     * CSV dataset out (still header-bearing, read by [[readBronze]] like
     * the driver loop's run). Each task fetches one contiguous slice of
-    * pages, so no shuffle runs before the first fetch. */
+    * pages, so no shuffle runs before the first fetch. Spark's own
+    * `_SUCCESS` is off: the run is marked only after the row and page
+    * checks pass. */
   def ingestDistributed(spark: SparkSession, fetcher: Fetcher,
                         bronzeDir: String, runTs: Instant,
                         perPage: Int = PerPage,
@@ -144,7 +150,9 @@ object Ingest {
         }).map(Row.fromSeq)
       }
     spark.createDataFrame(rows, schema)
-      .write.option("header", true)
+      .write.options(Layers.WriteOptions)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+      .option("header", true)
       // Spark's CSV writer trims whitespace by default; keep raw bytes so
       // dirty values like " United States" survive to bronze (the silver
       // layer is where cleansing happens — parity with python csv.writer)
@@ -159,6 +167,7 @@ object Ingest {
     // is the exact completeness gate
     require(pagesFetched.value >= pages,
       s"page-progress mismatch: fetched ${pagesFetched.value} of $pages pages")
+    Layers.markComplete(spark, runDir)
     runDir
   }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -13,13 +14,25 @@ import org.apache.spark.sql.SparkSession
   *    America/Sao_Paulo local time
   *    (`/root/reference/dags/fetch_data_with_meta_from_api.py:15,29,34`)
   *  - latest-bronze discovery = newest `brewery_data*` folder containing
-  *    `.csv` files (`…/data_transformations_bronze_to_silver.py:52-63`)
+  *    `.csv` files (`…/data_transformations_bronze_to_silver.py:52-63`),
+  *    here refused unless that run carries its `_SUCCESS` marker
   *  - latest-silver discovery = newest folder containing a `_SUCCESS`
   *    marker (`…/gold_data_aggregation.py:19-30`)
   *
   * Uses Hadoop `FileSystem` (not `java.io`) so the same code runs on local
   * FS, HDFS, or object stores on a real cluster. Discovery is driver-side
   * metadata work, never a DataFrame job (SURVEY.md §2.5 row 14).
+  *
+  * Every layer write carries [[WriteOptions]]: [[fs]] resolves paths
+  * with them, and the Spark writes of silver, gold and distributed ingest
+  * pass them with `.options`, which Spark merges into the job's Hadoop
+  * conf (committer, file writers and `_SUCCESS` alike). They ride each
+  * write rather than the session because Hadoop caches one `file:`
+  * filesystem per scheme, authority and user, not per class: a session
+  * `fs.file.impl` would only take effect if nothing in the JVM had
+  * resolved a `file:` path before. With the cache bypassed, each write
+  * gets [[NioLocalFileSystem]] however its session was built, and every
+  * other `file:` path in the JVM keeps the stock filesystem.
   */
 object Layers {
 
@@ -31,11 +44,28 @@ object Layers {
 
   val RunPrefix = "brewery_data"
 
+  /** The completeness marker: written last into a finished run. */
+  val Marker = "_SUCCESS"
+
+  /** Hadoop options of every layer write: local files through
+    * [[NioLocalFileSystem]], which sets permissions without forking
+    * `chmod`, outside Hadoop's filesystem cache. */
+  val WriteOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   def runFolderName(ts: Instant): String =
     s"${RunPrefix}_${fmt.format(ts.atZone(RunZone))}"
 
-  def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def fs(spark: SparkSession, dir: String): FileSystem = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    WriteOptions.foreach { case (k, v) => conf.set(k, v) }
+    new Path(dir).getFileSystem(conf)
+  }
+
+  /** Marks `runDir` complete with an empty [[Marker]]. */
+  def markComplete(spark: SparkSession, runDir: String): Unit =
+    fs(spark, runDir).create(new Path(runDir, Marker), true).close()
 
   /** Newest `brewery_data*` run folder under `layerDir` accepted by
     * `accept`; folder names sort chronologically so lexicographic
@@ -52,14 +82,21 @@ object Layers {
   }
 
   /** Latest bronze run: newest folder containing at least one `.csv`
-    * (`…bronze_to_silver.py:52-63`). */
+    * (`…bronze_to_silver.py:52-63`). Throws if that run has no
+    * [[Marker]]: its ingest failed or is still writing, and an older run
+    * is not a quiet substitute for it. */
   def latestBronzeRun(spark: SparkSession, bronzeDir: String): Option[Path] =
     latestRun(spark, bronzeDir) { (hfs, p) =>
-      hfs.listStatus(p).exists(f => f.isFile && f.getPath.getName.endsWith(".csv"))
+      val names = hfs.listStatus(p).collect { case f if f.isFile => f.getPath.getName }
+      val hasCsv = names.exists(_.endsWith(".csv"))
+      if (hasCsv && !names.contains(Marker))
+        throw new IllegalStateException(
+          s"Bronze run $p has CSV files but no $Marker marker: it is incomplete.")
+      hasCsv
     }
 
   /** Latest completed parquet run: newest folder with a `_SUCCESS` marker
     * (`gold_data_aggregation.py:26-30`) — write-completeness gating. */
   def latestSuccessfulRun(spark: SparkSession, layerDir: String): Option[Path] =
-    latestRun(spark, layerDir) { (hfs, p) => hfs.exists(new Path(p, "_SUCCESS")) }
+    latestRun(spark, layerDir) { (hfs, p) => hfs.exists(new Path(p, Marker)) }
 }

@@ -49,7 +49,8 @@ object Silver {
     * reference globs `*.csv` and takes the columns from the header.
     * Bronze run dirs are flat by construction, so a nested `.csv` would
     * be read as well; a file whose header differs from the schema fails
-    * the run. */
+    * the run, and so does a newest run that was never marked complete
+    * ([[Layers.latestBronzeRun]]). */
   def run(spark: SparkSession, bronzeDir: String, silverDir: String,
           runTs: Instant): String = {
     val bronzeRun = Layers.latestBronzeRun(spark, bronzeDir).getOrElse(
@@ -57,7 +58,7 @@ object Silver {
         "No directory with CSV files found in the bronze directory."))
     val out = s"$silverDir/${Layers.runFolderName(runTs)}"
     transform(Ingest.readBronze(spark, bronzeRun.toString))
-      .write.mode("overwrite")
+      .write.options(Layers.WriteOptions).mode("overwrite")
       .partitionBy("country", "state") // static overwrite, as the reference (SURVEY.md §4)
       .parquet(out)
     out

@@ -28,7 +28,7 @@ class DrainSizingSpec extends SparkSpec {
 
   test("runToFiles scopes state partitions to `parts` and restores the session") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val out = java.nio.file.Files.createTempDirectory("graft_dsz").toString
+    val out = TempDirs.create("graft_dsz")
     val drained = EventStream.runToFiles(spark,
       EventStream.hourlyCounts(EventStream.readEvents(spark, sf)),
       out, parts = 2)
@@ -42,7 +42,7 @@ class DrainSizingSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
     // and content is partition-count-invariant: same windows as a
     // default-parts drain
-    val out2 = java.nio.file.Files.createTempDirectory("graft_dsz2").toString
+    val out2 = TempDirs.create("graft_dsz2")
     val default = EventStream.runToFiles(spark,
       EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), out2)
     assert(drained.exceptAll(default).isEmpty &&
@@ -51,7 +51,7 @@ class DrainSizingSpec extends SparkSpec {
 
   test("VersionedView.run folds and commits versions at `parts` partitions") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val root = java.nio.file.Files.createTempDirectory("graft_dszv").toString
+    val root = TempDirs.create("graft_dszv")
     val docs = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
     val stream = docs.read(spark)
     val base = spark.range(0)
@@ -89,7 +89,7 @@ class DrainSizingSpec extends SparkSpec {
   test("readStaged's perTrigger sets the batch count; runToFiles owns the dir layout") {
     val staged = graft.queries.StreamMediaQueries.ensureDedupStreamInput(spark, sf)
     def drain(stream: org.apache.spark.sql.DataFrame): (String, Long) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_dszr").toString
+      val dir = TempDirs.create("graft_dszr")
       (dir, EventStream.runToFiles(spark, stream, dir).count())
     }
     val (byDefault, nDefault) = drain(staged.read(spark))

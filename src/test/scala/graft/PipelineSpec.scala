@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -10,12 +9,13 @@ import graft.pipeline.{Gold, Ingest, Layers, SampleFetcher, Silver}
 
 /** End-to-end medallion pipeline test: stubbed ingest → bronze CSV →
   * silver cleanse → gold counts, plus latest-run discovery, `_SUCCESS`
-  * gating, the ingestion completeness invariant (SURVEY.md §5), and the
+  * gating (an unmarked bronze run is refused, not skipped), the
+  * ingestion completeness invariant (SURVEY.md §5), and the
   * bronze reader's contract: no job to build it, stray files skipped,
   * foreign headers refused, and the rows of the reference's glob read. */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val root = Files.createTempDirectory("graft_pipeline").toString
+  private lazy val root = TempDirs.create("graft_pipeline")
   private val t0 = Instant.parse("2026-08-12T10:00:00Z")
   private val t1 = Instant.parse("2026-08-12T11:00:00Z")
 
@@ -180,6 +180,46 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("an incomplete bronze run is never read: silver refuses it, naming the run") {
+    val lake = TempDirs.create("graft_partial")
+    // an older complete run must not stand in for the failed one
+    Ingest.ingest(spark, new SampleFetcher(450), s"$lake/bronze", t0, progress = quiet)
+    intercept[java.io.IOException] {
+      Ingest.ingest(spark, new PipelineSpec.FailingFetcher(1000, failAt = 3),
+        s"$lake/bronze", t1, progress = quiet)
+    }
+    val partial = new java.io.File(s"$lake/bronze/${Layers.runFolderName(t1)}")
+    assert(partial.list().count(_.endsWith(".csv")) == 2) // 400 rows landed
+    val refused = intercept[IllegalStateException] {
+      Silver.run(spark, s"$lake/bronze", s"$lake/silver", t1)
+    }
+    assert(refused.getMessage.contains(partial.getName), refused.getMessage)
+    assert(!new java.io.File(s"$lake/silver").exists())
+    // a complete rerun in the same minute marks the run; a failed one
+    // over it takes the mark away again
+    Ingest.ingest(spark, new SampleFetcher(450), s"$lake/bronze", t1, progress = quiet)
+    assert(Layers.latestBronzeRun(spark, s"$lake/bronze").map(_.getName)
+      .contains(partial.getName))
+    intercept[java.io.IOException] {
+      Ingest.ingest(spark, new PipelineSpec.FailingFetcher(1000, failAt = 3),
+        s"$lake/bronze", t1, progress = quiet)
+    }
+    intercept[IllegalStateException](Layers.latestBronzeRun(spark, s"$lake/bronze"))
+    // distributed: the row-count check fails after Spark's job commit,
+    // and the run it leaves carries no marker
+    val dist = TempDirs.create("graft_partial_dist")
+    intercept[IllegalArgumentException] {
+      Ingest.ingestDistributed(spark, new PipelineSpec.FailingFetcher(450, failAt = 3, empty = true),
+        s"$dist/bronze", t1, progress = quiet)
+    }
+    val run = new java.io.File(s"$dist/bronze/${Layers.runFolderName(t1)}")
+    assert(run.list().exists(_.endsWith(".csv")))
+    assert(!new java.io.File(run, Layers.Marker).exists())
+    intercept[IllegalStateException] {
+      Silver.run(spark, s"$dist/bronze", s"$dist/silver", t1)
+    }
+  }
+
   test("distributed ingest parity: same rows as driver-side ingest") {
     val fetcher = new SampleFetcher(450)
     val classicDir = Ingest.ingest(spark, fetcher, s"$root/bronze_classic", t0, perPage = 200)
@@ -195,14 +235,14 @@ class PipelineSpec extends SparkSpec {
     // not bit-rot behind the ingest-level parity check): bronze via
     // executor fan-out, then the same silver/gold stages the driver-loop
     // chain runs, landing on identical gold aggregates.
-    val root2 = java.nio.file.Files.createTempDirectory("graft_dist_e2e").toString
+    val root2 = TempDirs.create("graft_dist_e2e")
     val t = Instant.parse("2026-08-12T15:00:00Z")
     Ingest.ingestDistributed(spark, new SampleFetcher(450), s"$root2/bronze", t)
     Silver.run(spark, s"$root2/bronze", s"$root2/silver", t)
     val goldRun = Gold.run(spark, s"$root2/silver", s"$root2/gold", t)
     val gold = spark.read.parquet(goldRun)
     // reference chain: same fetcher through the driver-loop ingest
-    val rootC = java.nio.file.Files.createTempDirectory("graft_dist_ref").toString
+    val rootC = TempDirs.create("graft_dist_ref")
     Ingest.ingest(spark, new SampleFetcher(450), s"$rootC/bronze", t)
     Silver.run(spark, s"$rootC/bronze", s"$rootC/silver", t)
     val refGold = spark.read.parquet(
@@ -210,5 +250,18 @@ class PipelineSpec extends SparkSpec {
     assert(gold.agg(sum("brewery_count")).head.getLong(0) == 450L)
     // same aggregate content as the driver-loop pipeline's gold
     assert(gold.exceptAll(refGold).isEmpty && refGold.exceptAll(gold).isEmpty)
+  }
+}
+
+object PipelineSpec {
+
+  /** [[SampleFetcher]] rows, except that page `failAt` throws, or comes
+    * back `empty`. */
+  class FailingFetcher(nRows: Int, failAt: Int, empty: Boolean = false)
+      extends SampleFetcher(nRows) {
+    override def page(n: Int, perPage: Int): Seq[Map[String, String]] =
+      if (n != failAt) super.page(n, perPage)
+      else if (empty) Seq.empty
+      else throw new java.io.IOException(s"page $n: connection reset")
   }
 }

@@ -13,8 +13,7 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", TempDirs.create("graft_wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
