@@ -42,7 +42,7 @@ object Gold {
     counts.createOrReplaceGlobalTempView(ViewName)
     // catalog RPC, as the reference logs (`gold_data_aggregation.py:55-59`)
     spark.catalog.listTables("global_temp")
-    counts.write.options(Layers.WriteOptions).mode("overwrite")
+    counts.write.options(graft.NioLocalFileSystem.Options).mode("overwrite")
       .partitionBy("country").parquet(out)
     out
   }

@@ -150,7 +150,7 @@ object Ingest {
         }).map(Row.fromSeq)
       }
     spark.createDataFrame(rows, schema)
-      .write.options(Layers.WriteOptions)
+      .write.options(graft.NioLocalFileSystem.Options)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
       .option("header", true)
       // Spark's CSV writer trims whitespace by default; keep raw bytes so

@@ -3,9 +3,10 @@ package graft.pipeline
 import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+
+import graft.NioLocalFileSystem
 
 /** Medallion-layer path conventions and latest-run discovery.
   *
@@ -23,16 +24,11 @@ import org.apache.spark.sql.SparkSession
   * FS, HDFS, or object stores on a real cluster. Discovery is driver-side
   * metadata work, never a DataFrame job (SURVEY.md §2.5 row 14).
   *
-  * Every layer write carries [[WriteOptions]]: [[fs]] resolves paths
-  * with them, and the Spark writes of silver, gold and distributed ingest
-  * pass them with `.options`, which Spark merges into the job's Hadoop
-  * conf (committer, file writers and `_SUCCESS` alike). They ride each
-  * write rather than the session because Hadoop caches one `file:`
-  * filesystem per scheme, authority and user, not per class: a session
-  * `fs.file.impl` would only take effect if nothing in the JVM had
-  * resolved a `file:` path before. With the cache bypassed, each write
-  * gets [[NioLocalFileSystem]] however its session was built, and every
-  * other `file:` path in the JVM keeps the stock filesystem.
+  * Every layer write carries [[graft.NioLocalFileSystem.Options]]: [[fs]]
+  * resolves paths with them, and the Spark writes of silver, gold and
+  * distributed ingest pass them with `.options`, which Spark merges into
+  * the job's Hadoop conf (committer, file writers and `_SUCCESS` alike),
+  * so no layer write forks a `chmod`.
   */
 object Layers {
 
@@ -47,21 +43,11 @@ object Layers {
   /** The completeness marker: written last into a finished run. */
   val Marker = "_SUCCESS"
 
-  /** Hadoop options of every layer write: local files through
-    * [[NioLocalFileSystem]], which sets permissions without forking
-    * `chmod`, outside Hadoop's filesystem cache. */
-  val WriteOptions: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true")
-
   def runFolderName(ts: Instant): String =
     s"${RunPrefix}_${fmt.format(ts.atZone(RunZone))}"
 
-  def fs(spark: SparkSession, dir: String): FileSystem = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    WriteOptions.foreach { case (k, v) => conf.set(k, v) }
-    new Path(dir).getFileSystem(conf)
-  }
+  def fs(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(NioLocalFileSystem.conf(spark))
 
   /** Marks `runDir` complete with an empty [[Marker]]. */
   def markComplete(spark: SparkSession, runDir: String): Unit =

@@ -58,7 +58,7 @@ object Silver {
         "No directory with CSV files found in the bronze directory."))
     val out = s"$silverDir/${Layers.runFolderName(runTs)}"
     transform(Ingest.readBronze(spark, bronzeRun.toString))
-      .write.options(Layers.WriteOptions).mode("overwrite")
+      .write.options(graft.NioLocalFileSystem.Options).mode("overwrite")
       .partitionBy("country", "state") // static overwrite, as the reference (SURVEY.md §4)
       .parquet(out)
     out

@@ -248,7 +248,7 @@ private[sources] class StoreChangesTable(storeDir: String,
     val suppress = DedupStore.loadTombstones(storeDir).toArray
     new ChangesReaderFactory(
       new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()),
+        graft.NioLocalFileSystem.conf(SparkSession.active)),
       suppress)
   }
 

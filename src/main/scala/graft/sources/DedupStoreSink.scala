@@ -113,7 +113,7 @@ private[sources] class DedupStoreWrite(storeDir: String, nBuckets: Int,
 
   private def factory: PartialWriterFactory = {
     val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+      graft.NioLocalFileSystem.conf(SparkSession.active))
     new PartialWriterFactory(stageRoot, conf, docIdx, textIdx)
   }
 

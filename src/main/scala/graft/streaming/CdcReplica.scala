@@ -99,13 +99,9 @@ object CdcReplica {
            base: String, ckptDir: String): DataFrame = {
     val changes = spark.readStream.format("graft.sources.DedupStoreChanges")
       .option("path", storeDir).option("since", cursor).load()
-    val q = changes.writeStream
+    EventStream.drainAt(spark, changes.writeStream
       .foreachBatch((batch: DataFrame, id: Long) =>
-        applyBatch(batch, base, id))
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        applyBatch(batch, base, id)), ckptDir)
     read(spark, base)
   }
 }

@@ -6,7 +6,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental exact-dedup STORE maintained with `foreachBatch` — the
   * merge-on-arrival ingestion pattern: each micro-batch of documents
@@ -149,12 +148,13 @@ object DedupStore {
   // credentials/endpoints exactly as it does for table reads).
 
   /** The session's Hadoop conf when one is active (it carries fs.*
-    * credentials and endpoint settings), a default conf otherwise —
+    * credentials and endpoint settings), with local files through
+    * [[graft.NioLocalFileSystem]]; a default conf otherwise —
     * metadata helpers callable without a session still resolve local
     * and HDFS paths correctly. */
   private def hadoopConf(): Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
+      .map(graft.NioLocalFileSystem.conf)
       .getOrElse(new Configuration())
 
   /** Resolve a store path to its FileSystem + fully-qualified root.
@@ -762,7 +762,8 @@ object DedupStore {
           BloomSidecarItems)
         .toAggregateExpression()).as("bloom")
     rows.observe(bloomObs, bloomCol)
-      .write.mode("overwrite").partitionBy("bucket")
+      .write.options(graft.NioLocalFileSystem.Options)
+      .mode("overwrite").partitionBy("bucket")
       .parquet(staging.toString)
     val bloomBytes: Option[Array[Byte]] =
       bloomObs.get.get("bloom").collect { case v: Array[Byte] => v }
@@ -846,20 +847,13 @@ object DedupStore {
     require(nBuckets >= 1, s"nBuckets must be positive, got $nBuckets")
     val (lockFs, lockRoot) = fsRoot(storeDir)
     val out = withWriterLock(lockFs, lockRoot, "drain") {
-    graft.Confs.withConfs(spark, Seq(
-      // no watermark/stateful operator here: a no-data batch would only
-      // re-reference the whole store into a duplicate version
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) {
-      val q = docs.writeStream
+      EventStream.drainAt(spark, docs.writeStream
         .foreachBatch((batch: DataFrame, batchId: Long) =>
-          mergeBatch(batch, storeDir, nBuckets, batchId))
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          mergeBatch(batch, storeDir, nBuckets, batchId)), ckptDir,
+        // no watermark/stateful operator here: a no-data batch would
+        // only re-reference the whole store into a duplicate version
+        noData = false)
       read(spark, storeDir)
-    }
     }
     // scheduled tombstone hygiene (after the drain lock releases —
     // compactTombstones takes its own): every purge appends one t* file,
@@ -1133,7 +1127,8 @@ object DedupStore {
         "publish each snapshot to a fresh path")
     val tmp = new Path(dest.getParent, dest.getName + ".inprogress")
     fs.delete(tmp, true)
-    read(spark, storeDir).write.mode("overwrite").parquet(tmp.toString)
+    read(spark, storeDir).write.options(graft.NioLocalFileSystem.Options)
+      .mode("overwrite").parquet(tmp.toString)
     atomicWrite(fs, new Path(tmp, "_SOURCE_VERSION"), version)
     if (!fs.rename(tmp, dest))
       throw new IllegalStateException(

@@ -143,22 +143,36 @@ object EventStream {
     * `dir` (see [[checkpointDir]]), and block until it has drained
     * everything available.
     * Returns the terminated query, whose `recentProgress` still holds
-    * the per-batch telemetry. One-shot drain tuning, restored afterwards:
+    * the per-batch telemetry. See [[drainAt]] for the confs it runs
+    * under. */
+  def drain[T](spark: SparkSession, writer: DataStreamWriter[T],
+               dir: String, noData: Boolean = true): StreamingQuery =
+    drainAt(spark, writer, checkpointDir(dir), noData)
+
+  /** Start `writer` under `trigger`, checkpointed at `ckpt`, and block
+    * until it terminates: every streaming start here goes through this.
+    * One-shot drain tuning, restored afterwards (a query copies the
+    * session's confs when it starts, and keeps them):
     *  - `noData` keeps (default) or skips the trailing no-data
     *    micro-batches — see [[runToFiles]] for who needs which;
-    *  - checksum sidecar files are off: each sidecar is an extra
-    *    FileContext create that shells out on the local FS, roughly
-    *    doubling state-commit latency on a per-run checkpoint.
+    *  - Spark's checksum files beside state files are off: each is one
+    *    more file create and rename per state file on a per-run
+    *    checkpoint;
+    *  - [[graft.NioLocalFileSystem.Options]]: checkpoints and state
+    *    stores (through `FileContext`), and the batch writes of a
+    *    foreachBatch body, go through the local filesystem that starts
+    *    no `chmod` or `readlink` process.
     * State partitions are NOT scoped here: a foreachBatch body runs
     * batch jobs that keep session parallelism, so [[runToFiles]] and
     * [[runToMemory]] scope them around their own stateful queries. */
-  def drain[T](spark: SparkSession, writer: DataStreamWriter[T],
-               dir: String, noData: Boolean = true): StreamingQuery =
+  def drainAt[T](spark: SparkSession, writer: DataStreamWriter[T],
+                 ckpt: String, noData: Boolean = true,
+                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     graft.Confs.withConfs(spark, Seq(
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noData.toString,
-      noChecksums)) {
-      val q = writer.option("checkpointLocation", checkpointDir(dir))
-        .trigger(Trigger.AvailableNow())
+      noChecksums) ++ graft.NioLocalFileSystem.Options) {
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(trigger)
         .start()
       q.awaitTermination()
       q

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Kafka-shaped log-source semantics WITHOUT a broker: the
   * `rate-micro-batch` source is the engine's deterministic offset-
@@ -37,7 +38,7 @@ object RateLog {
     * oracle certifies. */
   def drainUntil(s: SparkSession, dataDir: String, ckptDir: String,
                  rowsPerBatch: Int, crashAt: Long): Unit = {
-    val q = s.readStream.format("rate-micro-batch")
+    val writer = s.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", rowsPerBatch.toString)
       .option("numPartitions", "2")
       // pinned event-time base: timestamps are a pure function of the
@@ -54,10 +55,9 @@ object RateLog {
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$dataDir/b$bid")
       }
-      .option("checkpointLocation", ckptDir)
-      .start()
     try {
-      q.awaitTermination()
+      // runs until the planned crash: the default trigger, not AvailableNow
+      EventStream.drainAt(s, writer, ckptDir, trigger = Trigger.ProcessingTime(0L))
       throw new IllegalStateException(
         s"rate drain ended without reaching the crash batch $crashAt")
     } catch {

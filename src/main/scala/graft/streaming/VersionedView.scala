@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** The versioned-directory exactly-once micro-batch recipe, in ONE
   * place (it grew three inline copies — Scd2Dim, st31, st38 — before
@@ -69,15 +68,11 @@ object VersionedView {
     graft.Confs.withConfs(spark, Seq(
       "spark.sql.shuffle.partitions" -> parts.toString)) {
       val root = new java.io.File(rootDir); root.mkdirs()
-      val q = stream.writeStream
+      EventStream.drainAt(spark, stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val prev = stateBefore(batch.sparkSession, root, batchId, base)
           commit(step(prev, batch, batchId), root, batchId)
-        }
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckptDir)
       latest(spark, root, base)
     }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, Dedup}
@@ -38,7 +36,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("curateTo: language-partitioned parquet layout") {
-    val dir = Files.createTempDirectory("graft_curated").toString
+    val dir = TempDirs.create("graft_curated")
     val report = Curation.curateTo(Tables.load(spark, sf, "documents"), dir)
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("pred_lang=")))

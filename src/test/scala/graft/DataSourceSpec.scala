@@ -26,7 +26,7 @@ class DataSourceSpec extends SparkSpec {
 
   test("rows match the driver-side CSV ingest byte-for-byte") {
     val t0 = java.time.Instant.parse("2026-08-12T10:00:00Z")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2").toString
+    val dir = TempDirs.create("graft_dsv2")
     val runDir = Ingest.ingest(spark, new graft.pipeline.SampleFetcher(450), dir, t0, 200)
     val viaCsv = spark.read.option("header", true).csv(s"$runDir/*.csv")
     val viaApi = readApi(1)

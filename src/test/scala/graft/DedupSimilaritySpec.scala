@@ -308,7 +308,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("IVF index append (s11): assignment matches the codebook argmax; base files untouched") {
     val emb = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_appidx").toString
+    val tmp = TempDirs.create("graft_appidx")
     val idx = s"$tmp/index"
     Similarity.buildIvfIndex(emb.filter(col("vec_id") % 2 === 0), idx,
       nCells = 16, trainIters = 2)
@@ -825,7 +825,7 @@ class DedupSimilaritySpec extends SparkSpec {
     }
     def df(rows: Seq[(Long, Seq[Float])]) = rows.toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val tmp = TempDirs.create("graft_skew")
     val idx = s"$tmp/index"
     Similarity.buildIvfIndex(df(orig), idx, nCells = 8, trainIters = 2)
     val balanced = Similarity.indexCellSkew(spark, idx)
@@ -868,7 +868,7 @@ class DedupSimilaritySpec extends SparkSpec {
         (i.toLong, Array.fill(8)(rnd.nextFloat()).toSeq))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_swapcrash").toString
+    val tmp = TempDirs.create("graft_swapcrash")
     val idx = s"$tmp/index"
     Similarity.buildIvfIndex(corpus, idx, nCells = 4, trainIters = 0)
     Similarity.buildIvfIndex(corpus, s"$idx.rebuild", nCells = 4, trainIters = 2)
@@ -889,7 +889,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("index layout guard: half-written and foreign directories fail loudly at open") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_guard").toString
+    val tmp = TempDirs.create("graft_guard")
     import spark.implicits._
     val emb = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
     // half-written: codebook landed, cells never did
@@ -921,7 +921,7 @@ class DedupSimilaritySpec extends SparkSpec {
         (i.toLong, Array.fill(8)(rnd.nextFloat()).toSeq))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_idxdel").toString
+    val tmp = TempDirs.create("graft_idxdel")
     val idx = s"$tmp/index"
     Similarity.buildIvfIndex(corpus, idx, nCells = 8, trainIters = 2)
     def files(): Map[String, Set[String]] = {
@@ -1149,7 +1149,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // restricted to pairs touching the new batch
     val docs = Tables.load(spark, sf, "documents")
     val isNew = TrainingPrep.hashBucket(col("doc_id"), 10) >= 8
-    val dir = java.nio.file.Files.createTempDirectory("graft_inclsh").toString
+    val dir = TempDirs.create("graft_inclsh")
     Dedup.buildMinhashBandIndex(docs.filter(!isNew), "doc_id", "text",
       n = 3, k = 16, bands = 4, s"$dir/bands")
     val inc = Dedup.incrementalMinhashNearDups(spark, s"$dir/bands",
@@ -1181,7 +1181,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val old = docs.filter(bucket < 6)
     val w1 = docs.filter(bucket >= 6 && bucket < 8)
     val w2 = docs.filter(bucket >= 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_inclsh2").toString
+    val dir = TempDirs.create("graft_inclsh2")
     Dedup.buildMinhashBandIndex(old, "doc_id", "text", 3, 16, 4, s"$dir/b")
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("id_a", "id_b").collect()

@@ -20,7 +20,7 @@ class DedupStoreReadSpec extends SparkSpec {
     * text twice via id+100). Delivery 2: one NEW text plus a duplicate
     * of a0 (so one delivery-1 text changes its count). */
   private def twoDeliveryStore(): (String, String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rdspec").toString
+    val tmp = TempDirs.create("graft_rdspec")
     val store = s"$tmp/store"
     val d1 = (0 until 20).flatMap(i =>
       Seq((i.toLong, s"rd text $i"), (i + 100L, s"rd text $i")))
@@ -63,7 +63,7 @@ class DedupStoreReadSpec extends SparkSpec {
     assert(DedupStore.lookup(spark, store, Seq("rd nowhere")).isEmpty)
     assert(DedupStore.lookup(spark, store, Seq.empty).isEmpty)
     // an uncommitted store reads as empty too, not as a crash
-    val empty = java.nio.file.Files.createTempDirectory("graft_rde").toString
+    val empty = TempDirs.create("graft_rde")
     assert(DedupStore.lookup(spark, empty, Seq("x")).isEmpty)
   }
 
@@ -92,7 +92,7 @@ class DedupStoreReadSpec extends SparkSpec {
 
   test("snapshot export: immutable under store mutation, stamped, and re-export honors a purge") {
     val (store, _) = twoDeliveryStore()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val tmp = TempDirs.create("graft_snap")
     val v1 = DedupStore.exportSnapshot(spark, store, s"$tmp/snap1")
     assert(DedupStore.snapshotSourceVersion(s"$tmp/snap1").contains(v1))
     assert(DedupStore.snapshotSourceVersion(store).isEmpty,
@@ -196,7 +196,7 @@ class DedupStoreReadSpec extends SparkSpec {
     // path) must fail at open with observed-vs-expected, not as a
     // column-resolution error mid-plan
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rdforeign").toString
+    val tmp = TempDirs.create("graft_rdforeign")
     val store = s"$tmp/store"
     Seq((1, "x")).toDF("a", "b").coalesce(1)
       .write.parquet(s"$store/v0/bucket=0")
@@ -251,7 +251,7 @@ class DedupStoreReadSpec extends SparkSpec {
 
   test("DSv2 change source: streaming drain resumes from its checkpoint") {
     val (store, cursor) = twoDeliveryStore()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdcsrc").toString
+    val tmp = TempDirs.create("graft_cdcsrc")
     // drain 1: delivery-2 changes only
     val q1 = spark.readStream.format(ChangesFormat)
       .option("path", store).option("since", cursor).load()
@@ -297,7 +297,7 @@ class DedupStoreReadSpec extends SparkSpec {
     // delivers it — plus A's folded delete re-delivered from the feed
     // (idempotent for a deletes-first consumer).
     val (store, cursor) = twoDeliveryStore()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdcmono").toString
+    val tmp = TempDirs.create("graft_cdcmono")
     def drain(): Unit = {
       val q = spark.readStream.format(ChangesFormat)
         .option("path", store).option("since", cursor).load()
@@ -338,7 +338,7 @@ class DedupStoreReadSpec extends SparkSpec {
     // upsert axis, and the replica equals the store's own read at every
     // step. This is the erasure-propagation path end to end.
     val (store, cursor) = twoDeliveryStore()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdcrep").toString
+    val tmp = TempDirs.create("graft_cdcrep")
     import spark.implicits._
     // stale copy = delivery one's dedup state (texts 0..19, 2 copies)
     graft.streaming.CdcReplica.seed(
@@ -390,7 +390,7 @@ class DedupStoreReadSpec extends SparkSpec {
     // replay empty would skip those buckets forever — later batches
     // filter writing-version > end. The fallback reads the latest
     // manifest restricted to writing-version in (since, end].
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cdcfall").toString
+    val tmp = TempDirs.create("graft_cdcfall")
     val store = s"$tmp/store"
     val nB = 4
     // pick probe texts per bucket so each delivery targets known buckets
@@ -435,7 +435,7 @@ class DedupStoreReadSpec extends SparkSpec {
       s"the intermediate version's bucket was lost: $got")
     // a store with NO committed version refuses loudly instead of
     // planning nothing
-    val gone = java.nio.file.Files.createTempDirectory("graft_cdcgone").toString
+    val gone = TempDirs.create("graft_cdcgone")
     val e = intercept[IllegalStateException] {
       graft.sources.DedupStoreChanges.changedFilesBetween(
         gone, sinceKey, "v2")
@@ -448,13 +448,13 @@ class DedupStoreReadSpec extends SparkSpec {
     // 1) legal states stay silent: missing root; root with only an
     // uncommitted (crash-shaped) version dir
     DedupStore.guardStore("/tmp/graft_guard_does_not_exist")
-    val crash = Files.createTempDirectory("graft_guard_crash").toString
+    val crash = TempDirs.create("graft_guard_crash")
     Files.createDirectories(Paths.get(s"$crash/v0")) // no _SUCCESS
     DedupStore.guardStore(crash)
     assert(DedupStore.read(spark, crash).count() == 0L)
 
     // healthy store: reads stay silent (and cache the validation)
-    val healthy = s"${Files.createTempDirectory("graft_guard_ok")}/store"
+    val healthy = s"${TempDirs.create("graft_guard_ok")}/store"
     (0 until 10).map(i => (i.toLong, s"guard text $i")).toDF("doc_id", "text")
       .write.format(SinkFormat).option("path", healthy)
       .option("nBuckets", "4").mode("append").save()
@@ -466,7 +466,7 @@ class DedupStoreReadSpec extends SparkSpec {
     // outside the supported lifecycle, like guardIvfIndex): delete a
     // manifest-referenced data file AND plant a foreign committed dir —
     // both deviations must appear in the SAME report (not fail-fast)
-    val tmp = Files.createTempDirectory("graft_guard").toString
+    val tmp = TempDirs.create("graft_guard")
     val store = s"$tmp/store"
     (0 until 10).map(i => (i.toLong, s"guard text $i")).toDF("doc_id", "text")
       .write.format(SinkFormat).option("path", store)
@@ -496,7 +496,7 @@ class DedupStoreReadSpec extends SparkSpec {
     assert(e3.getMessage.contains("not a readable dedup store"))
 
     // 3) a non-empty directory that is no store at all
-    val alien = Files.createTempDirectory("graft_guard_alien").toString
+    val alien = TempDirs.create("graft_guard_alien")
     Files.writeString(Paths.get(s"$alien/random.txt"), "hello")
     val e4 = intercept[IllegalStateException] { DedupStore.guardStore(alien) }
     assert(e4.getMessage.contains("no v* version dirs"))

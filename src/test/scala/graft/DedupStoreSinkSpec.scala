@@ -18,7 +18,7 @@ class DedupStoreSinkSpec extends SparkSpec {
         r.getAs[Long]("n_copies"))).toSet
 
   test("streaming drain through the sink equals the foreachBatch drain") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val tmp = TempDirs.create("graft_sink")
     // 3 files → 3 micro-batches; cross-file duplicates exercise the merge
     val docs = Seq(
       (1L, "sink alpha"), (2L, "sink beta"), (3L, "sink alpha"),
@@ -66,7 +66,7 @@ class DedupStoreSinkSpec extends SparkSpec {
   }
 
   test("batch write merges into the existing chain at the next free major") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sinkb").toString
+    val tmp = TempDirs.create("graft_sinkb")
     Seq((1L, "bw one"), (2L, "bw two")).toDF("doc_id", "text")
       .write.format(SinkFormat).option("path", s"$tmp/store")
       .option("nBuckets", "4").mode("append").save()
@@ -91,7 +91,7 @@ class DedupStoreSinkSpec extends SparkSpec {
   }
 
   test("the sink refuses a wrong schema and a held writer lock") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sinkg").toString
+    val tmp = TempDirs.create("graft_sinkg")
     val bad = intercept[Exception] {
       Seq((1L, "x", "extra")).toDF("doc_id", "body", "junk")
         .write.format(SinkFormat).option("path", s"$tmp/store")
@@ -123,7 +123,7 @@ class DedupStoreSinkSpec extends SparkSpec {
       .map(t => Option(t.getMessage).getOrElse("")).toSeq
 
   test("tombstone GC reads sidecar metadata, not every hit bucket's data") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gc_bloom").toString
+    val tmp = TempDirs.create("graft_gc_bloom")
     val docs = (0 until 200).map(i => (i.toLong, s"gcb text $i"))
       .toDF("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
@@ -172,7 +172,7 @@ class DedupStoreSinkSpec extends SparkSpec {
     // partial (min, count) must survive multiple flush boundaries via
     // the driver-side min/sum re-combine. (FlushEntries itself is a
     // constant; this guards the re-combine CONTRACT the flush relies on.)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sinkf").toString
+    val tmp = TempDirs.create("graft_sinkf")
     val docs = (0 until 400).map(i => (i.toLong, s"fl text ${i % 7}"))
       .toDF("doc_id", "text")
     docs.write.format(SinkFormat).option("path", s"$tmp/store")

@@ -14,7 +14,7 @@ class FixturesSpec extends SparkSpec {
   }
 
   test("a re-typed column yields one loud observed-vs-expected diagnostic") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_guard").toString
+    val tmp = TempDirs.create("graft_guard")
     // events with ts re-encoded as STRING (a drift the engine can't absorb)
     // and doc-less documents (missing column) — both must be in ONE message
     Tables.load(spark, sf, "events")
@@ -43,7 +43,7 @@ class FixturesSpec extends SparkSpec {
   }
 
   test("orders date column survives a nanos re-encode (restoreTimestamp)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nanodate").toString
+    val tmp = TempDirs.create("graft_nanodate")
     val orig = spark.read.parquet(s"$sf/orders.parquet").limit(20)
     orig.withColumn("o_orderdate",
         unix_micros(col("o_orderdate").cast(TimestampType)) * 1000)

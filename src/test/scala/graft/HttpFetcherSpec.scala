@@ -2,7 +2,6 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
@@ -122,7 +121,7 @@ class HttpFetcherSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("driver-mode ingest over HTTP: pages land, per-page progress fires in order") {
-    val root = Files.createTempDirectory("graft_http").toString
+    val root = TempDirs.create("graft_http")
     HttpFetcherSpec.events.clear()
     val runDir = Ingest.ingest(spark, fetcher(), s"$root/bronze",
       Instant.parse("2026-08-12T10:00:00Z"), perPage = 200,
@@ -138,7 +137,7 @@ class HttpFetcherSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("distributed ingest over HTTP: executor fan-out, progress via listener + accumulator") {
-    val root = Files.createTempDirectory("graft_http_dist").toString
+    val root = TempDirs.create("graft_http_dist")
     HttpFetcherSpec.events.clear()
     val runDir = Ingest.ingestDistributed(spark, fetcher(), s"$root/bronze",
       Instant.parse("2026-08-12T11:00:00Z"), perPage = 200,

@@ -17,7 +17,7 @@ class ObserveSpec extends SparkSpec {
       count(lit(1)).as("n_rows"),
       sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
       max(col("n_chars")).as("max_chars"))
-    val out = java.nio.file.Files.createTempDirectory("graft_obs").toString
+    val out = TempDirs.create("graft_obs")
     // the real pipeline action is a WRITE — its own QueryExecution, so
     // the metrics must come through the listener capture
     var observedPlan: org.apache.spark.sql.DataFrame = null

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.ScaleJoins
@@ -35,7 +33,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned parquet read prunes partitions under an equality filter") {
-    val dir = Files.createTempDirectory("graft_prune").toString
+    val dir = TempDirs.create("graft_prune")
     Tables.load(spark, sf, "nation")
       .withColumn("bucket", (col("n_nationkey") % 5).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(dir)
@@ -91,7 +89,7 @@ class ScaleSpec extends SparkSpec {
   test("compaction derives the file count from payload bytes and loses nothing") {
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
-    val out = Files.createTempDirectory("graft_compact_spec").toString
+    val out = TempDirs.create("graft_compact_spec")
     val nFiles = graft.queries.SourceFormatQueries.compact(
       docs, octet_length(col("text")), out, targetBytes = 32L * 1024)
     val expectBytes = docs.agg(sum(octet_length(col("text")).cast("long")))
@@ -198,7 +196,7 @@ class ScaleSpec extends SparkSpec {
     assert(zAvgS <= 0.6, s"z-layout avg suppkey span $zAvgS")
     // contrast: the same data sorted by partkey alone leaves suppkey
     // file stats useless (~full span) — the reason z-order exists
-    val pdir = java.nio.file.Files.createTempDirectory("graft_psort").toString
+    val pdir = TempDirs.create("graft_psort")
     Tables.load(spark, sf, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"), col("l_returnflag"))
       .repartitionByRange(16, col("l_partkey"))
@@ -284,7 +282,7 @@ class ScaleSpec extends SparkSpec {
 
   test("targeted delete (q64 shape): only victim partitions rewrite; the rest survive") {
     import graft.queries.SourceFormatQueries.withOverwriteMode
-    val out = Files.createTempDirectory("graft_delspec").toString
+    val out = TempDirs.create("graft_delspec")
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     docs.write.mode("overwrite").partitionBy("source").parquet(out)
@@ -371,7 +369,7 @@ class ScaleSpec extends SparkSpec {
 
   test("q66 rollup refresh: source scan pruned to touched days, clean rollup partitions survive") {
     import graft.queries.SourceFormatQueries
-    val tmp = Files.createTempDirectory("graft_rollup_t").toString
+    val tmp = TempDirs.create("graft_rollup_t")
     val src = s"$tmp/src"; val rollup = s"$tmp/rollup"
     val ev = Tables.load(spark, sf, "events")
       .withColumn("day", date_format(Tables.eventTime(col("ts")), "yyyy-MM-dd"))
@@ -610,7 +608,7 @@ class ScaleSpec extends SparkSpec {
 
   test("dynamic partition overwrite (q59): untouched partitions keep their files") {
     import graft.queries.SourceFormatQueries.withOverwriteMode
-    val out = Files.createTempDirectory("graft_dynspec").toString
+    val out = TempDirs.create("graft_dynspec")
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"), col("lang"))
     def filesUnder(lang: String): Set[String] = {
@@ -1234,7 +1232,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("q114 gzip jsonl: staged layout is .json.gz and values survive the codec") {
-    val out = Files.createTempDirectory("graft_jsgz_spec").toString
+    val out = TempDirs.create("graft_jsgz_spec")
     val docs = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     docs.repartition(4).write.mode("overwrite")
@@ -1821,7 +1819,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("q177 REBALANCE: the written files are advisory-sized and even, not plan-shaped") {
-    val out = Files.createTempDirectory("graft_rebalspec").toString
+    val out = TempDirs.create("graft_rebalspec")
     graft.Confs.withConfs(spark, Seq(
       // sized to the sf0.001 fixture's shuffle bytes so the re-slice
       // visibly splits (production uses the 64MB-class defaults); the
@@ -1854,7 +1852,7 @@ class ScaleSpec extends SparkSpec {
     // write's executed plan must carry the hash exchange on key (and
     // the within-task sort) that the sink demanded — the engine
     // produces the key-grouped layout, not caller convention
-    val tmp = Files.createTempDirectory("graft_spjwrite").toString
+    val tmp = TempDirs.create("graft_spjwrite")
     val plans = scala.collection.concurrent.TrieMap.empty[Long, String]
     val ids = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new QueryExecutionListener {
@@ -1929,7 +1927,7 @@ class ScaleSpec extends SparkSpec {
     val touched = cf.count { case (a, b) => b >= lo && a <= hi }
     assert(touched <= 3,
       s"probe interval intersects $touched of ${cf.size} clustered files")
-    val udir = Files.createTempDirectory("graft_uncluster").toString
+    val udir = TempDirs.create("graft_uncluster")
     Tables.load(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))

@@ -24,7 +24,7 @@ class SessionizeSpec extends SparkSpec {
       (1L, 10L, ts(t0)), (1L, 11L, ts(t0 + 10 * min)), (1L, 12L, ts(t0 + 50 * min)),
       (2L, 20L, ts(t0)),
       (3L, 30L, ts(t0)), (3L, 31L, ts(t0 + 30 * min)))
-    val dir = java.nio.file.Files.createTempDirectory("q72fix").toString
+    val dir = TempDirs.create("q72fix")
     rows.toDF("user_id", "event_id", "ts")
       .select(col("event_id"), col("ts"), col("user_id"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -72,7 +72,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-sink drain (Append + watermark) emits exactly the finalized windows") {
-    val out = java.nio.file.Files.createTempDirectory("graft_fsink").toString
+    val out = TempDirs.create("graft_fsink")
     val drained = EventStream.runToFiles(spark,
       EventStream.hourlyCounts(EventStream.readEvents(spark, sf)), out)
     // Append emits a window once the watermark (max event_time - 1h)
@@ -121,7 +121,7 @@ class StreamingSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$inDir/*.parquet")
         .as[EventStream.Event]
-      val out = java.nio.file.Files.createTempDirectory("graft_rocksp").toString
+      val out = TempDirs.create("graft_rocksp")
       EventStream.runToFiles(spark,
           EventStream.sessionizeStream(stream, timeout = false).toDF(), out)
         .collect().map(r => (r.getAs[Long]("user_id"),
@@ -129,7 +129,7 @@ class StreamingSpec extends SparkSpec {
           r.getAs[Long]("session_end"), r.getAs[Long]("n_events"))).toSet
     }
     def windowSessions(): Set[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)] = {
-      val out = java.nio.file.Files.createTempDirectory("graft_rockssw").toString
+      val out = TempDirs.create("graft_rockssw")
       val sess = EventStream.readEvents(spark, sf)
         .withWatermark("event_time", "1 hour")
         .groupBy(col("user_id"),
@@ -153,7 +153,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch dedup store: multi-batch merge equals batch dedup, versions commit") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_spec").toString
+    val tmp = TempDirs.create("graft_store_spec")
     // 3 texts with duplicates spread across files so merges genuinely
     // combine counts across micro-batches
     val docs = Seq(
@@ -202,7 +202,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup store rewrites only touched hash partitions; untouched carry forward") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_part").toString
+    val tmp = TempDirs.create("graft_store_part")
     // batch 0: 200 distinct texts (touches ~all 16 buckets); batch 1: a
     // single duplicate doc (touches exactly ONE bucket) — the incremental
     // shape where partitioned merge pays off
@@ -258,7 +258,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup store adopts the committed bucket layout over a mismatched parameter") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_layout").toString
+    val tmp = TempDirs.create("graft_store_layout")
     def stream() = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -286,7 +286,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup store purge: victim buckets rewrite, tombstones survive replay and re-ingest") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_purge").toString
+    val tmp = TempDirs.create("graft_store_purge")
     val docs = (0 until 50).map(i => (i.toLong, s"purge corpus text $i"))
       .toDF("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
@@ -362,7 +362,7 @@ class StreamingSpec extends SparkSpec {
     // Both purges' tombstones must stay in force — the second purge
     // must not displace the first's (the round-7 tombstone-collision
     // fix) — and versions must interleave as v0 -> v0.1 -> v1 -> v1.1.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_ilv").toString
+    val tmp = TempDirs.create("graft_store_ilv")
     def stream() = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -404,7 +404,7 @@ class StreamingSpec extends SparkSpec {
     // each purge appends one _TOMBSTONES/t* file and physically erases
     // its victim (so the marker is dead by the next drain) — must leave
     // the log bounded, while every purged text stays gone.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_autoc").toString
+    val tmp = TempDirs.create("graft_store_autoc")
     def stream() = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -460,7 +460,7 @@ class StreamingSpec extends SparkSpec {
     // after the committing one), and batch 2 must skip because the
     // purge sub-version carries its major. The read target stays the
     // purged state throughout.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_redrain").toString
+    val tmp = TempDirs.create("graft_store_redrain")
     def writeBatch(rows: Seq[(Long, String)], mtime: Long): Unit = {
       import spark.implicits._
       rows.toDF("doc_id", "text").coalesce(1)
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
     // a fresh-checkpoint re-drain rebuilds the pruned major THROUGH the
     // survivor via baseFor, reading and inheriting its manifest — a
     // dangling entry crashes the rebuild on a nonexistent parquet path.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_fh").toString
+    val tmp = TempDirs.create("graft_store_fh")
     val cands = (0 until 40).map(i => s"fh text $i")
     val bucketOf = cands.map(t => t -> spark.range(1)
       .select(pmod(xxhash64(lit(t)), lit(16L)).cast("int")).head.getInt(0)).toMap
@@ -578,7 +578,7 @@ class StreamingSpec extends SparkSpec {
     // live source listing. If the source changed since the original
     // drain, a committed major would silently swallow the changed
     // batch — the _BATCHSTAT fingerprint must catch it instead.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_stat").toString
+    val tmp = TempDirs.create("graft_store_stat")
     def writeBatch(rows: Seq[(Long, String)], mtime: Long): java.io.File = {
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(s"$tmp/in")
@@ -621,7 +621,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("single-writer lock: a held lock refuses the writer loudly; a stale one is broken") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_lock").toString
+    val tmp = TempDirs.create("graft_store_lock")
     val docs = Seq((1L, "lk alpha"), (2L, "lk beta")).toDF("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
     def stream() = spark.readStream.schema(docs.schema)
@@ -656,7 +656,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("lock release never deletes blind: unreadable lock survives, vanished lock is a no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lock_unread").toString
+    val tmp = TempDirs.create("graft_lock_unread")
     val root = new org.apache.hadoop.fs.Path(tmp)
     val raw = root.getFileSystem(spark.sessionState.newHadoopConf())
     @volatile var failReads = false
@@ -693,7 +693,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tombstone compaction: erased victims fold away, in-flight tombstones survive") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_tc").toString
+    val tmp = TempDirs.create("graft_store_tc")
     val docs = (0 until 50).map(i => (i.toLong, s"tc text $i")).toDF("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
     def stream() = spark.readStream.schema(docs.schema)
@@ -754,7 +754,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("purgeWhere: predicate takedown equals text purge; corpus-scale match refused") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_pw").toString
+    val tmp = TempDirs.create("graft_store_pw")
     val docs = (0 until 60).map(i => (i.toLong, s"pw text ${i % 30}"))
       .toDF("doc_id", "text") // 30 texts × 2 copies, keep_id = 0..29
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
@@ -777,7 +777,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("corrupt _LAYOUT: recovered when nothing committed, loud when versions exist") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_corrupt").toString
+    val tmp = TempDirs.create("graft_store_corrupt")
     val docs = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
     def stream() = spark.readStream.schema(docs.schema)
@@ -812,7 +812,7 @@ class StreamingSpec extends SparkSpec {
     // Every metadata operation (layout, versions, manifest, tombstones,
     // prune) must resolve it through the scheme's FileSystem, not
     // java.io — a drain AND a purge end-to-end prove the whole surface.
-    val local = java.nio.file.Files.createTempDirectory("graft_store_uri").toString
+    val local = TempDirs.create("graft_store_uri")
     val storeUri = s"file:$local/store"
     val docs = Seq((1L, "uri alpha"), (2L, "uri beta"), (3L, "uri alpha"))
       .toDF("doc_id", "text")
@@ -833,7 +833,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup store run() with no committed batch returns the typed empty store") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_empty").toString
+    val tmp = TempDirs.create("graft_store_empty")
     val docs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     docs.write.mode("overwrite").parquet(s"$tmp/in")
     val stream = spark.readStream
@@ -848,7 +848,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup store versions: _SUCCESS gates commits, replay base excludes own batch") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store_vers").toString
+    val tmp = TempDirs.create("graft_store_vers")
     def mkVersion(id: Long, committed: Boolean): Unit = {
       val d = new java.io.File(s"$tmp/v$id"); d.mkdirs()
       if (committed) new java.io.File(d, "_SUCCESS").createNewFile()
@@ -947,7 +947,7 @@ class StreamingSpec extends SparkSpec {
     val asMicrosTs = base.withColumn("ts",
       timestamp_micros(col("ts")).cast(org.apache.spark.sql.types.TimestampNTZType))
     val drained = Seq("nanos" -> asNanos, "ts_ntz" -> asMicrosTs).map { case (tag, df) =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_st04_$tag").toString
+      val tmp = TempDirs.create(s"graft_st04_$tag")
       df.coalesce(1).write.parquet(s"$tmp/events.parquet")
       val out = graft.streaming.EventStream.runToFiles(spark,
         graft.streaming.EventStream.hourlyCounts(
@@ -1007,7 +1007,7 @@ class StreamingSpec extends SparkSpec {
     // wave 1 arrives, the job drains and stops; wave 2 lands later and
     // a RESTARTED job (same checkpoint) must continue the history —
     // the dimension must equal the single-run pinned drain
-    val tmp = java.nio.file.Files.createTempDirectory("graft_st29spec").toString
+    val tmp = TempDirs.create("graft_st29spec")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     val cust = Tables.load(spark, sf, "customer")
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -1137,7 +1137,7 @@ class StreamingSpec extends SparkSpec {
   test("Scd2Dim.run: an empty update stream returns the base dimension") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2empty").toString
+    val tmp = TempDirs.create("graft_scd2empty")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     val base = Seq((1L, "A", 0L, Option.empty[Long])).toDF("k", "seg", "vf", "vt")
     val stream = spark.readStream.schema(StructType(Seq(
@@ -1178,7 +1178,7 @@ class StreamingSpec extends SparkSpec {
     // the monoid-state claim under a RESTART: drain wave 1, stop,
     // deliver wave 2, drain again on the SAME checkpoint — the final
     // top-20 must equal the one-shot batch sample over everything
-    val tmp = java.nio.file.Files.createTempDirectory("graft_st31spec").toString
+    val tmp = TempDirs.create("graft_st31spec")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -1436,7 +1436,7 @@ class StreamingSpec extends SparkSpec {
     // a stop + restart on the same checkpoint — the triple can only
     // emit if the pending click (and its chained views) was restored
     val H = 3600000000L
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ceprestart").toString
+    val tmp = TempDirs.create("graft_ceprestart")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     def stage(rows: Seq[(Long, Long, Long, String, Double, String)],
               name: String): Unit = {
@@ -1472,7 +1472,7 @@ class StreamingSpec extends SparkSpec {
     // wave 1 leaves one OPEN island spanning two overlapping intervals;
     // the sentinel lands after a restart — the summary merges across
     // the restart only if the open island was restored
-    val tmp = java.nio.file.Files.createTempDirectory("graft_covrestart").toString
+    val tmp = TempDirs.create("graft_covrestart")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     def stage(rows: Seq[(Long, Long, Long)], name: String): Unit = {
       val sd = s"$tmp/stage_$name"
@@ -1628,7 +1628,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     graft.streaming.EventStream.withRocksDBState(spark) {
       val H = 3600L * 1000000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_timerrestart").toString
+      val tmp = TempDirs.create("graft_timerrestart")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long)], name: String): Unit = {
         val sd = s"$tmp/stage_$name"
@@ -1670,7 +1670,7 @@ class StreamingSpec extends SparkSpec {
   test("transformWithState: a restarted drain resumes named state variables from the checkpoint") {
     import spark.implicits._
     graft.streaming.EventStream.withRocksDBState(spark) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_twsrestart").toString
+      val tmp = TempDirs.create("graft_twsrestart")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long, String)], name: String): Unit = {
         val sd = s"$tmp/stage_$name"
@@ -1868,7 +1868,7 @@ class StreamingSpec extends SparkSpec {
     // back across the restart boundary — event 3's context can only
     // contain w0's types if the list (and its order) was restored
     graft.streaming.EventStream.withRocksDBState(spark) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_lsrestart").toString
+      val tmp = TempDirs.create("graft_lsrestart")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long, String)], name: String): Unit =
         stageEventFile(in, tmp, name, rows)
@@ -1906,7 +1906,7 @@ class StreamingSpec extends SparkSpec {
     graft.Confs.withConfs(spark, Seq(
       "spark.sql.streaming.stateStore.encodingFormat" -> "avro")) {
     graft.streaming.EventStream.withRocksDBState(spark) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+      val tmp = TempDirs.create("graft_evolve")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long)], name: String): Unit =
         stageEventFile(in, tmp, name,
@@ -1955,7 +1955,7 @@ class StreamingSpec extends SparkSpec {
         -> "true")) {
     graft.streaming.EventStream.withRocksDBState(spark) {
       val H = 3600L * 1000000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_statett").toString
+      val tmp = TempDirs.create("graft_statett")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long)], name: String): Unit =
         stageEventFile(in, tmp, name,
@@ -2146,7 +2146,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     graft.streaming.EventStream.withRocksDBState(spark) {
       val H = 3600L * 1000000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stateread").toString
+      val tmp = TempDirs.create("graft_stateread")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       Seq(
         (1L, H, 5L), (2L, 2L * H, 5L),      // user 5 session 1 (will close)
@@ -2215,7 +2215,7 @@ class StreamingSpec extends SparkSpec {
         -> "true")) {
     graft.streaming.EventStream.withRocksDBState(spark) {
       val H = 3600L * 1000000L
-      val tmp = java.nio.file.Files.createTempDirectory("graft_statecdc").toString
+      val tmp = TempDirs.create("graft_statecdc")
       val in = new java.io.File(s"$tmp/in"); in.mkdirs()
       def stage(rows: Seq[(Long, Long, Long)], name: String): Unit = {
         val sd = s"$tmp/stage_$name"
@@ -2329,7 +2329,7 @@ class StreamingSpec extends SparkSpec {
     // stop, stage wave 2, drain again on the SAME checkpoint — wave 2's
     // first event can only score scored=1/anom=1 if the 5-value window
     // was restored from the state store, not recomputed
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zsrestart").toString
+    val tmp = TempDirs.create("graft_zsrestart")
     val in = new java.io.File(s"$tmp/in"); in.mkdirs()
     def stage(rows: Seq[(Long, Long, Long, String, Double, String)],
               name: String): Unit = {
@@ -2480,7 +2480,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("rate-source restart replays the crashed batch from its WAL offsets") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ratelog").toString
+    val tmp = TempDirs.create("graft_ratelog")
     graft.streaming.RateLog.drainUntil(spark, s"$tmp/data", s"$tmp/ckpt",
       rowsPerBatch = 100, crashAt = 2)
     // the offset contract's crash anatomy: batch 2's offsets are

@@ -30,7 +30,7 @@ class DedupStoreSinkRetrySpec extends graft.SparkSpec {
     docIdx = 0, textIdx = 1)
 
   test("a losing speculative attempt's staged file is not merged and is swept") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_retry").toString
+    val tmp = graft.TempDirs.create("graft_retry")
     val store = s"$tmp/store"
     val stageRoot = s"$store/_STAGING/qspec"
     val factory = factoryFor(stageRoot)
@@ -58,7 +58,7 @@ class DedupStoreSinkRetrySpec extends graft.SparkSpec {
   }
 
   test("a crashed attempt (no commit, no abort) leaves nothing merged on retry") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_retry2").toString
+    val tmp = graft.TempDirs.create("graft_retry2")
     val store = s"$tmp/store"
     val stageRoot = s"$store/_STAGING/qcrash"
     val factory = factoryFor(stageRoot)
@@ -79,7 +79,7 @@ class DedupStoreSinkRetrySpec extends graft.SparkSpec {
   }
 
   test("abort removes a mid-task-flushed partial file") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_retry3").toString
+    val tmp = graft.TempDirs.create("graft_retry3")
     val stageRoot = s"$tmp/store/_STAGING/qabort"
     val factory = factoryFor(stageRoot)
 

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +24,7 @@ class KeyedPartitionSourceSpec extends SparkSpec {
         "escaped label must contain no raw TSV delimiters")
     }
     // and the full V2 write → read path preserves them byte-for-byte
-    val tmp = Files.createTempDirectory("graft_keyed_esc").toString
+    val tmp = graft.TempDirs.create("graft_keyed_esc")
     import spark.implicits._
     nasty.zipWithIndex.map { case (s, i) => (i.toLong % 3, i.toLong, s) }
       .toDF("key", "id", "label")
@@ -39,7 +37,7 @@ class KeyedPartitionSourceSpec extends SparkSpec {
   }
 
   test("a writer that sees keys out of order throws instead of truncating") {
-    val tmp = Files.createTempDirectory("graft_keyed_ooo").toString
+    val tmp = graft.TempDirs.create("graft_keyed_ooo")
     val w = new KeyedWriterFactory(tmp).createWriter(0, 0L)
     def row(k: Long, id: Long, label: String) =
       org.apache.spark.sql.catalyst.InternalRow(
@@ -53,7 +51,7 @@ class KeyedPartitionSourceSpec extends SparkSpec {
   }
 
   test("concurrent commits to one path both survive in the manifest") {
-    val tmp = Files.createTempDirectory("graft_keyed_conc").toString
+    val tmp = graft.TempDirs.create("graft_keyed_conc")
     import spark.implicits._
     def df(offset: Int) =
       (0 until 40).map(i => ((i % 4).toLong, (offset + i).toLong, s"r$offset-$i"))
@@ -105,7 +103,7 @@ class KeyedPartitionSourceSpec extends SparkSpec {
         .start().waitFor() == 0
       catch { case _: java.io.IOException => false },
       "python3 with fcntl not available — foreign-process lock test skipped")
-    val tmp = Files.createTempDirectory("graft_keyed_flock").toString
+    val tmp = graft.TempDirs.create("graft_keyed_flock")
     import spark.implicits._
     val df = (0 until 20).map(i => ((i % 4).toLong, i.toLong, s"f$i"))
       .toDF("key", "id", "label")
