@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   * One parquet file per table under `$dir/` — mirrors the reference's
@@ -15,13 +20,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The fixture table `name` under `dir`, in its canonical shape.
+    *
+    * The read carries the schema of [[fileSchema]], which comes from the
+    * file's own footer, read on the driver. Without one, `read.parquet`
+    * infers the schema with a one-task Spark job per load. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Fixture generations have shipped events.ts as INT64 TIMESTAMP(NANOS)
     // — which Spark's vectorized reader rejects unless read as a long —
     // and as timestamp[us]. Keep the legacy conf on so the nanos variant
     // stays readable, and canonicalize whatever arrives.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(fileSchema(spark, path)).parquet(path)
     name match {
       case "events" => normalizeEvents(df)
       // date columns that have shipped as timestamp[us]; if a future
@@ -32,6 +43,24 @@ object Tables {
       case "orders" => restoreTimestamp(df, "o_orderdate")
       case "lineitem" => restoreTimestamp(df, "l_shipdate")
       case _ => df
+    }
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, without its Spark
+    * job. A single file's footer is read on the driver and converted by
+    * Spark's own footer-to-schema conversion under the session's parquet
+    * confs (`nanosAsLong` among them). A directory keeps Spark's
+    * inference, which picks one of its files. */
+  def fileSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (!status.isFile) spark.read.parquet(path).schema
+    else {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
   }
 

@@ -20,8 +20,8 @@ object Verify {
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        fn(spark, sfDir).coalesce(1).write.options(NioLocalFileSystem.Options)
+          .mode("overwrite").parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

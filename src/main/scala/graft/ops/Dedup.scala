@@ -149,18 +149,21 @@ object Dedup {
     * order-free rule that needs no global first-occurrence sort).
     *
     * Scale shape: chunking is one map-side `transform` over the token
-    * array (no explode-then-window); the only shuffle is the
+    * array (no explode-then-window). The tokens are a column below the
+    * explode, so each document is split once, not once per chunk (a
+    * lambda body is evaluated per element). The only shuffle is the
     * chunk-frequency aggregate, which carries DISTINCT (chunk, doc)
     * rows; the df join back is chunk-keyed and reuses the same hash
     * partitioning. Partial trailing chunks (< chunkWords words) are
     * excluded so a short tail can't alias a full chunk. */
   def boilerplateChunks(docs: DataFrame, idCol: String, textCol: String,
                         chunkWords: Int = 10): DataFrame = {
-    val w = words(col(textCol))
+    val w = col("w")
     // guard the empty case explicitly: sequence(1, 0) DESCENDS in Spark
     // ([1, 0]), it does not produce an empty array
     val nChunks = floor(size(w) / lit(chunkWords)).cast("int")
-    val chunks = docs.select(col(idCol).as("doc_id"),
+    val chunks = docs.select(col(idCol).as("doc_id"), words(col(textCol)).as("w"))
+      .select(col("doc_id"),
         posexplode(when(nChunks >= 1, transform(
             sequence(lit(1), nChunks),
             i => array_join(
@@ -578,9 +581,16 @@ object Dedup {
     * The loop is driver-side CONTROL flow only; exceeding `maxIter`
     * THROWS rather than returning silently-unconverged labels (a wrong
     * cluster assignment is a correctness bug downstream — q67's
-    * leakage-free split hangs off these labels). Returns (id, label). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
+    * leakage-free split hangs off these labels). Returns (id, label).
+    *
+    * The pair set is materialized once (`localCheckpoint`, filled by
+    * the count that picks the regime): the driver collect, the first
+    * edge set and the self-loop labels all read that copy, so the
+    * pair-generating self-join behind it runs once, not once per
+    * consumer. */
+  def connectedComponents(input: DataFrame, maxIter: Int = 50,
                           driverThreshold: Long = 1000000L): DataFrame = {
+    val pairs = input.select(col("id_a"), col("id_b")).localCheckpoint(eager = false)
     if (pairs.count() <= driverThreshold) {
       val spark = pairs.sparkSession
       import spark.implicits._

@@ -14,6 +14,23 @@ import graft.streaming.EventStream
   */
 object TrainingPrepQueries {
 
+  /** t25's gram set: distinct `(doc_id, gram)` word trigrams; a text of
+    * fewer than three words is one gram, its words joined (`""` for a
+    * null text). The tokens are a column below the explode, so each
+    * document is lowercased and split once and the fused
+    * [[Dedup.wordNGrams]] takes the trigrams. Splitting inside a
+    * `transform` lambda would re-split the document once per trigram:
+    * Spark evaluates a lambda body per element, with no
+    * common-subexpression reuse. */
+  private[graft] def noveltyGrams(docs: DataFrame): DataFrame = {
+    val w = col("w")
+    docs.select(col("doc_id"), Dedup.words(col("text")).as("w"))
+      .select(col("doc_id"),
+        explode(when(size(w) >= 3, Dedup.wordNGrams(w, 3))
+          .otherwise(array(concat_ws(" ", w)))).as("gram"))
+      .distinct()
+  }
+
   /** t12's BM25 scorer, factored out so s10's hybrid fusion reuses the
     * identical scoring path: (doc_id, score) for every document
     * matching ≥ 1 query term. See t12's entry for the determinism and
@@ -1428,7 +1445,8 @@ object TrainingPrepQueries {
     // curve is the diminishing-returns signal data-mixing decisions
     // read (near-zero novelty = the corpus is re-treading itself; it
     // is also d09's containment criterion viewed longitudinally).
-    // Plan: one gram explode (bounded by corpus token count), then
+    // Plan: one gram explode ([[noveltyGrams]]: one tokenize per
+    // document, grams bounded by corpus token count), then
     // min(doc_id) OVER (PARTITION BY gram) instead of the former
     // aggregate-then-join-back — the window attributes each gram's
     // first occurrence in the SAME pass, so the explode+distinct
@@ -1439,14 +1457,7 @@ object TrainingPrepQueries {
     ("t25_gram_novelty",
       (s: SparkSession, d: String) => {
         import org.apache.spark.sql.expressions.Window
-        val w = split(lower(col("text")), "\\s+")
-        val grams = Tables.load(s, d, "documents")
-          .select(col("doc_id"),
-            explode(transform(
-              sequence(lit(1), greatest(size(w) - 2, lit(1)).cast("int")),
-              i => concat_ws(" ", slice(w, i, lit(3))))).as("gram"))
-          .distinct()
-        grams
+        noveltyGrams(Tables.load(s, d, "documents"))
           .withColumn("first_doc",
             min(col("doc_id")).over(Window.partitionBy(col("gram"))))
           .groupBy(col("doc_id"))

@@ -13,17 +13,17 @@ import graft.Tables
   * file-source stream with `Trigger.AvailableNow`).
   *
   * `events.ts` arrives in whichever physical encoding the fixture
-  * generation used (INT64 TIMESTAMP(NANOS) or timestamp[us]); a batch
-  * footer probe picks the matching stream schema, and `ts` is
-  * normalized to the engine's canonical epoch-MICROS long plus a
-  * timestamp column `event_time` (see [[graft.Tables.tsMicros]]).
+  * generation used (INT64 TIMESTAMP(NANOS) or timestamp[us]); the
+  * file's footer, read on the driver, picks the matching stream schema,
+  * and `ts` is normalized to the engine's canonical epoch-MICROS long
+  * plus a timestamp column `event_time` (see [[graft.Tables.tsMicros]]).
   */
 object EventStream {
 
   /** Canonical events schema: `ts` = epoch micros, long. This is the
     * shape of every engine-STAGED events file (staging writes the
     * normalized frame); raw fixture dirs go through [[readEvents]]'s
-    * footer probe instead. */
+    * footer read instead. */
   val schema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
@@ -35,12 +35,13 @@ object EventStream {
   /** File-source stream over the events parquet. The glob (not a bare
     * file path) makes the source derive `basePath` = the directory, which
     * the file-stream source requires. A file-stream source must DECLARE
-    * its schema, so the fixture's physical `ts` type is probed from the
-    * batch reader's footer resolution first, then normalized. */
+    * its schema, so the fixture's physical `ts` type is read from the
+    * file's footer first ([[graft.Tables.fileSchema]], no Spark job), then
+    * normalized. */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val physical =
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
+      Tables.fileSchema(spark, s"$sfDir/events.parquet")("ts").dataType
     val physSchema = StructType(schema.map(f =>
       if (f.name == "ts") f.copy(dataType = physical) else f))
     spark.readStream
