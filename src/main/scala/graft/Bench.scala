@@ -35,11 +35,7 @@ object Bench {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(120)
     graft.ops.Curation.reportDF(spark, docs)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64)
-    val (ivfPairs, ivfRelease) =
-      graft.ops.Similarity.ivfNearDupPairsWithRelease(emb, 0.99, nCells = 4, nProbe = 2)
-    // finally: a failed warmup job must not leave the cache pinned
-    // through the timed run (main() swallows warmup errors)
-    try ivfPairs.count() finally ivfRelease()
+    graft.ops.Similarity.ivfNearDupPairs(emb, 0.99, nCells = 4, nProbe = 2).count()
     // every write-once fixture: evaluating the inventory initializes
     // each family object, which registers its stagers
     SparkEntry.queries: Unit

@@ -5,14 +5,15 @@ package graft
   * gate (scripts/bench_drift.py) prescribes before shipping or explaining
   * a per-query regression. Prints per-run wall times so warm-vs-cold and
   * run-to-run variance are visible (Bench's min-of-two hides both).
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.BenchOne <sfDir> <n1,n2,...> [k]
+  * Usage: runMain graft.BenchOne <sfDir> <n1,n2,...> [k]; cores default
+  * to Bench's 4, and SPARK_GRAFT_CPUS overrides them as it does Bench's.
   * Not part of the driver contract. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val k = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.start(cpus)
     try Bench.warmup(spark, sfDir) catch {
       case e: Throwable => System.err.println(s"[benchone] warmup failed: $e")

@@ -92,7 +92,8 @@ class NioLocalFs(uri: URI, conf: Configuration)
   *    session confs, which a query copies into its checkpoint and
   *    state-store conf when it starts;
   *  - the `DedupStore`'s metadata, staging and snapshot writes, and its
-  *    DSv2 sink and change source factories ([[conf]], `.options`).
+  *    DSv2 sink and change source factories ([[conf]], `.options`);
+  *  - every fixture build, through [[graft.Stager]]'s session confs.
   */
 object NioLocalFileSystem {
 

@@ -14,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * operator over it — the drain, the probe or the pruned scan.
   *
   * The build runs at most once per (JVM, sf dir), with the contract of
-  * `TrieMap.getOrElseUpdate`, in its own [[TempDirs]] directory. Every
+  * `TrieMap.getOrElseUpdate`, in its own [[TempDirs]] directory, under
+  * [[NioLocalFileSystem.Options]], so its writes start no `chmod`. Every
   * stager registers itself on construction, and `Bench.warmup` stages
   * [[Stager.all]], so no face's first timed run pays a staging write
   * its second run skips. */
@@ -24,8 +25,11 @@ final class Stager[T] private (val name: String, memo: Boolean,
   Stager.registry.add(this)
 
   def apply(s: SparkSession, d: String): T =
-    if (memo) built.getOrElseUpdate(d, build(s, d))
-    else { val v = build(s, d); built.put(d, v); v }
+    if (memo) built.getOrElseUpdate(d, run(s, d))
+    else { val v = run(s, d); built.put(d, v); v }
+
+  private def run(s: SparkSession, d: String): T =
+    Confs.withConfs(s, NioLocalFileSystem.Options.toSeq)(build(s, d))
 
   /** True once this JVM has staged the fixture for sf dir `d`. */
   def staged(d: String): Boolean = built.contains(d)

@@ -24,47 +24,48 @@ object Curation {
   case class Report(stage: String, n_docs: Long)
 
   /** Curated frame (doc_id, text, pred_lang, quality, n_tokens) +
-    * per-stage counts + a release handle that unpersists the pipeline's
-    * intermediate caches once the frame has been consumed. */
-  case class Curated(frame: DataFrame, report: Seq[Report], release: () => Unit)
+    * per-stage counts. */
+  case class Curated(frame: DataFrame, report: Seq[Report])
 
   def curate(docs: DataFrame,
              minQuality: Double = 0.45,
              nGram: Int = 3,
              jaccardThreshold: Double = 0.5): Curated = {
-    // Cached BEFORE the quality filter: filtering on a computed column
-    // makes Catalyst inline the scoring tree into the Filter predicate,
-    // and the HOF-bearing predicate drops out of whole-stage codegen —
-    // the giant expression then re-evaluates per row interpreted (13x
-    // slower measured). Materializing the score once is also the natural
+    // Materialized BEFORE the quality filter: filtering on a computed
+    // column makes Catalyst inline the scoring tree into the Filter
+    // predicate, and the HOF-bearing predicate drops out of whole-stage
+    // codegen — the giant expression then re-evaluates per row
+    // interpreted (13x slower measured). The scores are also read twice
+    // (the exact dedup and the input count), and this is the natural
     // pipeline boundary at cluster scale.
     val scored = docs.select(
       col("doc_id"), col("text"),
       TextAnalysis.langId(col("text")).as("pred_lang"),
       TextAnalysis.qualityScore(col("text")).as("quality"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-      .cache()
+      .localCheckpoint(eager = false)
 
     val qualityKept = scored.filter(col("quality") >= minQuality)
 
     // exact dedup: one survivor (lowest id) per identical text.
-    // Cached: the frame feeds the LSH banding, both verification joins,
-    // the anti join, and a stage count — without it the scoring chain
-    // re-executes per consumer. (At cluster scale this is the
-    // materialized intermediate table between pipeline stages.)
+    // Materialized: the frame feeds the near-dup shingles, the anti join
+    // and a stage count — without it the dedup window re-executes per
+    // consumer. (At cluster scale this is the materialized intermediate
+    // table between pipeline stages.)
     val exactKept = qualityKept
       .withColumn("keep_id", min(col("doc_id"))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("text"))))
       .filter(col("doc_id") === col("keep_id"))
       .drop("keep_id")
-      .cache()
+      .localCheckpoint(eager = false)
 
     // near-dup removal: LSH-verified pairs → transitive clusters
-    // (connected components), keep each cluster's minimum id
-    val (pairsRaw, releaseGrams) = Dedup.minhashNearDupsWithRelease(
+    // (connected components), keep each cluster's minimum id; the
+    // pairs are read once, by connectedComponents, which materializes
+    // its own copy
+    val pairs = Dedup.minhashNearDups(
       exactKept.select("doc_id", "text"), "doc_id", "text",
       n = nGram, threshold = jaccardThreshold)
-    val pairs = pairsRaw.cache() // consumed by clustering AND caller re-execution
     val losers = Dedup.connectedComponents(pairs)
       .filter(col("id") =!= col("label"))
       .select(col("id").as("doc_id"))
@@ -72,9 +73,9 @@ object Curation {
 
     // One aggregation job over a stage-labeled union instead of four
     // separate count() jobs. By the time this runs, connectedComponents
-    // (invoked above) has already materialized the pairs cache, and
-    // computing pairs pulled the exactKept and scored partitions through
-    // their cache layers — so every union branch is a cache read.
+    // (invoked above) has already materialized the pairs, and computing
+    // them filled the exactKept and scored copies — so every union
+    // branch reads a materialized frame.
     val stageOf = Seq(
       "input" -> scored, "quality_filtered" -> qualityKept,
       "exact_deduped" -> exactKept, "near_deduped" -> nearKept)
@@ -85,28 +86,20 @@ object Curation {
     val report = stageOf.map { case (name, _) =>
       Report(name, counted.getOrElse(name, 0L))
     }
-    Curated(nearKept, report, () => {
-      Seq(scored, exactKept, pairs).foreach(_.unpersist())
-      releaseGrams()
-    })
+    Curated(nearKept, report)
   }
 
   /** Curate and materialize partitioned by predicted language (partition
-    * pruning for per-language downstream consumers). Returns the report;
-    * caches are released after the write. */
+    * pruning for per-language downstream consumers). Returns the report. */
   def curateTo(docs: DataFrame, outDir: String): Seq[Report] = {
     val c = curate(docs)
-    try c.frame.write.mode("overwrite").partitionBy("pred_lang").parquet(outDir)
-    finally c.release()
+    c.frame.write.mode("overwrite").partitionBy("pred_lang").parquet(outDir)
     c.report
   }
 
-  /** The report as a DataFrame (queries()-friendly); caches released
-    * before returning (the report itself is already materialized). */
+  /** The report as a DataFrame (queries()-friendly). */
   def reportDF(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val c = curate(docs)
-    c.release()
-    c.report.toDF().select(col("stage"), col("n_docs"))
+    curate(docs).report.toDF().select(col("stage"), col("n_docs"))
   }
 }

@@ -344,42 +344,24 @@ object Dedup {
 
   /** MinHash+LSH near-dup pairs verified with exact shingle Jaccard ≥
     * `threshold`. `docs` must have (idCol: numeric, textCol: string).
-    * The internal shingle cache lives until the session drops it — use
-    * [[minhashNearDupsWithRelease]] when the caller controls lifecycle. */
+    * The shingles are read three times (banding and both verification
+    * joins), so they are materialized once (`localCheckpoint`, filled by
+    * the first job that reads them). */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, k: Int = 16, bands: Int = 4,
-                      threshold: Double = 0.7): DataFrame =
-    minhashImpl(docs, idCol, textCol, n, k, bands, threshold, cache = false)._1
-
-  /** As [[minhashNearDups]], plus a release handle that unpersists the
-    * internal shingle cache once the result has been consumed (the
-    * plain form caches nothing — each consumer recomputes the map-side
-    * shingling, so arbitrary callers pin no session state). */
-  def minhashNearDupsWithRelease(docs: DataFrame, idCol: String, textCol: String,
-                                 n: Int = 3, k: Int = 16, bands: Int = 4,
-                                 threshold: Double = 0.7): (DataFrame, () => Unit) =
-    minhashImpl(docs, idCol, textCol, n, k, bands, threshold, cache = true)
-
-  private def minhashImpl(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int, k: Int, bands: Int,
-                          threshold: Double, cache: Boolean): (DataFrame, () => Unit) = {
-    // WithRelease form caches: consumed 3x (banding + both verification
-    // joins); at cluster scale this is the materialized
-    // shingle/signature table
-    val gramsBase = docs.select(
+                      threshold: Double = 0.7): DataFrame = {
+    val grams = docs.select(
       col(idCol).as("gid"),
-      wordNGrams(words(col(textCol)), n).as("grams"))
-    val grams = if (cache) gramsBase.cache() else gramsBase
+      wordNGrams(words(col(textCol)), n).as("grams")).localCheckpoint(eager = false)
     val cands = minhashCandidates(
       grams.withColumnRenamed("gid", "did").withColumnRenamed("grams", "g"),
       "did", "g", k, bands)
-    val pairs = cands
+    cands
       .join(grams.select(col("gid").as("id_a"), col("grams").as("grams_a")), "id_a")
       .join(grams.select(col("gid").as("id_b"), col("grams").as("grams_b")), "id_b")
       .select(col("id_a"), col("id_b"),
         round(jaccard(col("grams_a"), col("grams_b")), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    (pairs, () => { if (cache) grams.unpersist(); () })
   }
 
   /** Banded MinHash rows (id, band, bkey) straight from text — the
@@ -690,14 +672,13 @@ object Dedup {
     * (256 values) and degenerate the self-join to quadratic bucket work
     * at corpus scale. `maxBucket > 0` additionally caps bucket sizes via
     * [[capBuckets]] for degenerate fingerprint regions (e.g. boilerplate
-    * shingle-free docs). The internal banded cache lives until the
-    * session drops it — use [[simhashNearDupsWithRelease]] when the
-    * caller controls lifecycle. */
+    * shingle-free docs). Both self-join sides read the banded
+    * fingerprints, so they are materialized once (`localCheckpoint`). */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       bands: Int = 4, maxHamming: Int = 3,
                       maxBucket: Int = 0): DataFrame =
-    simhashImpl(docs, idCol, textCol, bands, maxHamming, maxBucket,
-      cache = false)._1
+    simhashPairs(docs, idCol, textCol, bands, maxHamming, maxBucket,
+      SimHash.simhash)
 
   /** [[simhashNearDups]] with the ORACLE-EXPRESSIBLE md5 fingerprint
     * ([[graft.functions.SimHashMd5]]): identical banding, pigeonhole
@@ -709,23 +690,12 @@ object Dedup {
   def simhashNearDupsMd5(docs: DataFrame, idCol: String, textCol: String,
                          bands: Int = 4, maxHamming: Int = 3,
                          maxBucket: Int = 0): DataFrame =
-    simhashImpl(docs, idCol, textCol, bands, maxHamming, maxBucket,
-      cache = false, fingerprint = SimHash.simhashMd5)._1
+    simhashPairs(docs, idCol, textCol, bands, maxHamming, maxBucket,
+      SimHash.simhashMd5)
 
-  /** As [[simhashNearDups]], plus a release handle for the banded
-    * fingerprint cache (the plain form caches nothing — each self-join
-    * side recomputes the fingerprint subtree, so arbitrary callers pin
-    * no session state). */
-  def simhashNearDupsWithRelease(docs: DataFrame, idCol: String, textCol: String,
-                                 bands: Int = 4, maxHamming: Int = 3,
-                                 maxBucket: Int = 0): (DataFrame, () => Unit) =
-    simhashImpl(docs, idCol, textCol, bands, maxHamming, maxBucket, cache = true)
-
-  private def simhashImpl(docs: DataFrame, idCol: String, textCol: String,
-                          bands: Int, maxHamming: Int,
-                          maxBucket: Int, cache: Boolean,
-                          fingerprint: Column => Column = SimHash.simhash
-                         ): (DataFrame, () => Unit) = {
+  private def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
+                           bands: Int, maxHamming: Int, maxBucket: Int,
+                           fingerprint: Column => Column): DataFrame = {
     require(maxHamming < bands, "pigeonhole needs maxHamming < bands")
     val width = 64 / bands
     val fp = docs.select(col(idCol).as("sid"),
@@ -736,20 +706,13 @@ object Dedup {
         shiftrightunsigned(col("fp"), b * width)
           .bitwiseAND(lit((1L << width) - 1)).as("bits"))
     }: _*)
-    // WithRelease form: cached so the self-join doesn't recompute the
-    // fingerprint+banding+capping subtree once per side (verified via
-    // .explain — the duplicated Scan→SimHash→Generate→Window chain). At
-    // cluster scale this is the materialized banded table; same pattern
-    // as the minhash grams cache. Plain form recomputes instead of
-    // pinning.
-    val bandedBase = capBuckets(
+    val banded = capBuckets(
       fp.select(col("sid"), col("fp"), explode(bandStructs).as("bk"))
         .select(col("sid"), col("fp"), col("bk.band").as("band"), col("bk.bits").as("bits")),
-      Seq("band", "bits"), maxBucket)
-    val banded = if (cache) bandedBase.cache() else bandedBase
+      Seq("band", "bits"), maxBucket).localCheckpoint(eager = false)
     val a = banded.select(col("sid").as("id_a"), col("fp").as("fp_a"), col("band"), col("bits"))
     val b = banded.select(col("sid").as("id_b"), col("fp").as("fp_b"), col("band"), col("bits"))
-    val pairs = a.join(b, Seq("band", "bits"))
+    a.join(b, Seq("band", "bits"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).as("hamming"))
@@ -757,6 +720,5 @@ object Dedup {
       // pairs, so the dedup shuffle only sees survivors
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    (pairs, () => { if (cache) banded.unpersist(); () })
   }
 }

@@ -1301,45 +1301,27 @@ object Similarity {
     * 16-bit bands prune combinatorially. Recall is gated in
     * DedupSimilaritySpec against [[nearDupPairs]]; `maxBucket > 0` caps
     * degenerate cells (recall trade, logged nowhere better than the
-    * count it changes — keep 0 unless cells skew). */
+    * count it changes — keep 0 unless cells skew).
+    *
+    * The cleaned corpus (read by the codebook, the assignment and both
+    * verify joins) and the cell assignment (read by both self-join
+    * sides) are each materialized once (`localCheckpoint`). */
   def ivfNearDupPairs(corpus: DataFrame, threshold: Double,
                       nCells: Int = 16, nProbe: Int = 4,
                       prefilterMargin: Double = 0.02,
-                      maxBucket: Int = 0): DataFrame =
-    ivfImpl(corpus, threshold, nCells, nProbe,
-      prefilterMargin, maxBucket, cache = false)._1
-
-  /** As [[ivfNearDupPairs]], plus a release handle for the cell-assigned
-    * quantized cache (the materialized IVF index at cluster scale).
-    * The plain form caches NOTHING (each self-join side recomputes the
-    * map-side assign/quantize subtree — safe for callers with no
-    * lifecycle hook, nothing stays pinned after consumption); this form
-    * caches the assignment table and hands the caller its lifecycle. */
-  def ivfNearDupPairsWithRelease(corpus: DataFrame, threshold: Double,
-                                 nCells: Int = 16, nProbe: Int = 4,
-                                 prefilterMargin: Double = 0.02,
-                                 maxBucket: Int = 0): (DataFrame, () => Unit) =
-    ivfImpl(corpus, threshold, nCells, nProbe, prefilterMargin, maxBucket,
-      cache = true)
-
-  private def ivfImpl(corpus: DataFrame, threshold: Double,
-                      nCells: Int, nProbe: Int,
-                      prefilterMargin: Double,
-                      maxBucket: Int, cache: Boolean): (DataFrame, () => Unit) = {
+                      maxBucket: Int = 0): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, s"need 1 <= nProbe ($nProbe) <= nCells ($nCells)")
-    val clean = cleanVectors(corpus)
+    val clean = cleanVectors(corpus).localCheckpoint(eager = false)
     // codebook: deterministic seed centroids, kept as a frame —
     // withProbeCells decides whether to localize it into literals
     // (small nCells) or broadcast-join it (large nCells)
     val cents = centroids(clean, nCells)
-    // one map-side pass: quantize + multi-probe cell assignment (cached
-    // only in the WithRelease form; both self-join sides consume it)
-    val assignedBase = Dedup.capBuckets(
+    // one map-side pass: quantize + multi-probe cell assignment
+    val assigned = Dedup.capBuckets(
       withProbeCells(withQ8(clean)
         .select(col("vec_id"), col("embedding"), col("q_scale"), col("q8")),
         cents, nProbe, nCellsHint = nCells.toLong),
-      Seq("cell_id"), maxBucket)
-    val assigned = if (cache) assignedBase.cache() else assignedBase
+      Seq("cell_id"), maxBucket).localCheckpoint(eager = false)
     val a = assigned.select(col("vec_id").as("id_a"),
       col("embedding").as("emb_a"), col("cell_id"))
     val b = assigned.select(col("vec_id").as("id_b"),
@@ -1353,11 +1335,10 @@ object Similarity {
       .select("id_a", "id_b").distinct()
     val embA = clean.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
     val embB = clean.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    val pairs = cands.join(embA, "id_a").join(embB, "id_b")
+    cands.join(embA, "id_a").join(embB, "id_b")
       .select(col("id_a"), col("id_b"),
         round(cosineSim(col("emb_a"), col("emb_b")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-    (pairs, () => { if (cache) assigned.unpersist(); () })
   }
 
   /** All-pairs cosine ≥ threshold — embedding near-dup detection, brute
@@ -1397,36 +1378,24 @@ object Similarity {
     *
     * Recall is probabilistic (gated in DedupSimilaritySpec against
     * [[nearDupPairs]]); output is deterministic for a fixed corpus and
-    * parameterization. The internal banded cache lives until the session
-    * drops it — use [[srpNearDupPairsWithRelease]] when the caller
-    * controls lifecycle.
+    * parameterization. The input (read by the signatures and both verify
+    * joins) and the capped bands (read by both self-join sides) are each
+    * materialized once (`localCheckpoint`).
     *
     * Defaults (8 words × 4 bands = 32 bands of 16-bit keys) target real
     * near-dup thresholds: recall ≈ 0.999 at cos 0.95, 0.94 at 0.9, and
     * band buckets stay ~n/2^16 — no caller gets a degenerate (sub-2^16)
     * keyspace without asking for it. For thresholds at the similarity
     * noise floor use [[ivfNearDupPairs]] instead. */
-  def srpNearDupPairs(corpus: DataFrame, threshold: Double,
+  def srpNearDupPairs(corpus0: DataFrame, threshold: Double,
                       nWords: Int = 8, bandBits: Int = 16,
-                      maxBucket: Int = 0): DataFrame =
-    srpImpl(corpus, threshold, nWords, bandBits, maxBucket, cache = false)._1
-
-  /** As [[srpNearDupPairs]], plus a release handle that unpersists the
-    * banded-signature cache once the result has been consumed (the
-    * plain form caches nothing — each self-join side recomputes the
-    * signature subtree, so arbitrary callers pin no session state). */
-  def srpNearDupPairsWithRelease(corpus: DataFrame, threshold: Double,
-                                 nWords: Int = 8, bandBits: Int = 16,
-                                 maxBucket: Int = 0): (DataFrame, () => Unit) =
-    srpImpl(corpus, threshold, nWords, bandBits, maxBucket, cache = true)
-
-  private def srpImpl(corpus: DataFrame, threshold: Double,
-                      nWords: Int, bandBits: Int,
-                      maxBucket: Int, cache: Boolean): (DataFrame, () => Unit) = {
+                      maxBucket: Int = 0): DataFrame = {
     require(bandBits >= 1 && bandBits <= 64, s"bandBits $bandBits out of range")
     val bandsPerWord = 64 / bandBits
     val bands = nWords * bandsPerWord
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
+    val corpus = corpus0.select(col("vec_id"), col("embedding"))
+      .localCheckpoint(eager = false)
     // Degenerate-vector guard (the blowup minhashCandidates filters for
     // empty shingle sets): empty or all-zero embeddings share one
     // signature and would collide in EVERY band.
@@ -1442,11 +1411,8 @@ object Similarity {
     }: _*)
     val banded = sig.select(col("vec_id"), explode(bandStructs).as("bk"))
       .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    // WithRelease form: cached so the band self-join evaluates the
-    // SrpSig→explode→cap-window subtree once, not per side (this is the
-    // materialized signature table at scale); plain form recomputes.
-    val cappedBase = Dedup.capBuckets(banded, Seq("band", "key"), maxBucket)
-    val capped = if (cache) cappedBase.cache() else cappedBase
+    val capped = Dedup.capBuckets(banded, Seq("band", "key"), maxBucket)
+      .localCheckpoint(eager = false)
     val a = capped.select(col("vec_id").as("id_a"), col("band"), col("key"))
     val b = capped.select(col("vec_id").as("id_b"), col("band"), col("key"))
     val cands = a.join(b, Seq("band", "key"))
@@ -1455,11 +1421,10 @@ object Similarity {
     // verify joins are linear hash joins on vec_id (shuffle-bounded)
     val embA = corpus.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
     val embB = corpus.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    val pairs = cands.join(embA, "id_a").join(embB, "id_b")
+    cands.join(embA, "id_a").join(embB, "id_b")
       .select(col("id_a"), col("id_b"),
         round(cosineSim(col("emb_a"), col("emb_b")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-    (pairs, () => { if (cache) capped.unpersist(); () })
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1477,27 +1442,17 @@ object Similarity {
     * assignment is one broadcast-argmax map pass; the intra-cluster
     * self-join shuffles on cluster id, so work is Σ|cluster|² — bounded
     * by making nCells track corpus size (SemDeDup uses k ≈ √n·c), with
-    * [[Dedup.capBuckets]] as the degenerate-cluster guard. */
+    * [[Dedup.capBuckets]] as the degenerate-cluster guard.
+    *
+    * The cleaned corpus (read by the centroids and the assignment) and
+    * the assignment (read by both sides of the pair self-join and the
+    * kept anti-join) are each materialized once (`localCheckpoint`). */
   def semanticDedupKept(corpus0: DataFrame, threshold: Double,
-                        nCells: Int): DataFrame =
-    semanticDedupImpl(corpus0, threshold, nCells, cache = false)._1
-
-  /** [[semanticDedupKept]] with the assignment CACHED (it appears three
-    * times in the plan: both sides of the pair self-join and the kept
-    * anti-join) and a release handle. The stateless form recomputes the
-    * linear assignment pass instead — the quadratic intra-cluster work
-    * is never duplicated either way. At real scale the assignment is a
-    * materialized cell-partitioned table, not a session cache. */
-  def semanticDedupKeptWithRelease(corpus0: DataFrame, threshold: Double,
-                                   nCells: Int): (DataFrame, () => Unit) =
-    semanticDedupImpl(corpus0, threshold, nCells, cache = true)
-
-  private def semanticDedupImpl(corpus0: DataFrame, threshold: Double,
-                                nCells: Int, cache: Boolean): (DataFrame, () => Unit) = {
-    val corpus = cleanVectors(corpus0)
-    val assignedBase = ivfAssign(corpus, centroids(corpus, nCells))
+                        nCells: Int): DataFrame = {
+    val corpus = cleanVectors(corpus0).localCheckpoint(eager = false)
+    val assigned = ivfAssign(corpus, centroids(corpus, nCells))
       .select(col("vec_id"), col("embedding"), col("cell_id").as("cluster"))
-    val assigned = if (cache) assignedBase.cache() else assignedBase
+      .localCheckpoint(eager = false)
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"))
     val b = assigned.select(col("cluster"), col("vec_id").as("id_b"),
@@ -1506,8 +1461,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .filter(round(cosineSim(col("emb_a"), col("emb_b")), 6) >= threshold)
       .select(col("id_b").as("vec_id")).distinct()
-    val kept = assigned.join(dropped, Seq("vec_id"), "left_anti")
+    assigned.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cluster"))
-    (kept, () => { if (cache) assigned.unpersist(); () })
   }
 }

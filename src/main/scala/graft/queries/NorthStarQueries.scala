@@ -1917,11 +1917,11 @@ object NorthStarQueries {
           min(col("doc_id")).over(Window.partitionBy(col("text"))))
         val exactKept = ek.filter(col("doc_id") === col("keep_id"))
           .select("doc_id", "text")
-        val (pairsRaw, release) = Dedup.minhashNearDupsWithRelease(
+        val pairs = Dedup.minhashNearDups(
           exactKept, "doc_id", "text", n = 3, threshold = 0.5)
-        val cc = Dedup.connectedComponents(pairsRaw)
+        val cc = Dedup.connectedComponents(pairs)
           .select(col("id"), col("label"))
-        val out = docs.select(col("doc_id"))
+        docs.select(col("doc_id"))
           .join(ek.select(col("doc_id"), col("keep_id")), Seq("doc_id"), "left")
           .join(cc, col("doc_id") === col("id"), "left")
           .select(col("doc_id"),
@@ -1935,9 +1935,6 @@ object NorthStarQueries {
               .when(col("label").isNotNull, col("label"))
               .otherwise(col("doc_id")).as("ref_id"))
           .orderBy(col("doc_id"))
-        val rows = out.localCheckpoint()
-        release()
-        rows
       },
       Some("""WITH q AS (SELECT doc_id, text FROM documents
              |  WHERE round(0.4 * least(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS DOUBLE) / 100.0, 1.0)

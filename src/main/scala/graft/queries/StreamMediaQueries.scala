@@ -3479,7 +3479,7 @@ object StreamMediaQueries {
 
     // ---- initial state: batch backfill hands off to the stream -------------------
     // The MIGRATION face of transformWithState
-    // ([[EventStream.BootstrapSessionProcessor]]): a new stateful
+    // ([[EventStream.bootstrapSessionStream]]): a new stateful
     // streaming job takes over from a batch backfill WITHOUT replaying
     // history — the backfill's open sessions arrive as an
     // initial-state TABLE (handleInitialState seeds the state variable

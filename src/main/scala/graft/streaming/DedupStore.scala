@@ -198,15 +198,8 @@ object DedupStore {
     * written before the version's `_SUCCESS` gates any reader onto it
     * (see the substrate note in the class doc — a direct single-PUT of
     * the target would be the native S3 form of the same guarantee). */
-  private def atomicWrite(fs: FileSystem, target: Path, body: String): Unit = {
-    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(target)) fs.delete(target, false)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-  }
+  private def atomicWrite(fs: FileSystem, target: Path, body: String): Unit =
+    atomicWriteBytes(fs, target, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   // ---- bloom sidecars (tombstone-GC metadata) ------------------------------
 

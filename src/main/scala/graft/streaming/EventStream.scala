@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -943,8 +943,27 @@ object EventStream {
     (st, out.result())
   }
 
+  /** The gap-session processor of [[timerSessionStream]] and
+    * [[bootstrapSessionStream]]. The no-initial-state
+    * `transformWithState` takes it as the `StatefulProcessor` it
+    * extends, and `handleInitialState` never runs.
+    *
+    * With INITIAL STATE it is the batch→stream migration face of
+    * transformWithState: a new streaming job does not start blind, it
+    * BOOTSTRAPS each user's open session from a batch-computed snapshot
+    * (`handleInitialState` seeds the state variable and arms the
+    * session's timer before the first micro-batch). The handoff
+    * invariant that makes this oracle-checkable (st63): cut the feed at
+    * any T, compute sessions batch-side for events ≤ T, seed the LAST
+    * (still-open) session per user as initial state, stream the rest —
+    * batch-closed ∪ drained equals the full-corpus gaps-and-islands
+    * answer exactly. At 100 TB this is how a stateful stream takes over
+    * from a backfill without replaying history through the micro-batch
+    * engine: the state arrives as a table, not as re-ingested events. A
+    * bootstrapped session flushes by the same two paths as a
+    * stream-born one. */
   class TimerSessionProcessor(gapUs: Long)
-      extends StatefulProcessor[Long, Event, GapSession] {
+      extends StatefulProcessorWithInitialState[Long, Event, GapSession, (Long, Long, Long)] {
     import org.apache.spark.sql.Encoders
     // (anchor_ts, n_events, last_ts) of the open session
     @transient private var sess: ValueState[(Long, Long, Long)] = _
@@ -955,6 +974,15 @@ object EventStream {
       sess = getHandle.getValueState[(Long, Long, Long)]("sess",
         Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
           Encoders.scalaLong), TTLConfig.NONE)
+
+    override def handleInitialState(uid: Long, init: (Long, Long, Long),
+                                    timerValues: TimerValues): Unit = {
+      sess.update(init)
+      // the bootstrapped session must be flushable with NO further
+      // events for the user — arm its timer exactly as the event path
+      // would have
+      getHandle.registerTimer(deadlineMs(init._3))
+    }
 
     override def handleInputRows(uid: Long, rows: Iterator[Event],
                                  timerValues: TimerValues): Iterator[GapSession] = {
@@ -988,80 +1016,19 @@ object EventStream {
     }
   }
 
-  /** [[TimerSessionProcessor]] with INITIAL STATE — the batch→stream
-    * migration face of transformWithState
-    * (`StatefulProcessorWithInitialState`): a new streaming job does
-    * not start blind, it BOOTSTRAPS each user's open session from a
-    * batch-computed snapshot (`handleInitialState` seeds the state
-    * variable and arms the session's timer before the first
-    * micro-batch). The handoff invariant that makes this
-    * oracle-checkable (st63): cut the feed at any T, compute sessions
-    * batch-side for events ≤ T, seed the LAST (still-open) session per
-    * user as initial state, stream the rest — batch-closed ∪ drained
-    * equals the full-corpus gaps-and-islands answer exactly. At 100 TB
-    * this is how a stateful stream takes over from a backfill without
-    * replaying history through the micro-batch engine: the state
-    * arrives as a table, not as re-ingested events.
-    *
-    * Input-row and timer handling are [[TimerSessionProcessor]]'s,
-    * bit for bit (same [[gapSessionFold]], same stale-timer guard,
-    * same deadline arithmetic) — a bootstrapped session flushes by the
-    * same two paths as a stream-born one. */
-  class BootstrapSessionProcessor(gapUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, Event, GapSession, (Long, Long, Long)] {
-    import org.apache.spark.sql.Encoders
-    @transient private var sess: ValueState[(Long, Long, Long)] = _
-
-    private def deadlineMs(lastTs: Long): Long = (lastTs + gapUs) / 1000L + 1L
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sess = getHandle.getValueState[(Long, Long, Long)]("sess",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInitialState(uid: Long, init: (Long, Long, Long),
-                                    timerValues: TimerValues): Unit = {
-      sess.update(init)
-      // the bootstrapped session must be flushable with NO further
-      // events for the user — arm its timer exactly as the event path
-      // would have
-      getHandle.registerTimer(deadlineMs(init._3))
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[Event],
-                                 timerValues: TimerValues): Iterator[GapSession] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts, e.event_id))
-      if (sorted.isEmpty) Iterator.empty
-      else {
-        val open = if (sess.exists()) Some(sess.get()) else None
-        val (st, out) = gapSessionFold(uid, open, sorted, gapUs)
-        val (a, n, l) = st.get
-        sess.update((a, n, l))
-        getHandle.listTimers().foreach(t =>
-          getHandle.deleteTimer(t.asInstanceOf[Long]))
-        getHandle.registerTimer(deadlineMs(l))
-        out.iterator
-      }
-    }
-
-    override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[GapSession] = {
-      if (!sess.exists()) Iterator.empty
-      else {
-        val (a, n, l) = sess.get()
-        if (expiredTimerInfo.getExpiryTimeInMs() != deadlineMs(l))
-          Iterator.empty
-        else {
-          sess.clear()
-          Iterator.single(GapSession(uid, a, n, l))
-        }
-      }
-    }
+  /** `events` grouped by user under a 0-delay watermark on `ts`, which
+    * drives the gap-session timers. */
+  private def byUserWatermarked(events: Dataset[Event]): KeyValueGroupedDataset[Long, Event] = {
+    import events.sparkSession.implicits._
+    events.toDF()
+      .withColumn("event_time", Tables.eventTime(col("ts")))
+      .withWatermark("event_time", "0 seconds")
+      .as[Event]
+      .groupByKey(_.user_id)
   }
 
   /** Timer-flushed idle sessions seeded from a batch snapshot via
-    * [[BootstrapSessionProcessor]]. `initial` rows are
+    * [[TimerSessionProcessor]]'s initial state. `initial` rows are
     * (user_id, anchor_ts, n_events, last_ts) — one open session per
     * user, as a batch backfill computed them. */
   def bootstrapSessionStream(events: Dataset[Event], gapUs: Long,
@@ -1069,12 +1036,8 @@ object EventStream {
     import events.sparkSession.implicits._
     val init = initial.groupByKey(_._1)
       .mapValues(t => (t._2, t._3, t._4))
-    events.toDF()
-      .withColumn("event_time", Tables.eventTime(col("ts")))
-      .withWatermark("event_time", "0 seconds")
-      .as[Event]
-      .groupByKey(_.user_id)
-      .transformWithState(new BootstrapSessionProcessor(gapUs),
+    byUserWatermarked(events)
+      .transformWithState(new TimerSessionProcessor(gapUs),
         TimeMode.EventTime(), OutputMode.Append(), init)
   }
 
@@ -1088,11 +1051,7 @@ object EventStream {
   def timerSessionStream(events: Dataset[Event],
                          gapUs: Long): Dataset[GapSession] = {
     import events.sparkSession.implicits._
-    events.toDF()
-      .withColumn("event_time", Tables.eventTime(col("ts")))
-      .withWatermark("event_time", "0 seconds")
-      .as[Event]
-      .groupByKey(_.user_id)
+    byUserWatermarked(events)
       .transformWithState(new TimerSessionProcessor(gapUs),
         TimeMode.EventTime(), OutputMode.Append())
   }

@@ -8,15 +8,17 @@ import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Lower, RegExpE
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.ops.Dedup
+import graft.ops.{Curation, Dedup, Similarity}
 import graft.queries.TrainingPrepQueries
 import graft.streaming.EventStream
 
 /** Each input of a curation face is computed once: a document is
   * tokenized once (no tokenizer inside a higher-order-function lambda,
   * whose body Spark evaluates per element), `connectedComponents` reads
-  * its pair set once in both regimes, and a fixture load runs no Spark
-  * job to learn a schema its file's footer already holds. */
+  * its pair set once in both regimes, the near-dup operators and
+  * `Curation.curate` read each input row once and leave no cache behind,
+  * and a fixture load runs no Spark job to learn a schema its file's
+  * footer already holds. */
 class ComputeOnceSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -88,6 +90,37 @@ class ComputeOnceSpec extends SparkSpec {
       assert(labels == expected, s"driverThreshold $threshold")
       assert(reads.value == pairs.size.toLong,
         s"driverThreshold $threshold: ${reads.value} row reads of ${pairs.size} rows")
+    }
+  }
+
+  test("near-dup operators and curate read each input row once and cache nothing") {
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val emb = Tables.load(spark, sf, "embeddings").select("vec_id", "embedding")
+    val (nDocs, nVecs) = (docs.count(), emb.count())
+    val reads = spark.sparkContext.longAccumulator("input_row_reads")
+    val counted = udf { (_: Long) => reads.add(1L); true }.asNondeterministic()
+    def read(df: DataFrame, c: String): DataFrame = df.filter(counted(xxhash64(col(c))))
+    val (text, vecs) = (read(docs, "text"), read(emb, "embedding"))
+    val ops = Seq[(String, Long, () => DataFrame)](
+      ("minhashNearDups", nDocs,
+        () => Dedup.minhashNearDups(text, "doc_id", "text", threshold = 0.5)),
+      ("simhashNearDups", nDocs,
+        () => Dedup.simhashNearDups(text, "doc_id", "text")),
+      ("ivfNearDupPairs", nVecs,
+        () => Similarity.ivfNearDupPairs(vecs, 0.45, nCells = 16, nProbe = 6)),
+      ("srpNearDupPairs", nVecs,
+        () => Similarity.srpNearDupPairs(vecs, 0.45)),
+      ("semanticDedupKept", nVecs,
+        () => Similarity.semanticDedupKept(vecs, threshold = 0.45, nCells = 8)),
+      ("curate", nDocs, () => Curation.curate(text).frame))
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // whatever an earlier suite left
+    ops.foreach { case (name, n, op) =>
+      assert(cache.isEmpty, s"$name: a cache is registered before the call")
+      reads.reset()
+      op().count()
+      assert(reads.value == n, s"$name: ${reads.value} row reads of $n input rows")
+      assert(cache.isEmpty, s"$name: left a cache registered")
     }
   }
 

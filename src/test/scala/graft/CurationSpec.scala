@@ -32,7 +32,7 @@ class CurationSpec extends SparkSpec {
     val pairs = Dedup.minhashNearDups(out.select("doc_id", "text"),
       "doc_id", "text", n = 3, threshold = 0.5)
     assert(pairs.count() == 0, "near-dup pair survived curation")
-    c.release() // intermediate caches dropped once consumed
+    out.unpersist()
   }
 
   test("curateTo: language-partitioned parquet layout") {

@@ -238,8 +238,7 @@ class DedupSimilaritySpec extends SparkSpec {
         df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val brute = pairSet(Similarity.nearDupPairs(emb, 0.45))
       assert(brute.nonEmpty, s"$sfDir fixture should contain qualifying pairs")
-      val (ivfDf, release) = Similarity.ivfNearDupPairsWithRelease(
-        emb, 0.45, nCells = 16, nProbe = 6)
+      val ivfDf = Similarity.ivfNearDupPairs(emb, 0.45, nCells = 16, nProbe = 6)
       try {
         val ivf = pairSet(ivfDf)
         assert(ivf == brute,
@@ -247,7 +246,7 @@ class DedupSimilaritySpec extends SparkSpec {
         val plan = ivfDf.queryExecution.executedPlan.toString
         assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
           "candidate generation must be cell-blocked, not all-pairs")
-      } finally { release(); emb.unpersist() }
+      } finally { emb.unpersist(); () }
     }
   }
 
@@ -1131,13 +1130,9 @@ class DedupSimilaritySpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
       val clusters = kept.select("cluster").distinct().collect().map(_.getLong(0)).toSet
       assert(clusters.subsetOf(seeds), s"non-seed cluster ids: ${clusters -- seeds}")
-      // the WithRelease (cached-assignment) variant is result-identical
-      // and leaves nothing cached after release
-      val (kept2, release) =
-        Similarity.semanticDedupKeptWithRelease(emb, threshold = tau, nCells = 8)
-      try {
-        assert(kept2.exceptAll(kept).isEmpty && kept.exceptAll(kept2).isEmpty)
-      } finally release()
+      // a second call, evaluated uncached, is result-identical
+      val kept2 = Similarity.semanticDedupKept(emb, threshold = tau, nCells = 8)
+      assert(kept2.exceptAll(kept).isEmpty && kept.exceptAll(kept2).isEmpty)
     } finally { kept.unpersist(); () }
   }
 
